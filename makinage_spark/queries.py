@@ -2629,22 +2629,20 @@ def _fixture_stage(kind: str, tag: str, build) -> str:
 
 
 def _drain(df, mode: str = "append"):
-    """Run a streaming DataFrame to completion (Trigger.AvailableNow) into a
-    memory sink; return the drained result as a batch DataFrame."""
+    """Run a streaming DataFrame to completion into a memory sink; return the
+    drained result as a batch DataFrame. The checkpoint is deleted once the
+    query has stopped — the memory sink does not need it."""
+    import shutil
     import tempfile
     import uuid
 
-    name = "mq_" + uuid.uuid4().hex[:12]
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="mk_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return df.sparkSession.table(name)
+    from makinage_spark.streaming import run_available_now
+
+    ckpt = tempfile.mkdtemp(prefix="mk_ckpt_")
+    try:
+        return run_available_now(df, "mq_" + uuid.uuid4().hex[:12], ckpt, timeout=None, mode=mode)
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 @register(
@@ -4998,20 +4996,11 @@ def q_stream_topk_state(spark, sf_dir):
     """Per-key streaming top-k with BOUNDED state (k pairs per key; SURVEY
     §7.2 'custom state logic'). The last emission per key (max batch-seq)
     equals the batch top-k, which the window oracle checks. Runs on
-    applyInPandasWithState here; the same processor ships as
-    streaming_topk_tws on Spark 4's transformWithStateInPandas, gated on
-    google.protobuf which this container lacks."""
-    from makinage_spark.streaming import (
-        has_transform_with_state,
-        streaming_topk,
-        streaming_topk_tws,
-    )
+    applyInPandasWithState."""
+    from makinage_spark.streaming import streaming_topk
 
     ev = _stream_events(spark, sf_dir).select("user_id", "value", "event_id")
-    if has_transform_with_state():
-        out = _drain(streaming_topk_tws(ev, "user_id", "value", "event_id", k=3), "update")
-    else:
-        out = _drain(streaming_topk(ev, "user_id", "value", "event_id", k=3))
+    out = _drain(streaming_topk(ev, "user_id", "value", "event_id", k=3))
     w = Window.partitionBy("user_id")
     return (
         out.withColumn("mx", F.max("emit_seq").over(w))

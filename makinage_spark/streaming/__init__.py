@@ -22,12 +22,8 @@ from makinage_spark.streaming.stateful import (
     streaming_pack,
     streaming_roll,
     streaming_scan,
-    streaming_zip,
-)
-from makinage_spark.streaming._topk import (
-    has_transform_with_state,
     streaming_topk,
-    streaming_topk_tws,
+    streaming_zip,
 )
 
 __all__ = [
@@ -42,6 +38,4 @@ __all__ = [
     "streaming_scan",
     "streaming_zip",
     "streaming_topk",
-    "streaming_topk_tws",
-    "has_transform_with_state",
 ]

@@ -58,19 +58,24 @@ def for_each_batch_with_latest(
 
 
 def run_available_now(
-    df: DataFrame, name: str, checkpoint: str, timeout: int = 120
+    df: DataFrame, name: str, checkpoint: str, timeout: float | None = 120, mode: str = "append"
 ) -> DataFrame:
     """Deterministic test execution: drain all available input
     (``Trigger.AvailableNow``) into a memory sink and return the result as a
     batch DataFrame. This is the test harness the reference cannot have —
-    replayable streaming semantics (SURVEY §5)."""
+    replayable streaming semantics (SURVEY §5). ``timeout=None`` waits for
+    the drain however long it takes; a query still running after ``timeout``
+    seconds is stopped and raises ``TimeoutError``, never a partial result."""
     q = (
         df.writeStream.format("memory")
         .queryName(name)
-        .outputMode("append" if df.isStreaming else "append")
+        .outputMode(mode)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination(timeout)
-    return df.sparkSession.sql(f"SELECT * FROM {name}")
+    if q.isActive:
+        q.stop()
+        raise TimeoutError(f"streaming query {name} still running after {timeout} s")
+    return df.sparkSession.table(name)

@@ -6,16 +6,21 @@ from makinage_spark import get_spark
 
 
 @contextlib.contextmanager
-def broadcast_disabled(spark):
-    """Disable auto-broadcast for a block, restoring whatever threshold the
-    session actually had (ADVICE r10: hard-coded 10 MiB restores silently
-    re-configure the shared session fixture if its default ever changes)."""
-    saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+def conf_override(spark, key, value):
+    """Set a session conf for a block, restoring whatever value the session
+    actually had (ADVICE r10: hard-coded restores silently re-configure the
+    shared session fixture if its default ever changes)."""
+    saved = spark.conf.get(key)
+    spark.conf.set(key, value)
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+        spark.conf.set(key, saved)
+
+
+def broadcast_disabled(spark):
+    """Disable auto-broadcast for a block."""
+    return conf_override(spark, "spark.sql.autoBroadcastJoinThreshold", "-1")
 
 
 @pytest.fixture(scope="session")

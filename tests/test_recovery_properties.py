@@ -11,16 +11,30 @@ Two things the reference cannot test (SURVEY §5 'adopted test strategy'):
   against pandas ``merge_asof``.
 """
 
+import random
 import shutil
 import uuid
+from datetime import datetime
 
 import pandas as pd
 import pytest
-from hypothesis import given, settings
+from conftest import conf_override
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from makinage_spark import joins
-from makinage_spark.streaming import streaming_roll, streaming_scan
+from makinage_spark.streaming import (
+    run_available_now,
+    streaming_ewma,
+    streaming_funnel,
+    streaming_pack,
+    streaming_roll,
+    streaming_scan,
+    streaming_zip,
+)
+
+#: rows per Arrow chunk; set to 2 so that a key's micro-batch spans chunks
+ARROW_ROWS = "spark.sql.execution.arrow.maxRecordsPerBatch"
 
 
 def tmpdir():
@@ -92,15 +106,22 @@ def _ref_roll(values, window, stride, agg):
     window=st.integers(min_value=1, max_value=5),
     stride=st.integers(min_value=1, max_value=5),
     split=st.integers(min_value=1, max_value=24),
+    shuffle_seed=st.integers(min_value=0, max_value=2**16),
 )
+@example(values=[float(v) for v in range(7)], window=2, stride=2, split=7, shuffle_seed=0)
 @settings(max_examples=6, deadline=None)
-def test_streaming_roll_matches_reference(spark, agg, values, window, stride, split):
-    """streaming_roll over arbitrary micro-batch splits equals the sequential
-    reference fold (integral floats → exact arithmetic)."""
+def test_streaming_roll_matches_reference(
+    spark, agg, values, window, stride, split, shuffle_seed
+):
+    """streaming_roll over arbitrary micro-batch splits, with the rows of each
+    micro-batch shuffled and cut into 2-row Arrow chunks, equals the
+    sequential reference fold (integral floats → exact arithmetic)."""
     d = tmpdir()
     schema = "user long, seq long, value double"
     rows = [(1, i, v) for i, v in enumerate(values)]
     batches = [rows[:split], rows[split:]]
+    for b in batches:
+        random.Random(shuffle_seed).shuffle(b)
     for i, b in enumerate(batches):
         if b:
             spark.createDataFrame(b, schema).coalesce(1).write.parquet(f"{d}/b{i}")
@@ -111,20 +132,58 @@ def test_streaming_roll_matches_reference(spark, agg, values, window, stride, sp
         spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(f"{d}/b*")
     )
     out = streaming_roll(stream, "user", "value", "seq", window=window, stride=stride, agg=agg)
-    name = f"prop_{uuid.uuid4().hex[:6]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", d + "_ck")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = [
-        r.agg_value
-        for r in spark.sql(f"SELECT * FROM {name} ORDER BY window_id").collect()
-    ]
+    with conf_override(spark, ARROW_ROWS, "2"):
+        res = run_available_now(out, f"prop_{uuid.uuid4().hex[:6]}", d + "_ck")
+    got = [r.agg_value for r in res.orderBy("window_id").collect()]
     assert got == _ref_roll(values, window, stride, agg)
+    shutil.rmtree(d), shutil.rmtree(d + "_ck", ignore_errors=True)
+
+
+#: per order-sensitive operator: input schema, row ``i`` of key ``k``, the call
+_REVERSE_CASES = {
+    "scan": (
+        "k long, o long, v double",
+        lambda k, i: (k, i, float(i * i % 11)),
+        lambda s: streaming_scan(s, "k", "v", "o"),
+    ),
+    "ewma": (
+        "k long, o long, v double",
+        lambda k, i: (k, i, float(i * i % 11)),
+        lambda s: streaming_ewma(s, "k", "v", "o", alpha=0.3),
+    ),
+    "pack": (
+        "k string, o long, n long",
+        lambda k, i: (k, i, i * 17),
+        lambda s: streaming_pack(s, "k", "n", "o", budget=50),
+    ),
+    "zip": (
+        "k long, side int, o long, v double",
+        lambda k, i: (k, i % 2, i, float(i)),
+        lambda s: streaming_zip(s, "k", "side", "o", "v"),
+    ),
+    "funnel": (
+        "k long, ts timestamp, t string, o long",
+        lambda k, i: (k, datetime(2024, 1, 1, 0, 0, i), ("view", "click", "purchase")[i % 3], i),
+        lambda s: streaming_funnel(s, "k", "ts", "t", "o"),
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_REVERSE_CASES))
+def test_order_sensitive_ops_sort_whole_micro_batch(spark, op):
+    """A key whose micro-batch spans several Arrow chunks is folded in
+    order-column order: in one micro-batch cut into 2-row chunks, the second
+    key gets the first key's rows in reverse order, and both emit the same."""
+    schema, row, call = _REVERSE_CASES[op]
+    keys = ("a", "b") if op == "pack" else (1, 2)
+    rows = [row(keys[0], i) for i in range(7)] + [row(keys[1], i) for i in reversed(range(7))]
+    d = tmpdir()
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(f"{d}/b0")
+    stream = spark.readStream.schema(schema).parquet(f"{d}/b*")
+    with conf_override(spark, ARROW_ROWS, "2"):
+        out = run_available_now(call(stream), f"rev_{uuid.uuid4().hex[:6]}", d + "_ck").collect()
+    got = {k: sorted(tuple(r)[1:] for r in out if r[0] == k) for k in keys}
+    assert got[keys[0]] and got[keys[1]] == got[keys[0]]
     shutil.rmtree(d), shutil.rmtree(d + "_ck", ignore_errors=True)
 
 
@@ -167,6 +226,19 @@ def test_asof_join_matches_pandas_merge_asof(spark, left_ts, right_ts, tol, dire
         for _, row in expected.iterrows()
     }
     assert got == want
+
+
+def test_run_available_now_raises_on_timeout(spark):
+    """A drain still running at its timeout is stopped and raises, instead of
+    handing back the memory sink's partial contents."""
+    d, schema = tmpdir(), "user long, seq long, value double"
+    spark.createDataFrame([(1, 1, 1.0)], schema).write.parquet(f"{d}/b0")
+    out = streaming_scan(spark.readStream.schema(schema).parquet(f"{d}/b*"), "user", "value", "seq")
+    name = f"slow_{uuid.uuid4().hex[:6]}"
+    with pytest.raises(TimeoutError):
+        run_available_now(out, name, d + "_ck", timeout=0.001)
+    assert not any(q.name == name for q in spark.streams.active)
+    shutil.rmtree(d), shutil.rmtree(d + "_ck", ignore_errors=True)
 
 
 def test_watermark_drops_late_data(spark):

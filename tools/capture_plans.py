@@ -1,9 +1,10 @@
 #!/usr/bin/env python
-"""Capture `.explain("formatted")` for headline queries into plans/r13/.
+"""Capture `.explain("formatted")` for headline queries into plans/<ROUND>/.
 
-Usage: PYTHONPATH=/root/repo python tools/capture_plans_r13.py SUFFIX [query ...]
-  SUFFIX is `before` or `after`; with no query names, captures the whole
-  bench HEADLINE set. Files land at plans/r13/<query>_<SUFFIX>.txt.
+Usage: PYTHONPATH=. python tools/capture_plans.py ROUND SUFFIX [query ...]
+  ROUND names the output directory (e.g. `r13`); SUFFIX is `before` or
+  `after`; with no query names, captures the whole bench HEADLINE set. Files
+  land at plans/<ROUND>/<query>_<SUFFIX>.txt.
 
 Same session shape as bench.py (local[$SPARK_GRAFT_CPUS], shuffle=cpus) so
 the static plans match what the bench executes. These are the pre-execution
@@ -25,8 +26,8 @@ from makinage_spark.queries import QUERIES  # noqa: E402
 
 
 def main():
-    suffix = sys.argv[1]
-    names = sys.argv[2:]
+    rnd, suffix = sys.argv[1:3]
+    names = sys.argv[3:]
     if not names:
         from bench import HEADLINE
 
@@ -34,11 +35,11 @@ def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r13"
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", rnd
     )
     os.makedirs(out_dir, exist_ok=True)
     spark = mk.get_spark(
-        app_name="capture_plans_r13",
+        app_name="capture_plans",
         master=f"local[{cpus}]",
         shuffle_partitions=int(cpus),
         extra_confs={
