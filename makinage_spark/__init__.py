@@ -26,6 +26,8 @@ This package re-expresses that capability Spark-first:
 - ``streaming``  — Structured Streaming runtime: watermarks, start_from mapping,
                    stateful count windows, control-stream refresh.
 - ``serve``      — streaming ML inference (reference: makinage/serve/serve.py).
+- ``materialize`` — the one persist/checkpoint mechanism: ``materialize``,
+                   ``release`` and the ``scope()`` that frees held frames.
 - ``text`` / ``dedup`` / ``vectors`` / ``multimodal`` — large-scale training-data
   pipeline operators (language ID, quality scoring, exact/MinHash/SimHash dedup,
   ANN similarity search, opaque-binary multimodal columns).
@@ -36,7 +38,7 @@ only where Spark's built-in operators cannot express the semantics, and then
 always as Arrow-batched pandas UDFs.
 """
 
-from makinage_spark import data, dedup, encodings, joins, multimodal, plans, serve, smath, sources, streaming, text, vectors
+from makinage_spark import data, dedup, encodings, joins, materialize, multimodal, plans, serve, smath, sources, streaming, text, vectors
 from makinage_spark import ops
 from makinage_spark.pipe import pipe
 from makinage_spark.session import get_spark
@@ -53,6 +55,7 @@ __all__ = [
     "dedup",
     "vectors",
     "multimodal",
+    "materialize",
     "sources",
     "plans",
     "streaming",

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
+from makinage_spark.materialize import materialize, release
 from makinage_spark.text import char_ngrams, fingerprint, word_shingles
 
 
@@ -333,15 +334,12 @@ def minhash_lsh_pairs(
     With the pair-stream ``distinct()`` gone (emit-once, below), output
     uniqueness is BY CONSTRUCTION from unique ids — duplicate-id rows would
     emit one ``(a, b)`` row per colliding row combination where the old
-    distinct silently collapsed them. CACHE LIFETIME: this builder persists
-    the band table (two tables when ``bucket_cap`` is on) and never
-    unpersists — the result is lazy, so unpersisting here would drop the
-    cache before consumption; callers invoking it repeatedly in one session
-    must ``spark.catalog.clearCache()`` between evaluations (bench.py
-    does). EAGERNESS: ``salt > 1`` materializes the band table at
-    DataFrame-construction time (one small cached-side count job) so the
-    four salted-path consumers don't race the persist fill — the returned
-    DataFrame is otherwise lazy as usual.
+    distinct silently collapsed them. The band table (two tables when
+    ``bucket_cap`` is on) stays held for the lazy result: run repeated
+    calls inside ``materialize.scope()``. EAGERNESS: ``salt > 1``
+    materializes the band table at DataFrame-construction time (one small
+    cached-side count job) so the four salted-path consumers don't race the
+    persist fill — the returned DataFrame is otherwise lazy as usual.
 
     **Emit-once instead of distinct (r11).** A pair that collides in m
     bands used to be emitted m times and collapsed by a global
@@ -404,7 +402,7 @@ def minhash_lsh_pairs(
         # persist the raw band table: three consumers derive from it below
         # (size scan, kept-flag build, the anti-join) and none should
         # recompute the shingle→minhash pipeline
-        stacked = stacked.persist()
+        stacked = materialize(stacked)
         big_caps = (
             stacked.groupBy("band", "bucket")
             .agg(F.count(F.lit(1)).alias("__bs"))
@@ -451,7 +449,7 @@ def minhash_lsh_pairs(
     # shuffle exchange for Catalyst to reuse). Same move as materializing the
     # signature table to storage before bucket-joining in a lake pipeline —
     # the band table is tiny (id, band, 32-char bucket) relative to the text.
-    # NOT _sized_persist, and specifically never repartitioned by "bucket"
+    # NOT size_by, and specifically never repartitioned by "bucket"
     # (r8 review): HashPartitioning(bucket) satisfies the self-join's
     # (band, bucket) clustering on BOTH co-partitioned sides, so
     # EnsureRequirements would drop the join exchange. Keeping the exchange
@@ -460,7 +458,7 @@ def minhash_lsh_pairs(
     # OUTPUT amplification — skew detection is input-bytes-based (r10
     # correction, measured by tools/skewed_band_probe.py) — that case needs
     # ``bucket_cap`` (drop + lsh_mega_buckets labels) or ``salt``.
-    stacked = stacked.persist()
+    stacked = materialize(stacked)
 
     def first_hit() -> Column:
         # emit-once: no EARLIER band already surfaced this pair — for every
@@ -661,15 +659,11 @@ def prefix_filter_pairs(
     # which picks a broadcast at runtime exactly when the table fits;
     # pass True only for corpora with known-small item universes.
     # ordered feeds three branches (prefix explode + both sides of the array
-    # attach) — persist so the sort-by-rarity aggregation runs once.
-    # CLEANUP CONTRACT: plan builders in this module persist loop invariants
-    # and never unpersist (the returned DataFrame is lazy — unpersisting
-    # here would drop the cache before consumption). Callers that invoke
-    # these builders repeatedly in one session (bench warm-up + timed
-    # passes) must call spark.catalog.clearCache() between invocations,
-    # as bench.py does, or storage accumulates until LRU eviction.
+    # attach) — persist so the sort-by-rarity aggregation runs once; it
+    # stays held for the lazy result: run repeated calls inside
+    # materialize.scope().
     maybe_bc = F.broadcast if broadcast_freq else (lambda d: d)
-    ordered = (
+    ordered = materialize(
         sets.select("doc_id", F.explode("items").alias("it"))
         .join(maybe_bc(dfreq), "it")
         .groupBy("doc_id")
@@ -686,14 +680,13 @@ def prefix_filter_pairs(
                 f"slice(oit, 1, size(oit) - CAST(ceil({threshold} * size(oit)) AS INT) + 1)"
             ).alias("prefix"),
         )
-        # NOT _sized_persist (r8 A/B): this |docs|-row relation EXPLODES into
+        # NOT size_by (r8 A/B): this |docs|-row relation EXPLODES into
         # prefix-token rows downstream, so its partition count sets the map
         # parallelism of the expanded join build — sizing it to ~250k input
         # rows (4 partitions at sf0.1) throttled the prefix join 4.5x
         # (dedup_jaccard_pairs 5.1 -> 22.7 s). The sizing rule applies to
         # relations consumed at their own row count (graph edges, band
         # tables), never to pre-explosion inputs.
-        .persist()
     )
     # Emit-once instead of distinct (r12, carrying the r11 minhash result
     # over): a pair sharing m prefix tokens used to be emitted m times and
@@ -849,12 +842,9 @@ def containment_pairs(
     DISTINCT item — corpus-token scale for word-n-gram items, so the
     default ``broadcast_freq=False`` leaves the join strategy to AQE
     (broadcast happens at runtime iff the table fits); force ``True`` only
-    for known-small item universes. CLEANUP CONTRACT (as
-    :func:`prefix_filter_pairs` / ``graphs.pagerank``): the ``ordered``
-    relation is persisted because it feeds three plan branches and cannot
-    be unpersisted here without defeating the cache (the result is lazy);
-    callers invoking this repeatedly in one session must
-    ``spark.catalog.clearCache()`` between evaluations (bench.py does).
+    for known-small item universes. The ``ordered`` relation feeds three
+    plan branches and stays held for the lazy result: run repeated calls
+    inside ``materialize.scope()``.
     """
     sets = df.select(
         F.col(id_col).alias("doc_id"),
@@ -866,7 +856,7 @@ def containment_pairs(
         .agg(F.count(F.lit(1)).alias("dfr"))
     )
     maybe_bc = F.broadcast if broadcast_freq else (lambda d: d)
-    ordered = (
+    ordered = materialize(
         sets.select("doc_id", F.explode("items").alias("it"))
         .join(maybe_bc(dfreq), "it")
         .groupBy("doc_id")
@@ -883,14 +873,13 @@ def containment_pairs(
                 f"slice(oit, 1, size(oit) - CAST(ceil({threshold} * size(oit)) AS INT) + 1)"
             ).alias("prefix"),
         )
-        # NOT _sized_persist (r8 A/B): this |docs|-row relation EXPLODES into
+        # NOT size_by (r8 A/B): this |docs|-row relation EXPLODES into
         # prefix-token rows downstream, so its partition count sets the map
         # parallelism of the expanded join build — sizing it to ~250k input
         # rows (4 partitions at sf0.1) throttled the prefix join 4.5x
         # (dedup_jaccard_pairs 5.1 -> 22.7 s). The sizing rule applies to
         # relations consumed at their own row count (graph edges, band
         # tables), never to pre-explosion inputs.
-        .persist()
     )
     # Emit-once instead of distinct (r12): same construction as
     # prefix_filter_pairs — each exploded row carries __pre, the tokens
@@ -1156,10 +1145,9 @@ def simhash_pairs(
     if capped:
         # persist the raw block table: three consumers derive from it below
         # (size scan, kept-flag build, the anti-join) and none should
-        # recompute the token→simhash pipeline. Cache lifetime: see the
-        # CLEANUP CONTRACT note in prefix_filter_pairs — plan builders
-        # persist and never unpersist; repeated callers clearCache().
-        stacked = stacked.persist()
+        # recompute the token→simhash pipeline; run repeated calls inside
+        # materialize.scope().
+        stacked = materialize(stacked)
         big = (
             stacked.groupBy("blk", "val")
             .agg(F.count(F.lit(1)).alias("__bs"))
@@ -1203,7 +1191,7 @@ def simhash_pairs(
     # persist before the self-join — same rationale as minhash_lsh_pairs: a
     # broadcast join would otherwise recompute the token→simhash pipeline on
     # both branches; the (id, sh, blk, val) table is tiny relative to the text
-    stacked = stacked.persist()
+    stacked = materialize(stacked)
 
     def first_hit() -> Column:
         # emit-once: no EARLIER block already surfaced this pair — for every
@@ -1326,7 +1314,7 @@ def connected_components(
     Both steps preserve connectivity; the fixpoint is a star forest
     centered at the component minima, so labels read directly off the final
     edges. This replaced the r7–r12 hash-to-min pointer-jumping loop after
-    the VERDICT r12 task-2 A/B (tools/cc_twophase_r13.py, interleaved
+    the VERDICT r12 task-2 A/B (OPTIMIZATION_r13.md, interleaved
     min-of-3, bit-identical clusters asserted first): the real dup-pair
     graphs converge in HALF the rounds — the sf0.1 minhash e2e graph takes
     10 hash-to-min rounds but 5 alternations, dedup_pipeline_e2e
@@ -1355,29 +1343,21 @@ def connected_components(
     lineage; on a real cluster pass ``checkpoint="reliable"`` after
     ``spark.sparkContext.setCheckpointDir(hdfs_path)`` so each round's
     edges land on fault-tolerant storage and a mid-job loss resumes from
-    the last round instead of hour-one. Reliable mode writes one snapshot
-    for the init plus one per alternation and Spark only deletes
-    superseded ones when
-    ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` (default
-    false) — set it, or a long run accumulates O(rounds·|E|) edge
-    snapshots on the checkpoint store.
+    the last round instead of hour-one. Each superseded round is released
+    as soon as the next one is materialized (its blocks, or its snapshot
+    files in reliable mode), so a run holds the init checkpoint plus the
+    last round whatever the round count.
 
     ``stats`` (optional out-param) receives ``{"rounds": r, "converged":
     bool}`` — the number of executed alternations including the
     fixpoint-confirming one, and whether the star-forest fixpoint was
     actually reached (``converged=False`` ⇒ the loop hit ``max_iter`` and
     a warning was emitted; ``rounds == max_iter`` alone is ambiguous
-    between the two).
+    between the two). Unconverged labels are collapsed to one row per id
+    (the smallest label seen), so the output contract holds either way.
     """
     if checkpoint not in ("local", "reliable"):
         raise ValueError(f"checkpoint must be local|reliable, got {checkpoint!r}")
-
-    def _ckpt(df: DataFrame) -> DataFrame:
-        if checkpoint == "reliable":
-            # requires spark.sparkContext.setCheckpointDir(...); eager like
-            # the local path so the round's one-job structure is unchanged
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
 
     # ONE materialization of the (possibly expensive) pair mine: canonical
     # big>small edges — NO distinct, so the checkpoint is a narrow map
@@ -1394,15 +1374,17 @@ def connected_components(
     # pre-filter and the singleton branch entirely and the output plan
     # stays the bare star-forest read (the unconditional branch measured
     # ~0.5 s of plan overhead per evaluation on the sf0.1 e2e graph).
+    # Reliable mode needs spark.sparkContext.setCheckpointDir(...).
     obs0 = Observation()
-    e0 = _ckpt(
+    e0 = materialize(
         pairs.select(
             F.greatest(F.col(src), F.col(dst)).alias("big"),
             F.least(F.col(src), F.col(dst)).alias("small"),
         ).observe(
             obs0,
             F.sum((F.col("big") == F.col("small")).cast("long")).alias("nself"),
-        )
+        ),
+        mode=checkpoint,
     )
     n_self = obs0.get["nself"] or 0
     e = e0.filter(F.col("big") != F.col("small")) if n_self else e0
@@ -1446,8 +1428,10 @@ def connected_components(
             F.sum(F.col("big").cast("decimal(38,0)")).alias("sb"),
             F.sum(F.col("small").cast("decimal(38,0)")).alias("ss"),
         )
-        nxt = _ckpt(nxt)
+        nxt = materialize(nxt, mode=checkpoint)
         sig = (obs.get["n"], obs.get["sb"], obs.get["ss"])
+        if rounds > 1:
+            release(e)  # the superseded round; e0 stays for the self-pairs
         e = nxt
         if sig == prev:
             # candidate fixpoint — PROVE it before exiting: a star forest
@@ -1474,8 +1458,8 @@ def connected_components(
         warnings.warn(
             f"connected_components hit max_iter={max_iter} without the "
             "star-forest fixpoint being reached — clusters may be "
-            "under-merged; raise max_iter (alternations track "
-            "~log2(component diameter))",
+            "under-merged, and each id keeps the smallest label seen; raise "
+            "max_iter (alternations track ~log2(component diameter))",
             stacklevel=2,
         )
     if stats is not None:
@@ -1500,6 +1484,10 @@ def connected_components(
             "id", F.col("id").alias("label")
         )
         labels = labels.union(only_self)
+    if not converged:
+        # off the star-forest fixpoint a node can still be a big endpoint
+        # of several edges (and a root too): one row per id, smallest label
+        labels = labels.groupBy("id").agg(F.min("label").alias("label"))
     return labels.select(F.col("id"), F.col("label").alias("cluster_id"))
 
 

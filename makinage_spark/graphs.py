@@ -12,43 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-#: Target rows per partition for persisted loop-invariant graph relations.
-_EDGES_PER_PARTITION = 250_000
-
-
-def _graph_parts(n_rows: int) -> int:
-    """Partition count for a persisted loop-invariant graph relation:
-    ~250k rows/partition with a floor of 4. Deliberately UNCAPPED by the
-    session's ``spark.sql.shuffle.partitions`` (r8): a 10B-edge graph on an
-    untuned session (shuffle.partitions=200, or 8 on a notebook) must land
-    at ~40k partitions, not be squeezed to the session config — the whole
-    point of sizing to the data is that the data, not the session default,
-    picks the width."""
-    return max(4, n_rows // _EDGES_PER_PARTITION + 1)
-
-
-def _sized_persist(df: DataFrame, key: str = "src") -> DataFrame:
-    """Persist a derived graph relation SIZED TO ITS OWN ROW COUNT
-    (~250k rows/partition, floor 4) — the shared policy of every iterative
-    loop here and of dedup.connected_components. A graph derived from a
-    corpus inherits the corpus's partition count, so each iteration's map
-    stages schedule a corpus-width task wave over near-empty cached blocks
-    (cached plans do not get AQE re-coalescing by default); conversely a
-    huge graph built under a small session config inherits TOO FEW
-    partitions, so the rule resizes in BOTH directions (r8 — previously
-    the count was capped at the session's shuffle partitions, which would
-    squeeze a 10B-edge graph onto an 8-partition notebook session). The
-    count doubles as the materialization barrier the self-joining
-    iteration bodies need anyway."""
-    df = df.persist()
-    n = df.count()
-    parts = _graph_parts(n)
-    if parts != df.rdd.getNumPartitions():
-        sized = df.repartition(parts, key).persist()
-        sized.count()
-        df.unpersist()
-        return sized
-    return df
+from makinage_spark.materialize import materialize
 
 
 def pagerank(
@@ -95,11 +59,8 @@ def pagerank(
     checkpoint the rank vector every few rounds to truncate lineage (same
     pattern as dedup.connected_components' pointer jumping).
 
-    Caching contract: the loop-invariant relations (``e``, ``ew``, ``base``)
-    are persisted lazily and materialize when the caller first evaluates the
-    returned plan — they CANNOT be unpersisted here without defeating the
-    cache. Callers running many pagerank calls in one session should
-    ``spark.catalog.clearCache()`` between evaluations (bench.py does).
+    The loop invariants (``e``, ``ew``, ``base``) stay held for the lazy
+    result: run repeated calls inside ``materialize.scope()``.
 
     Personalized PageRank: pass ``personalize`` — a DataFrame whose first
     column is the restart node-id set S — and all teleport mass (both the
@@ -137,21 +98,18 @@ def pagerank(
         # duplicate edges would double-count contributions; callers that
         # guarantee uniqueness (assume_distinct=True) skip this E-sized shuffle
         e = e.distinct()
-    e = _sized_persist(e, key="src")
+    e = materialize(e, size_by="src")
     # persisted (r13): nodes is referenced TWICE — the n_df 1-row count that
     # broadcasts into base, and base itself — and without the persist the
     # |V| union-distinct over the edge cache computed twice per evaluation
     # (two back-to-back full-width jobs in the sf1 event-log breakdown).
-    # |V| rows is tiny next to the edge cache this function already holds;
-    # same clearCache-between-evaluations contract as e/ew/base. Measured
-    # interleaved min-of-3, ranks asserted bit-identical
-    # (tools/pagerank_nodes_ab_r13.py): sf0.1 3.635 → 3.513 s, sf1 (10×
-    # fixture) 8.251 → 7.729 s.
-    nodes = (
+    # |V| rows is tiny next to the edge cache this function already holds.
+    # Measured A/B in OPTIMIZATION_r13.md: sf0.1 3.635 → 3.513 s, sf1 (10×
+    # fixture) 8.251 → 7.729 s, ranks bit-identical.
+    nodes = materialize(
         e.select(F.col("src").alias("id"))
         .union(e.select(F.col("dst").alias("id")))
         .distinct()
-        .persist()
     )
     # outdeg is consumed once to build ew; only the redistribute path re-reads
     # it (per-iteration dangling anti-join), so only that path caches it —
@@ -159,7 +117,7 @@ def pagerank(
     # session with zero reuse
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     if dangling == "redistribute":
-        outdeg = outdeg.persist()
+        outdeg = materialize(outdeg)
     # loop invariant: edges annotated with their source's out-degree, so the
     # iteration body is a single join (rank vector → weighted edges) instead
     # of rank⋈outdeg followed by edges⋈emitting.
@@ -170,12 +128,12 @@ def pagerank(
     # (cached plans don't get AQE re-coalescing by default). Measured at
     # sf0.1 (1.17M sym edges, 3 iters, broadcast ranks): 7.97 → 3.63 s.
     # At 100 TB the same rule yields thousands of partitions — it is a
-    # sizing rule, not a small-data shortcut. Routed through _sized_persist
-    # (r8) so the guard compares against the relation's ACTUAL partition
-    # count, not the session shuffle-partitions config, and upsizes huge
-    # graphs on untuned sessions; its count doubles as the materialization
-    # barrier for the persisted edge list.
-    ew = _sized_persist(e.join(outdeg, "src"), key="src")
+    # sizing rule, not a small-data shortcut. Sized by ``size_by`` (r8) so
+    # the guard compares against the relation's ACTUAL partition count, not
+    # the session shuffle-partitions config, and upsizes huge graphs on
+    # untuned sessions; its count doubles as the materialization barrier
+    # for the persisted edge list.
+    ew = materialize(e.join(outdeg, "src"), size_by="src")
     n_df = nodes.agg(F.count(F.lit(1)).cast("double").alias("n"))
     if personalize is not None:
         if dangling != "drop":
@@ -184,7 +142,7 @@ def pagerank(
             F.col(personalize.columns[0]).alias("id")
         ).distinct()
         s_df = seeds.agg(F.count(F.lit(1)).cast("double").alias("s"))
-        base = (
+        base = materialize(
             nodes.join(
                 F.broadcast(seeds.select("id", F.lit(1).alias("is_seed"))),
                 "id",
@@ -193,7 +151,6 @@ def pagerank(
             .select("id", F.coalesce("is_seed", F.lit(0)).alias("is_seed"))
             .crossJoin(F.broadcast(n_df))
             .crossJoin(F.broadcast(s_df))
-            .persist()
         )
         carry = ["id", "n", "s", "is_seed"]
         ranks = base.select(
@@ -209,7 +166,7 @@ def pagerank(
             F.col("is_seed") == 1, (1.0 - damping) * 1.0e9 / F.col("s")
         ).otherwise(F.lit(0.0))
     else:
-        base = nodes.crossJoin(F.broadcast(n_df)).persist()
+        base = materialize(nodes.crossJoin(F.broadcast(n_df)))
         carry = ["id", "n"]
         ranks = base.select(
             *carry, half_up(F.lit(1.0e9) / F.col("n")).alias("rank_nanos")
@@ -294,10 +251,8 @@ def label_propagation(
     3.5× total work at 3 iterations (the CC ``stepped`` defect class,
     VERDICT r5 #4).
 
-    Caching contract: the persisted edge list materializes when the caller
-    evaluates the returned plan and is not unpersisted here; call
-    ``spark.catalog.clearCache()`` between repeated invocations (the same
-    contract as pagerank/hits).
+    The persisted edge list stays held for the lazy result: run repeated
+    calls inside ``materialize.scope()``.
 
     Returns ``(id, community)`` — community = the node's label after
     ``iterations`` rounds. Isolated endpoints cannot occur (every node in an
@@ -310,7 +265,7 @@ def label_propagation(
         # duplicate edges would double-weight a neighbor's vote
         e = e.distinct()
     # sized on "dst": the per-round votes join probes e on dst
-    e = _sized_persist(e, key="dst")
+    e = materialize(e, size_by="dst")
     all_nodes = (
         e.select(F.col("src").alias("id"))
         .union(e.select(F.col("dst").alias("id")))
@@ -321,9 +276,11 @@ def label_propagation(
     # removes the per-round carry-forward left join (and with it the double
     # reference to the previous iterate). On symmetric graphs this set is
     # empty and the union is a no-op.
-    sinks = all_nodes.join(
-        e.select(F.col("src").alias("id")).distinct(), "id", "left_anti"
-    ).withColumn("label", F.col("id").cast("bigint")).persist()
+    sinks = materialize(
+        all_nodes.join(
+            e.select(F.col("src").alias("id")).distinct(), "id", "left_anti"
+        ).withColumn("label", F.col("id").cast("bigint"))
+    )
     voters = (
         e.select(F.col("src").alias("id"))
         .distinct()
@@ -381,16 +338,13 @@ def hits(
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     if not assume_distinct:
         e = e.distinct()
-    # loop invariants persist for the unrolled iterations and are NOT
-    # unpersisted here (the result is lazy); repeated invocations in one
-    # session require spark.catalog.clearCache() between rounds — see the
-    # cleanup contract note in dedup.py:prefix_filter_pairs
-    e = _sized_persist(e)
-    nodes = (
+    # loop invariants stay held for the lazy result: run repeated calls
+    # inside materialize.scope()
+    e = materialize(e, size_by="src")
+    nodes = materialize(
         e.select(F.col("src").alias("id"))
         .union(e.select(F.col("dst").alias("id")))
         .distinct()
-        .persist()
     )
     hub = nodes.select("id", F.lit(1).cast("bigint").alias("h"))
     auth = None

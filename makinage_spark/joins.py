@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from makinage_spark.materialize import materialize
 from makinage_spark.ops.core import ColumnLike, _col
 
 
@@ -248,16 +249,14 @@ def sorted_merge(
     At 100 TB this is the same exchange Spark's own ORDER BY plans, plus
     one metadata-sized aggregation; nothing funnels through one task.
 
-    CLEANUP CONTRACT: the range-shuffled relation is persisted (it feeds
-    both the count pass and the output); callers running this repeatedly in
-    one session should ``spark.catalog.clearCache()`` between evaluations.
+    The range-shuffled relation is persisted (it feeds both the count pass
+    and the output): run repeated calls inside ``materialize.scope()``.
     """
-    arranged = (
+    arranged = materialize(
         merge(*dfs)
         .repartitionByRange(*order)
         .sortWithinPartitions(*order)
         .withColumn("__pid", F.spark_partition_id())
-        .persist()
     )
     offsets = (
         arranged.groupBy("__pid")

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
 from makinage_spark import data, dedup, graphs, joins, ops, pipe, smath, text, vectors
+from makinage_spark.materialize import materialize, release
 from makinage_spark.sources import load_table
 
 # ---------------------------------------------------------------------------
@@ -1558,11 +1559,8 @@ def q_stream_decontaminate_screen(spark, sf_dir):
             ).alias("g"),
         )
 
-    ev = (
-        grams_of(docs.filter(F.col("doc_id") % 10 == 0))
-        .select("g")
-        .distinct()
-        .persist()
+    ev = materialize(
+        grams_of(docs.filter(F.col("doc_id") % 10 == 0)).select("g").distinct()
     )
     tag = _fixture_tag(sf_dir, "documents")
 
@@ -1589,7 +1587,7 @@ def q_stream_decontaminate_screen(spark, sf_dir):
         .dropDuplicates(["doc_id"])
     )
     out = _drain(flagged).select("doc_id")
-    ev.unpersist()
+    release(ev)
     return out
 
 
@@ -1617,11 +1615,11 @@ def q_stream_neardup_screen(spark, sf_dir):
     import tempfile
 
     docs = load_table(spark, sf_dir, "documents")
-    hist_bands = dedup.minhash_band_table(
-        docs.filter(F.col("doc_id") < 250)
-    ).select(
-        F.col("doc_id").alias("a"), "band", "bucket"
-    ).persist()
+    hist_bands = materialize(
+        dedup.minhash_band_table(docs.filter(F.col("doc_id") < 250)).select(
+            F.col("doc_id").alias("a"), "band", "bucket"
+        )
+    )
     # new docs stream in two micro-batches (split on id parity); fixture dir
     # is keyed by sf_dir + source-table fingerprint so each scale factor gets
     # its own cached copy and a regenerated fixture tree invalidates it
@@ -1656,7 +1654,7 @@ def q_stream_neardup_screen(spark, sf_dir):
         .dropDuplicates(["a", "b"])
     )
     out = _drain(pairs).select("a", "b")
-    hist_bands.unpersist()
+    release(hist_bands)
     return out
 
 
@@ -8679,16 +8677,15 @@ def q_quality_ensemble(spark, sf_dir):
     docs = load_wide(
         spark, sf_dir, "documents", repartition=False  # A/B 6.3->4.4 s: single-tokenize then agg shuffles
     )
-    tok_arr = docs.select(
-        "doc_id", text.tokens(F.lower(F.col("text"))).alias("ta")
-    ).persist()
+    tok_arr = materialize(
+        docs.select("doc_id", text.tokens(F.lower(F.col("text"))).alias("ta"))
+    )
 
     # shared (doc, token) counts → length/ttr stats AND the unigram LM
-    dt = (
+    dt = materialize(
         tok_arr.select("doc_id", F.explode("ta").alias("tok"))
         .groupBy("doc_id", "tok")
         .agg(F.count(F.lit(1)).alias("c"))
-        .persist()
     )
     t = (
         dt.groupBy("doc_id")
@@ -10062,9 +10059,9 @@ def q_kmeans_twolevel_agreement(spark, sf_dir):
     coarse pruning — real clustered corpora agree higher): 0.96 @ sf0.01,
     0.82 @ sf0.1 at p=3; exhaustive = 1.0 at both."""
     emb = load_wide(spark, sf_dir, "embeddings")
-    cents = vectors.kmeans_centroid_table(
-        emb, k=64, iters=2, exact=False
-    ).persist()
+    cents = materialize(
+        vectors.kmeans_centroid_table(emb, k=64, iters=2, exact=False)
+    )
     base = vectors.kmeans_assign_two_level(emb, cents, probe_cells=10**6)
     two = vectors.kmeans_assign_two_level(emb, cents, probe_cells=3)
     j = base.select("vec_id", F.col("cluster").alias("c1")).join(
@@ -10184,7 +10181,7 @@ def q_semantic_dedup_pipeline(spark, sf_dir):
     # re-evaluates per consumer (measured 18 s/pass at sf0.1 — the
     # DECIMAL(38,12) distance folds that buy oracle replayability are the
     # dominant cost; a production run would flip them to plain doubles)
-    assigns = vectors.kmeans_lloyd(base, k=k, iters=2).persist()
+    assigns = materialize(vectors.kmeans_lloyd(base, k=k, iters=2))
     bc = base.join(assigns, "vec_id")
     pairs = dedup.embedding_neardup_pairs(
         bc, threshold=0.999, block_on="cluster"
@@ -10807,9 +10804,11 @@ def q_bloom_prune_audit(spark, sf_dir):
     # persist the narrow (doc_id, fp) projection, not just the history slice:
     # it feeds the bitmap build, the probe, AND the truth join — unpersisted,
     # the md5 pass over documents would run three times
-    fp = docs.filter(F.col("text").isNotNull()).select(
-        "doc_id", text.fingerprint("text").alias("fp")
-    ).persist()
+    fp = materialize(
+        docs.filter(F.col("text").isNotNull()).select(
+            "doc_id", text.fingerprint("text").alias("fp")
+        )
+    )
     hist = fp.filter(F.col("doc_id") % 3 == 0)
     bitmap = dedup.bloom_build(hist, "fp", m=1 << 16, k=4)
     probed = dedup.bloom_probe(fp, bitmap, "fp", "doc_id", m=1 << 16, k=4)
@@ -11225,7 +11224,7 @@ def q_dedup_rate_by_source(spark, sf_dir):
             F.array_join(F.slice(text.tokens(F.lower(F.col("text"))), 1, 8), " ")
         ).alias("fp"),
     )
-    per = fp.groupBy("fp", "source").agg(F.count(F.lit(1)).alias("c")).persist()
+    per = materialize(fp.groupBy("fp", "source").agg(F.count(F.lit(1)).alias("c")))
     a, b = per.alias("a"), per.alias("b")
     cross = a.join(
         b,
@@ -11394,11 +11393,10 @@ def q_incremental_ingest_pipeline(spark, sf_dir):
     hist = docs.filter(F.col("doc_id") % 3 == 0)
     batch = docs.filter(F.col("doc_id") % 3 != 0)
     m, k = 1 << 16, 4
-    hist_fp = (
+    hist_fp = materialize(
         hist.filter(F.col("text").isNotNull())
         .select(text.fingerprint("text").alias("fp"))
         .distinct()
-        .persist()
     )
     batch_fp = batch.select("doc_id", text.fingerprint("text").alias("fp"))
     bitmap = dedup.bloom_build(hist_fp, "fp", m=m, k=k)
@@ -11598,10 +11596,9 @@ def q_graph_triangle_count(spark, sf_dir):
     the same triangles by id order (orientation changes the generation
     order, never the set). Edge build reuses the cooccurrence wedge guard;
     the top-2000 cut keeps the graph size scale-invariant (it's a kNN-style
-    sparsifier, not a sample: heaviest edges first). Caching contract: the
-    2000-row edge list is persisted (it feeds the degree, wedge, and
-    closure subtrees); like pagerank, a long-lived session should
-    clearCache() between unrelated corpora."""
+    sparsifier, not a sample: heaviest edges first). The 2000-row edge list
+    is persisted (it feeds the degree, wedge, and closure subtrees): run
+    repeated calls inside ``materialize.scope()``."""
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     e0 = (
@@ -11610,14 +11607,13 @@ def q_graph_triangle_count(spark, sf_dir):
         .distinct()
     )
     a, b = e0.alias("a"), e0.alias("b")
-    tope = (
+    tope = materialize(
         a.join(b, on=[F.col("a.c") == F.col("b.c"), F.col("a.s") < F.col("b.s")])
         .groupBy(F.col("a.s").alias("x"), F.col("b.s").alias("y"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
         .orderBy(F.desc("cnt"), "x", "y")
         .limit(2000)
         .select("x", "y")
-        .persist()
     )
     deg = (
         tope.select(F.col("x").alias("s"))
@@ -12841,7 +12837,7 @@ def q_markov_stationary_profile(spark, sf_dir):
         F.col("event_type").alias("i"), F.col("nxt").alias("j")
     ).agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     rowtot = cnt.groupBy("i").agg(F.sum("c").cast("bigint").alias("r"))
-    trans = cnt.join(rowtot, "i").persist()
+    trans = materialize(cnt.join(rowtot, "i"))
     states = trans.select(F.col("i").alias("state")).distinct()
     ns = states.agg(F.count(F.lit(1)).cast("bigint").alias("k"))
     v = states.crossJoin(F.broadcast(ns)).select(
@@ -13202,7 +13198,7 @@ def q_classifier_eval_metrics(spark, sf_dir):
     the eval itself adds three class-keyed counts over the prediction
     table and one 1-row total — all map-side combined, output bounded by
     the class domain."""
-    preds = q_naive_bayes_language(spark, sf_dir).persist()
+    preds = materialize(q_naive_bayes_language(spark, sf_dir))
     cls = preds.select(F.col("actual").alias("lang")).distinct()
     tp = (
         preds.filter(F.col("actual") == F.col("predicted"))
@@ -15276,11 +15272,10 @@ def q_ipf_raking_weights(spark, sf_dir):
     # domain-sized relation (~100 cells): collapse to ONE partition after the
     # corpus-scale count so the six rescale passes are single-task stages
     # instead of 32-task shuffles over a hundred rows
-    cells = (
+    cells = materialize(
         docs.groupBy("source", "lang")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
         .coalesce(1)
-        .persist()
     )
     tot = cells.agg(
         (F.sum("n") * 1000000).cast("bigint").alias("tot"),
@@ -15368,7 +15363,7 @@ def q_submodular_greedy_coverage(spark, sf_dir):
     toks = docs.select(
         "doc_id", text.tokens(F.lower(F.col("text"))).alias("t")
     )
-    dt = (
+    dt = materialize(
         toks.filter(F.size("t") >= 2)
         .select(
             "doc_id",
@@ -15380,7 +15375,6 @@ def q_submodular_greedy_coverage(spark, sf_dir):
             ).alias("bg"),
         )
         .distinct()
-        .persist()
     )
     covered = None
     rows = []
@@ -15397,20 +15391,19 @@ def q_submodular_greedy_coverage(spark, sf_dir):
         n_cov += win.gain
         rows.append((r, win.doc_id, int(win.gain), n_cov))
         wtypes = dt.filter(F.col("doc_id") == win.doc_id).select("bg")
-        prev = covered
-        covered = (
-            wtypes if covered is None
-            else covered.union(wtypes).distinct()
-        ).persist()
-        # materialize the new covered set (types-of-<=k-docs sized — a tiny
-        # job) BEFORE dropping the superseded cache, so the next round's
+        nxt = materialize(
+            wtypes if covered is None else covered.union(wtypes).distinct()
+        )
+        # fill the new covered set (types-of-<=k-docs sized — a tiny job)
+        # BEFORE releasing the superseded one, so the next round's
         # anti-join never recomputes the union chain
-        covered.count()
-        if prev is not None:
-            prev.unpersist()
+        nxt.count()
+        if covered is not None:
+            release(covered)
+        covered = nxt
     if covered is not None:  # robust to the loop bound going to zero rounds
-        covered.unpersist()
-    dt.unpersist()
+        release(covered)
+    release(dt)
     return spark.createDataFrame(
         rows, "round long, doc_id long, gain long, covered long"
     )
@@ -15747,20 +15740,21 @@ def q_winnow_overlap_pairs(spark, sf_dir):
     gram-hash transform inside every ``element_at`` of the winnow loop
     (O(L²·w²) md5s per document — measured as a >100× blow-up). The cache
     is also correct reuse: three plan branches (frequency, both join
-    sides) read it. Callers should ``spark.catalog.clearCache()`` between
-    repeated evaluations (bench.py does)."""
+    sides) read it: run repeated calls inside ``materialize.scope()``."""
     docs = load_wide(spark, sf_dir, "documents")
     d = docs.select("doc_id", text.normalize("text").alias("__norm"))
     d = d.select("doc_id", text.gram_hashes_of(F.col("__norm"), 24).alias("__hs"))
     hs = F.col("__hs")
-    vals = d.select(
-        "doc_id",
-        F.array_distinct(
-            F.transform(
-                text.winnow_positions_of(hs, 8), lambda p: F.element_at(hs, p)
-            )
-        ).alias("vals"),
-    ).persist()
+    vals = materialize(
+        d.select(
+            "doc_id",
+            F.array_distinct(
+                F.transform(
+                    text.winnow_positions_of(hs, 8), lambda p: F.element_at(hs, p)
+                )
+            ).alias("vals"),
+        )
+    )
     fp = vals.select("doc_id", F.explode("vals").alias("v"))
     freq = fp.groupBy("v").agg(F.count(F.lit(1)).alias("df"))
     fp2 = fp.join(freq.filter(F.col("df") <= 20), "v").select("doc_id", "v")
@@ -16251,10 +16245,8 @@ def q_kmv_overlap_estimate(spark, sf_dir):
     the same row, so the sketch's error is itself hash-pinned (~6% at
     k=256).
 
-    Caching contract: the hashed cell relation is persisted (it feeds five
-    plan branches) and not unpersisted here — the result is lazy; callers
-    running repeatedly in one session should ``spark.catalog.clearCache()``
-    between evaluations (bench.py does; same contract as pagerank).
+    The hashed cell relation is persisted (it feeds five plan branches):
+    run repeated calls inside ``materialize.scope()``.
 
     Scale shape: each bottom-k is a TakeOrderedAndProject (per-partition
     partial top-k, no global sort — 256 rows cross the exchange); sketch
@@ -16273,17 +16265,19 @@ def q_kmv_overlap_estimate(spark, sf_dir):
         )
         .distinct()
     )
-    h = cells.select(
-        "event_type",
-        "x",
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("kmv:"), F.col("x").cast("string"))), 1, 12),
-            16,
-            10,
+    h = materialize(
+        cells.select(
+            "event_type",
+            "x",
+            F.conv(
+                F.substring(F.md5(F.concat(F.lit("kmv:"), F.col("x").cast("string"))), 1, 12),
+                16,
+                10,
+            )
+            .cast("bigint")
+            .alias("h"),
         )
-        .cast("bigint")
-        .alias("h"),
-    ).persist()
+    )
     M = 281474976710656  # 16^12
     ska = h.filter(F.col("event_type") == "click").select("h").orderBy("h").limit(256)
     skb = (
@@ -16443,12 +16437,13 @@ def q_kcore_decomposition_profile(spark, sf_dir):
         .limit(2000)
         .select("x", "y")
     )
-    und = (
-        tope.select(F.col("x").alias("s"), F.col("y").alias("t"))
-        .unionAll(tope.select(F.col("y").alias("s"), F.col("x").alias("t")))
-        .localCheckpoint()
+    und = materialize(
+        tope.select(F.col("x").alias("s"), F.col("y").alias("t")).unionAll(
+            tope.select(F.col("y").alias("s"), F.col("x").alias("t"))
+        ),
+        mode="local",
     )
-    a0 = und.select("s").distinct().localCheckpoint()
+    a0 = materialize(und.select("s").distinct(), mode="local")
     n_nodes = a0.count()
     rounds = 12
     profile = None
@@ -16457,7 +16452,7 @@ def q_kcore_decomposition_profile(spark, sf_dir):
         prev_cnt = None
         for _ in range(rounds):
             prev_cnt = alive.count()
-            alive = (
+            nxt = materialize(
                 und.join(alive.select(F.col("s")), "s")
                 .join(
                     alive.select(F.col("s").alias("t")),
@@ -16466,10 +16461,14 @@ def q_kcore_decomposition_profile(spark, sf_dir):
                 .groupBy("s")
                 .agg(F.count(F.lit(1)).alias("d"))
                 .filter(F.col("d") >= k)
-                .select("s")
-                .localCheckpoint()
+                .select("s"),
+                mode="local",
             )
+            if alive is not a0:
+                release(alive)  # superseded round; a0 seeds every k
+            alive = nxt
         core_size = alive.count()
+        release(alive)
         row = spark.range(1).select(
             F.lit(k).cast("bigint").alias("k"),
             F.lit(core_size).cast("bigint").alias("core_size"),
@@ -16986,7 +16985,7 @@ def q_conformal_accept_audit(spark, sf_dir):
     running count over calibration scores (no single-reducer sort); q̂ is
     a 1-row broadcast; the acceptance audit is one map-side-combined
     count over the test split."""
-    preds = q_naive_bayes_language(spark, sf_dir).persist()
+    preds = materialize(q_naive_bayes_language(spark, sf_dir))
     cal = preds.filter(F.col("doc_id") % 4 == 1).select("score")
     tst = preds.filter(F.col("doc_id") % 4 == 3).select("doc_id", "score")
     nc = cal.agg(F.count(F.lit(1)).cast("bigint").alias("n_cal"))

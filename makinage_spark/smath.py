@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from makinage_spark.materialize import materialize
 from makinage_spark.ops.core import ColumnLike, _col, _window
 
 #: name → aggregate builder; the rs.math surface (README.rst:66 evidences
@@ -218,18 +219,15 @@ def global_running_sum(
     partitioning. For doubles, cast to decimal first (float addition is not
     associative across a repartition).
 
-    CLEANUP CONTRACT: the range-shuffled relation is persisted (it feeds both
-    the offset pass and the output); callers running this repeatedly in one
-    session should ``spark.catalog.clearCache()`` between evaluations (same
-    contract as ``joins.sorted_merge``).
+    The range-shuffled relation is persisted (it feeds both the offset pass
+    and the output): run repeated calls inside ``materialize.scope()``.
     """
     val = _col(value)
-    arranged = (
+    arranged = materialize(
         df.repartitionByRange(*order)
         .sortWithinPartitions(*order)
         .withColumn("__pid", F.spark_partition_id())
         .withColumn("__v", val)
-        .persist()
     )
     offsets = (
         arranged.groupBy("__pid")

@@ -23,6 +23,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from makinage_spark.materialize import materialize, release
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -384,14 +386,15 @@ def _kmeans_lloyd_table(
     v = F.col(vec_col).cast("array<double>")
     vecs = df.select(F.col(id_col).alias("__vid"), v.alias("__v"))
     w = Window.orderBy("__sid")
-    cents = (
+    cents = materialize(
         vecs.orderBy("__vid")
         .limit(k)
         .select(F.col("__vid").alias("__sid"), F.col("__v").alias("cvec"))
         .select(
             (F.row_number().over(w) - 1).cast("bigint").alias("cluster"), "cvec"
-        )
-    ).localCheckpoint(eager=True)
+        ),
+        mode="local",
+    )
 
     def assign(cents_df: DataFrame) -> DataFrame:
         # IN-ROW argmin over a single broadcast centroid-pack row (r12,
@@ -437,15 +440,17 @@ def _kmeans_lloyd_table(
         cells = cell.groupBy("cluster", "pos").agg(
             (ssum.cast("double") / F.count(F.lit(1)).cast("double")).alias("c")
         )
-        cents = (
-            cells.groupBy("cluster")
-            .agg(
+        nxt = materialize(
+            cells.groupBy("cluster").agg(
                 F.transform(
                     F.sort_array(F.collect_list(F.struct("pos", "c"))),
                     lambda s: s["c"],
                 ).alias("cvec")
-            )
-        ).localCheckpoint(eager=True)
+            ),
+            mode="local",
+        )
+        release(cents)  # superseded round
+        cents = nxt
     if return_centroids:
         # the centroid set the FINAL assignment is computed against (after
         # iters-1 updates) — NOT one more update past it; two-level
@@ -485,9 +490,8 @@ def kmeans_assign_two_level(
     training at feasible k (sampled or table-path Lloyd), as with
     :func:`ivf_centroids` → assignment.
 
-    CLEANUP CONTRACT: the supercell-tagged centroid table is persisted (it
-    feeds the candidate join); callers invoking this repeatedly in one
-    session should ``spark.catalog.clearCache()`` between evaluations."""
+    The supercell-tagged centroid table is persisted (it feeds the
+    candidate join): run repeated calls inside ``materialize.scope()``."""
     v = F.col(vec_col).cast("array<double>")
     vecs = df.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("__vid"), v.alias("__v")
@@ -504,8 +508,8 @@ def kmeans_assign_two_level(
         cents.select(F.col("__cid"), F.col("__cvec")),
         k=kc, iters=2, vec_col="__cvec", id_col="__cid", exact=False,
     ).select(F.col("__cid"), F.col("cluster").alias("__sup"))
-    cents_sup = cents.join(sup_of_cent, "__cid").persist()
-    sup_cents = (
+    cents_sup = materialize(cents.join(sup_of_cent, "__cid"))
+    sup_cents = materialize(
         cents_sup.select("__sup", F.posexplode("__cvec").alias("pos", "x"))
         .groupBy("__sup", "pos")
         .agg((F.sum("x") / F.count(F.lit(1))).alias("c"))
@@ -515,8 +519,9 @@ def kmeans_assign_two_level(
                 F.sort_array(F.collect_list(F.struct("pos", "c"))),
                 lambda s: s["c"],
             ).alias("__scvec")
-        )
-    ).localCheckpoint(eager=True)
+        ),
+        mode="local",
+    )
     # level 2a: each vector's probe_cells nearest supercells — IN-ROW, no
     # shuffle: the kc supercell centroids travel as ONE broadcast row (an
     # array of (sup, cvec) structs — data, not plan literals, so neither

@@ -12,6 +12,7 @@ import re
 
 import pytest
 
+from makinage_spark.materialize import scope
 from makinage_spark.queries import ORACLES, QUERIES
 
 SF_DIR = os.environ.get("SMOKE_SF_DIR", "/root/testdata/sf0.001")
@@ -25,14 +26,19 @@ SLOW_STREAMING = SLOW_STREAMING | {"stream_stream_join", "stream_sliding_window"
 
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - SKIP_IN_SMOKE))
 def test_query_runs_at_smoke_scale(spark, name):
-    df = QUERIES[name](spark, SF_DIR)
-    assert df.schema.fields, f"{name}: empty schema"
-    n = df.count()
+    # each evaluation runs inside its own scope: every frame a query holds
+    # goes through release(), and a query that reads a checkpoint after
+    # releasing it fails (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)
+    with scope():
+        df = QUERIES[name](spark, SF_DIR)
+        assert df.schema.fields, f"{name}: empty schema"
+        n = df.count()
     assert n >= 0
     # deterministic: same count on re-execution (fresh plan)
     if name not in SLOW_STREAMING:
-        df2 = QUERIES[name](spark, SF_DIR)
-        assert df2.count() == n, f"{name}: nondeterministic row count"
+        with scope():
+            n2 = QUERIES[name](spark, SF_DIR).count()
+        assert n2 == n, f"{name}: nondeterministic row count"
 
 
 def test_recall_audits_hold_at_smoke_scale(spark):

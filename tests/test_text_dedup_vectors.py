@@ -1305,32 +1305,33 @@ def test_connected_components_self_pairs_are_singletons(spark):
 
 
 def test_sized_persist_policy(spark):
-    """The graph-sizing rule (r8, un-clamped per VERDICT r7 task 2): small
-    derived relations land at the floor of 4 partitions; the partition
-    count grows with the row count at ~250k rows/partition REGARDLESS of
-    the session's shuffle-partitions config (the data, not the session
-    default, picks the width); sizing works in BOTH directions (downsizes
-    corpus-width relations, upsizes huge graphs built under a small
-    session config); and sizing never changes the rows."""
+    """The graph-sizing rule of ``materialize(size_by=...)`` (r8, un-clamped
+    per VERDICT r7 task 2): small derived relations land at the floor of 4
+    partitions; the partition count grows with the row count at ~250k
+    rows/partition REGARDLESS of the session's shuffle-partitions config
+    (the data, not the session default, picks the width); sizing works in
+    BOTH directions (downsizes corpus-width relations, upsizes huge graphs
+    built under a small session config); and sizing never changes the
+    rows."""
     from pyspark.sql import functions as F
 
-    from makinage_spark.graphs import _graph_parts, _sized_persist
+    from makinage_spark.materialize import _partitions_for, materialize, release
 
     small = spark.range(1000).select(
         F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
     ).repartition(32)
-    sized = _sized_persist(small)
+    sized = materialize(small, size_by="src")
     assert sized.rdd.getNumPartitions() == 4
     assert sized.count() == 1000
-    sized.unpersist()
+    release(sized)
 
     # 600k rows -> 600_000 // 250_000 + 1 = 3 -> floor 4 still wins
     mid = spark.range(600_000).select(
         F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
     ).repartition(32)
-    sized_mid = _sized_persist(mid)
+    sized_mid = materialize(mid, size_by="src")
     assert sized_mid.rdd.getNumPartitions() == 4
-    sized_mid.unpersist()
+    release(sized_mid)
 
     # 1.3M rows -> 1_300_000 // 250_000 + 1 = 6 — NOT clamped to the
     # session's shuffle partitions (the test session pins 4): the r7 cap
@@ -1340,15 +1341,44 @@ def test_sized_persist_policy(spark):
     big = spark.range(1_300_000).select(
         F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
     ).repartition(2)
-    sized_big = _sized_persist(big)
+    sized_big = materialize(big, size_by="src")
     assert sized_big.rdd.getNumPartitions() == 6
     assert sized_big.count() == 1_300_000
-    sized_big.unpersist()
+    release(sized_big)
 
     # pure-function contract of the width rule, including the 10B-edge
     # shape a local test can't materialize
-    assert _graph_parts(0) == 4
-    assert _graph_parts(250_000 * 40_000) == 40_001
+    assert _partitions_for(0) == 4
+    assert _partitions_for(250_000 * 40_000) == 40_001
+
+
+def test_connected_components_unconverged_one_row_per_id(spark):
+    """Stopped at max_iter before the star-forest fixpoint, CC still returns
+    ONE row per id (ADVICE r13 #2): a mid-alternation edge list can list a
+    node as the big endpoint of several edges, and as a root too. The
+    collapse keeps the smallest label seen, which is always a node of the
+    same component."""
+    import random
+
+    from makinage_spark.dedup import connected_components
+
+    path = spark.range(64).select(
+        F.col("id").alias("a"), (F.col("id") + 1).alias("b")
+    )
+    perm = list(range(256))
+    random.Random(7).shuffle(perm)
+    shuffled = spark.createDataFrame(
+        [(perm[i], perm[i + 1]) for i in range(255)], "a long, b long"
+    )
+    for pairs, n, max_iter in ((path, 65, 1), (shuffled, 256, 2)):
+        stats: dict = {}
+        with pytest.warns(UserWarning, match="smallest label"):
+            out = connected_components(pairs, max_iter=max_iter, stats=stats)
+        assert stats["converged"] is False
+        rows = out.collect()
+        assert len(rows) == n
+        assert len({r["id"] for r in rows}) == n
+        assert all(0 <= r["cluster_id"] <= r["id"] for r in rows)
 
 
 def test_connected_components_deep_chain_logarithmic_rounds(spark):
