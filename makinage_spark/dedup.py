@@ -601,7 +601,7 @@ def lsh_mega_buckets(
 #: emit-once __pre arrays of the PPJoin mines to a constant so the carry is
 #: LINEAR in set size (uncapped it is triangular — ~|s|²/2 per doc on the
 #: containment index side, measured 12× slower than the old pair-stream
-#: distinct at |s|=1024; tools/carry_probe_r13.py). Also the SHORT/LONG
+#: distinct at |s|=1024; OPTIMIZATION_r13.md task 3). Also the SHORT/LONG
 #: doc split point: docs whose exploded side fits the cap keep the exact
 #: r12 emit-once plan (no dedup anywhere); candidates touching a longer
 #: doc — where the capped suppression can miss a deep first match and
@@ -707,7 +707,7 @@ def prefix_filter_pairs(
     # CARRY CAP + SHORT/LONG ARMS (r13; VERDICT r12 "What's wrong" #3): the
     # triangular carry is quadratic in prefix length — measured 12× slower
     # than the old distinct on the containment mine's few-dup |s|=1024
-    # fixture (tools/carry_probe_r13.py; the exchange payload became the
+    # fixture (OPTIMIZATION_r13.md task 3; the exchange payload became the
     # cost, not the pair stream). Fix, two parts:
     #   1. Each exploded row carries only the first _PRE_CARRY_CAP earlier
     #      tokens (slice capped via least) — the carry is LINEAR in set
@@ -904,7 +904,7 @@ def containment_pairs(
     # index side explodes the FULL item set, so the uncapped triangular
     # carry was ~|s|²/2 tokens/doc (measured 12× slower than the old
     # distinct at |s|=1024 on the few-dup fixture,
-    # tools/carry_probe_r13.py); capped, it is ≤ _PRE_CARRY_CAP·|s| —
+    # OPTIMIZATION_r13.md task 3); capped, it is ≤ _PRE_CARRY_CAP·|s| —
     # linear. Index-side docs are LONG when |oit| exceeds the cap (the
     # probe side when its prefix does); only candidates touching a long
     # doc pay the id-level dedup.

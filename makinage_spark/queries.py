@@ -6910,6 +6910,27 @@ def q_dsir_importance_weights(spark, sf_dir):
     )
 
 
+def _cust_supp_edges(spark, sf_dir):
+    """Distinct directed customer→supplier fulfillment edges, one per
+    (o_custkey, l_suppkey) pair in an order; nodes dictionary-encoded to
+    bigint — 2k for customers, 2k+1 for suppliers — so no string keys ever
+    shuffle."""
+    # parallelize=False: the round-robin exchange is pure overhead (measured
+    # 6.3s → 4.9s). orders broadcasts (|orders| ≪ |lineitem|), so lineitem
+    # reaches the distinct without a join shuffle — its only exchange is the
+    # (src, dst) dedup the semantics require.
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    return (
+        li.join(F.broadcast(o), o.o_orderkey == li.l_orderkey)
+        .select(
+            (2 * F.col("o_custkey")).cast("bigint").alias("src"),
+            (2 * F.col("l_suppkey") + 1).cast("bigint").alias("dst"),
+        )
+        .distinct()
+    )
+
+
 @register(
     "graph_pagerank",
     """
@@ -6966,32 +6987,17 @@ def q_dsir_importance_weights(spark, sf_dir):
 )
 def q_graph_pagerank(spark, sf_dir):
     """PageRank (damping 0.85, 3 power iterations) over the symmetric
-    customer↔supplier fulfillment graph (an edge per distinct
-    (o_custkey, l_suppkey) pair in an order; nodes dictionary-encoded to
-    bigint — 2k for customers, 2k+1 for suppliers — so no string keys ever
-    shuffle) — graph centrality as a
-    corpus-analysis primitive, the second iterative-algorithm family after
-    connected components. graphs.pagerank keeps ALL mass accounting in
+    customer↔supplier fulfillment graph (:func:`_cust_supp_edges` and its
+    reverse) — graph centrality as a corpus-analysis primitive, the second
+    iterative-algorithm family after connected components.
+    graphs.pagerank keeps ALL mass accounting in
     fixed-point nano-units (bigint; floor(x+0.5) half-up pinned), so the
     distributed sums are integer-exact, bitwise independent of partitioning,
     and match the oracle's unrolled 3-round CTE exactly. Per iteration: one
     hash join of the |V|-row rank vector to the edge list + one shuffle-agg
     on dst; on a long-running cluster job, checkpoint every few rounds to
     truncate the unrolled lineage."""
-    # parallelize=False: the round-robin exchange is pure overhead (measured
-    # 6.3s → 4.9s). orders broadcasts (|orders| ≪ |lineitem|), so lineitem
-    # reaches the distinct without a join shuffle — its only exchange is the
-    # (src, dst) dedup the semantics require.
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    e0 = (
-        li.join(F.broadcast(o), o.o_orderkey == li.l_orderkey)
-        .select(
-            (2 * F.col("o_custkey")).cast("bigint").alias("src"),
-            (2 * F.col("l_suppkey") + 1).cast("bigint").alias("dst"),
-        )
-        .distinct()
-    )
+    e0 = _cust_supp_edges(spark, sf_dir)
     sym = e0.union(e0.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     return graphs.pagerank(
         sym, damping=0.85, iterations=3, broadcast_ranks=True, assume_distinct=True
@@ -7050,16 +7056,7 @@ def q_graph_label_propagation(spark, sf_dir):
     join. Per iteration: one hash join of the |V|-row label vector to the
     edge list + one map-side-combined (id, label) count + a single-struct
     argmax groupBy — no row_number window anywhere in the engine plan."""
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    e0 = (
-        li.join(F.broadcast(o), o.o_orderkey == li.l_orderkey)
-        .select(
-            (2 * F.col("o_custkey")).cast("bigint").alias("src"),
-            (2 * F.col("l_suppkey") + 1).cast("bigint").alias("dst"),
-        )
-        .distinct()
-    )
+    e0 = _cust_supp_edges(spark, sf_dir)
     sym = e0.union(e0.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     comm = graphs.label_propagation(sym, iterations=3, assume_distinct=True)
     sizes = comm.groupBy("community").agg(
@@ -7119,18 +7116,8 @@ def q_graph_pagerank_dangling(spark, sf_dir):
     uniformly (one anti-join + broadcast 1-row aggregate per iteration;
     graphs.pagerank(dangling='redistribute')). Verified against the
     unrolled 3-round CTE oracle, bit-for-bit like graph_pagerank."""
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    e = (
-        li.join(F.broadcast(o), o.o_orderkey == li.l_orderkey)
-        .select(
-            (2 * F.col("o_custkey")).cast("bigint").alias("src"),
-            (2 * F.col("l_suppkey") + 1).cast("bigint").alias("dst"),
-        )
-        .distinct()
-    )
     return graphs.pagerank(
-        e,
+        _cust_supp_edges(spark, sf_dir),
         damping=0.85,
         iterations=3,
         broadcast_ranks=True,
@@ -7177,17 +7164,7 @@ def q_graph_hits(spark, sf_dir):
     mutual recursion on exact BIGINT mass (partitioning-invariant, matching
     the unrolled-CTE oracle bit-for-bit); the only float ops are the two
     final max-normalizations on identical IEEE inputs."""
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    e = (
-        li.join(F.broadcast(o), o.o_orderkey == li.l_orderkey)
-        .select(
-            (2 * F.col("o_custkey")).cast("bigint").alias("src"),
-            (2 * F.col("l_suppkey") + 1).cast("bigint").alias("dst"),
-        )
-        .distinct()
-    )
-    return graphs.hits(e, iterations=3, assume_distinct=True)
+    return graphs.hits(_cust_supp_edges(spark, sf_dir), iterations=3, assume_distinct=True)
 
 
 @register(
@@ -18423,16 +18400,7 @@ def q_graph_personalized_pagerank(spark, sf_dir):
 
     Scale shape: identical to pagerank — the seed set is broadcast once; no
     extra shuffle vs the uniform variant."""
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    e0 = (
-        li.join(F.broadcast(o), o.o_orderkey == li.l_orderkey)
-        .select(
-            (2 * F.col("o_custkey")).cast("bigint").alias("src"),
-            (2 * F.col("l_suppkey") + 1).cast("bigint").alias("dst"),
-        )
-        .distinct()
-    )
+    e0 = _cust_supp_edges(spark, sf_dir)
     sym = e0.union(e0.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     nodes = (
         sym.select(F.col("src").alias("id"))
@@ -19839,102 +19807,15 @@ def q_bucketed_join_zero_exchange(spark, sf_dir):
     return out.withColumn("exchange_free", F.lit("Exchange" not in plan))
 
 
-#: r10 rotation (VERDICT r9 task 1 — the burn-down CLOSES this round): the
-#: r9 window landed 50/50 hash-green, leaving exactly 25 hashable queries
-#: never driver-checked (the artifact-union count; the six rows-only paths
-#: never occupy hash slots by policy). This window takes ALL 25 + the one
-#: r10 VERDICT-scoped addition (lsh_mega_bucket_labels, task 3) = 26 fresh
-#: slots — every remaining never-checked query is in, so if this window
-#: lands green, cumulative driver coverage is COMPLETE (every hashable
-#: registered query hash-checked at least once) and the registry freeze
-#: lifts. The 24 re-pin slots follow the post-burn-down rotation policy
-#: (COVERAGE.md): first the 4 queries whose internals changed in r10
-#: (supplier_cooccurrence_capped: +output-recall columns;
-#: submodular_greedy_coverage: covered-set unpersist;
-#: dedup_minhash_pairs / dedup_pipeline_e2e: minhash_lsh_pairs refactor for
-#: the salt path), then the 20 LEAST-RECENTLY-green queries (r1/r2/r3
-#: vintage — their hashes haven't been driver-confirmed on current code in
-#: 8+ rounds). The freshness guard in tests/test_query_registry.py now
-#: enforces exactly this: all never-checked in-window once fewer than 40
-#: remain.
-#: r11 rotation (post-burn-down regime, first pure-re-pin window): with
-#: cumulative driver coverage complete as of r10 (every hashable query
-#: hash-green at least once), all slots are re-pins except queries a
-#: sanctioned addition creates. Slotting, per the policy encoded in the
-#: freshness guard (tests/test_query_registry.py) and COVERAGE.md:
-#: (1) changed-in-r11 — dedup_minhash_pairs_salted (NEW, VERDICT r10
-#:     task 1: the r10 salted triangular self-join finally gets a driver
-#:     hash; never-checked, so the endgame invariant REQUIRES it in);
-#:     bucketed_join_zero_exchange (task 2: the exchange_free pin now
-#:     reads the FINAL adaptive plan after executing, not the initial
-#:     one); and the three other minhash_lsh_pairs callers —
-#:     dedup_minhash_pairs, dedup_pipeline_e2e, banding_recall_audit —
-#:     re-pinned for the r11 emit-once refactor (pairs surface at their
-#:     FIRST colliding band, global distinct eliminated; bit-identical
-#:     output, measured 85%-of-pipeline shuffle saved on hot corpora —
-#:     dedup.py docstring + SCALING.md r11). Output-invariant touches
-#:     that by the r9 precedent do NOT force re-pins: submodular's
-#:     unpersist None-guard and the salt path's cache materialization.
-#: (2) least-recently-green in ledger order, continuing where the r10
-#:     tail stopped: all 15 remaining r3-vintage queries, then the first
-#:     30 r4-vintage (alphabetical within round, the ledger's order);
-#:     stream_hourly_counts..variance_stddev (the last 9 of r4) roll to
-#:     r12.
-#: last_green[n] computed at round start from CORRECTNESS_r01..r10:
-#:   histogram {3:15, 4:39, 5:41, 6:48, 7:49, 8:48, 9:50, 10:50}.
-#: Round the CURRENT window below was cut in — the freshness guard counts
-#: only CORRECTNESS artifacts from EARLIER rounds, so the driver writing
-#: this round's artifact at round end doesn't retroactively fail the
-#: invariant.
-#: r12 rotation (post-burn-down regime): all slots are re-pins. Slotting,
-#: per the policy encoded in the freshness guard
-#: (tests/test_query_registry.py) and COVERAGE.md:
-#: (1) changed-in-r12 — the emit-once carry to the remaining pair mines
-#:     (VERDICT r11 task 1: pair-stream distinct eliminated; bit-identical
-#:     by construction, A/B-verified): the simhash mine
-#:     (dedup_simhash_pairs) and every prefix_filter_pairs /
-#:     containment_pairs caller (dedup_jaccard_pairs, dedup_clusters,
-#:     jaccard_prefix_filter_pairs, cluster_best_representative,
-#:     banding_recall_audit, containment_pairs); plus dedup_pipeline_e2e
-#:     for the capped kept-flag restriction (task 2: the __kept build now
-#:     runs over docs touching a dropped bucket only, everyone else
-#:     coalesces to all-true). dedup_simhash is NOT re-pinned: it calls
-#:     simhash_df, whose plan is untouched (r9 precedent — only
-#:     loop-internal plan changes force re-pins).
-#: (2) least-recently-green in ledger order: the last 9 r4-vintage
-#:     (stream_hourly_counts..variance_stddev), then the first 33
-#:     r5-vintage alphabetically (dedup_simhash_pairs already sits in the
-#:     changed head, so the fill skips it); stream_stream_join,
-#:     strip_repeated_spans, tdigest_error_audit, text_repetition_signals,
-#:     training_corpus_pipeline, unigram_logprob_score, zip_streams (the
-#:     last 7 of r5) roll to r13.
-#: r12 last_green[n] (CORRECTNESS_r01..r11):
-#:   histogram {4:9, 5:41, 6:48, 7:49, 8:48, 9:49, 10:47, 11:50}.
-#: r13 rotation (post-burn-down regime): all slots are re-pins. Slotting,
-#: per the policy encoded in the freshness guard
-#: (tests/test_query_registry.py) and COVERAGE.md:
-#: (1) changed-in-r13 — the PPJoin emit-once carry bound (_PRE_CARRY_CAP
-#:     + short/long doc arms, VERDICT r12 "What's wrong" #3): every
-#:     prefix_filter_pairs / containment_pairs caller (dedup_jaccard_pairs,
-#:     dedup_clusters, jaccard_prefix_filter_pairs,
-#:     cluster_best_representative, containment_pairs,
-#:     banding_recall_audit); plus the connected_components algorithm swap
-#:     to the large-star/small-star alternation (VERDICT r12 task 2,
-#:     bit-identical clusters): its two remaining oracle consumers
-#:     dedup_pipeline_e2e and entity_resolution_e2e (dedup_clusters and
-#:     cluster_best_representative already sit in the carry head).
-#:     Output-invariant touches that by the r9/r11 precedent do NOT force
-#:     re-pins: the pagerank nodes-persist (cache materialization only,
-#:     ranks asserted bit-identical).
-#: (2) least-recently-green in ledger order: the last 7 r5-vintage
-#:     (stream_stream_join … zip_streams, rolled from r12), then the first
-#:     35 r6-vintage alphabetically; session_window_native … zip_by_index
-#:     (the last 10 of r6) roll to r14.
-#: last_green[n] computed at round start from CORRECTNESS_r01..r12:
-#:   histogram {5:7(oracle-paired; +2 rows-only), 6:45(+1), 7:49, 8:47,
-#:   9:48, 10:47, 11:47, 12:50} — rows-only paths (embedding_lsh_topk,
-#:   ivf_topk_search, sketch_cardinality, tdigest_quantiles) never occupy
-#:   hash slots by policy.
+#: The driver hash-checks the first 50 entries below. Slotting policy, which
+#: tests/test_query_registry.py's freshness guard enforces: every hashable
+#: query never driver-checked takes a slot; the rest are re-pins, first the
+#: queries whose plans changed this round, then the least-recently-green in
+#: ledger order (round of last driver hash, alphabetical within a round).
+#: Rows-only queries never take a slot. Per-round windows and histograms:
+#: COVERAGE.md "Round-N state". ``_WINDOW_ROUND`` is the round the window
+#: was cut in; the guard counts only CORRECTNESS artifacts from earlier
+#: rounds, so the driver's artifact for this round does not fail it.
 _WINDOW_ROUND = 13
 
 _SHOWCASE_50 = [

@@ -15,6 +15,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from makinage_spark import materialize
 from makinage_spark.queries import QUERIES
 
 SRC = os.environ.get("SMOKE_SF_DIR", "/root/testdata/sf0.001")
@@ -78,11 +79,10 @@ def test_all_queries_survive_degenerate_inputs(spark, degenerate_dir):
     failures = {}
     for name in sorted(set(QUERIES) - SKIP):
         try:
-            QUERIES[name](spark, degenerate_dir).count()
+            with materialize.scope():
+                QUERIES[name](spark, degenerate_dir).count()
         except Exception as e:  # noqa: BLE001 - collecting the full sweep
             failures[name] = f"{type(e).__name__}: {str(e)[:300]}"
-        finally:
-            spark.catalog.clearCache()
     assert not failures, (
         f"{len(failures)} queries crash on degenerate inputs:\n"
         + "\n".join(f"  {k}: {v}" for k, v in sorted(failures.items()))

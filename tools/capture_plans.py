@@ -22,6 +22,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import makinage_spark as mk  # noqa: E402
+from makinage_spark import materialize  # noqa: E402
 from makinage_spark.queries import QUERIES  # noqa: E402
 
 
@@ -60,17 +61,15 @@ def main():
             print(f"skip (streaming/side-effect): {name}")
             continue
         try:
-            df = QUERIES[name](spark, sf_dir)
             buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain("formatted")
+            with materialize.scope(), contextlib.redirect_stdout(buf):
+                QUERIES[name](spark, sf_dir).explain("formatted")
             path = os.path.join(out_dir, f"{name}_{suffix}.txt")
             with open(path, "w") as f:
                 f.write(buf.getvalue())
             print(f"wrote {path}")
         except Exception as e:  # noqa: BLE001
             print(f"ERROR {name}: {type(e).__name__}: {e}")
-        spark.catalog.clearCache()
     spark.stop()
 
 

@@ -10,11 +10,9 @@ Env:   CHECK_SF_DIR (default /root/testdata/sf0.01)
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 import time
-from collections import Counter
 
 import duckdb
 
@@ -22,30 +20,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 import makinage_spark as mk  # noqa: E402
+from perfbench.metrics import multiset  # noqa: E402
 
 SF_DIR = os.environ.get("CHECK_SF_DIR", "/root/testdata/sf0.01")
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
-
-
-def norm_cell(v):
-    if v is None:
-        return "∅"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "nan"
-        return repr(v)
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(norm_cell(x) for x in v) + "]"
-    if isinstance(v, bytes):
-        return v.hex()
-    return str(v)
-
-
-def df_multiset(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return Counter("|".join(norm_cell(r[i]) for i in order) for r in rows)
 
 
 def main():
@@ -112,7 +92,7 @@ def main():
         if len(srows) != len(drows):
             problems.append(f"rowcount spark={len(srows)} duck={len(drows)}")
         if not problems:
-            sm, dm = df_multiset(scols, srows), df_multiset(dcols, drows)
+            sm, dm = multiset(scols, srows), multiset(dcols, drows)
             if sm != dm:
                 extra_s = list((sm - dm).items())[:3]
                 extra_d = list((dm - sm).items())[:3]

@@ -46,6 +46,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import makinage_spark as mk  # noqa: E402
+from makinage_spark import materialize  # noqa: E402
 from makinage_spark.sources import load_table  # noqa: E402
 
 SRC = "/root/testdata/sf0.1"
@@ -134,18 +135,18 @@ def run(spark, dest: str, mult: int, only: list[str]) -> None:
         for tag, sf_dir in (("base", SRC), ("big", dest)):
             best = float("inf")
             for attempt in range(3):  # attempt 0 = warm-up, uncounted
-                spark.catalog.clearCache()
-                t0 = time.time()
-                try:
-                    QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                except Exception as e:
-                    row[tag] = None
-                    print(f"{name}@{tag} FAILED: {e}", file=sys.stderr)
-                    break
-                if attempt:
-                    best = min(best, time.time() - t0)
+                with materialize.scope():
+                    t0 = time.time()
+                    try:
+                        QUERIES[name](spark, sf_dir).write.format("noop").mode(
+                            "overwrite"
+                        ).save()
+                    except Exception as e:
+                        row[tag] = None
+                        print(f"{name}@{tag} FAILED: {e}", file=sys.stderr)
+                        break
+                    if attempt:
+                        best = min(best, time.time() - t0)
             else:
                 row[tag] = round(best, 3)
         ratio = (
@@ -173,538 +174,9 @@ def run(spark, dest: str, mult: int, only: list[str]) -> None:
     )
 
 
-#: streaming family probed by ``stream``: the queries that hold real
-#: Structured Streaming state (VERDICT r4 task 5). Each runs to completion
-#: via its internal _drain; a StreamingQueryListener captures the last
-#: progress event's stateOperators so state SIZE is measured, not argued.
-STREAM_PROBE = [
-    "stream_scan_running",
-    "stream_neardup_screen",
-    "stream_topk_state",
-    "stream_dedup_keys",
-]
-
-
-def probe_stream(spark, dest: str, mult: int, only: list[str]) -> None:
-    """Streaming curvature + state-size probe: run each streaming query at
-    base and at ~mult× with a listener recording per-run state rows
-    (sum over stateOperators of numRowsTotal, last progress per query).
-    State is 'flat' when state-rows growth tracks KEY growth (the synthesis
-    offsets user/doc ids per replica, so keys grow ~mult×) rather than
-    ROW-count × batches — per-key state staying O(1)/O(window) is exactly
-    the claim streaming/stateful.py makes."""
-    from pyspark.sql.streaming import StreamingQueryListener
-
-    from makinage_spark.queries import QUERIES
-
-    state = {"rows": 0, "batches": 0}
-
-    class _L(StreamingQueryListener):
-        def onQueryStarted(self, event):
-            pass
-
-        def onQueryProgress(self, event):
-            ops = event.progress.stateOperators
-            if ops:
-                state["rows"] = sum(op.numRowsTotal for op in ops)
-            state["batches"] += 1
-
-        def onQueryIdle(self, event):
-            pass
-
-        def onQueryTerminated(self, event):
-            pass
-
-    listener = _L()
-    spark.streams.addListener(listener)
-    results = {}
-    try:
-        for name in only or STREAM_PROBE:
-            row = {}
-            for tag, sf_dir in (("base", SRC), ("big", dest)):
-                best, brows = float("inf"), 0
-                ok = True
-                for attempt in range(2):  # attempt 0 = warm-up, uncounted
-                    spark.catalog.clearCache()
-                    state["rows"] = 0
-                    state["batches"] = 0
-                    t0 = time.time()
-                    try:
-                        QUERIES[name](spark, sf_dir).count()
-                    except Exception as e:
-                        print(f"{name}@{tag} FAILED: {e}", file=sys.stderr)
-                        ok = False
-                        break
-                    dt = time.time() - t0  # timing BEFORE the settle wait
-                    # listener progress events are delivered asynchronously
-                    # on the listener bus — the FINAL event can land after
-                    # the query drains. Poll until (batches, rows) stop
-                    # advancing so state_rows records the last batch, not
-                    # the second-to-last (ADVICE r5).
-                    settled = (state["batches"], state["rows"])
-                    deadline = time.time() + 5.0
-                    while time.time() < deadline:
-                        time.sleep(0.2)
-                        cur = (state["batches"], state["rows"])
-                        if cur == settled:
-                            break
-                        settled = cur
-                    if attempt:
-                        if dt < best:
-                            best, brows = dt, state["rows"]
-                if ok:
-                    row[tag] = round(best, 3)
-                    row[f"state_rows_{tag}"] = brows
-            ratio = (
-                round(row["big"] / row["base"], 2)
-                if row.get("base") and row.get("big")
-                else None
-            )
-            srows_ratio = (
-                round(row["state_rows_big"] / row["state_rows_base"], 2)
-                if row.get("state_rows_base")
-                else None
-            )
-            results[name] = {**row, "ratio": ratio, "state_ratio": srows_ratio}
-            print(
-                json.dumps({"query": name, **results[name], "mult": mult}),
-                flush=True,
-            )
-    finally:
-        spark.streams.removeListener(listener)
-    sup = {n: r for n, r in results.items() if r["ratio"] and r["ratio"] > mult * 1.3}
-    # state grows superlinearly when state rows outgrow the key multiplier
-    # (keys scale ~mult× by synthesis construction)
-    bloat = {
-        n: r
-        for n, r in results.items()
-        if r["state_ratio"] and r["state_ratio"] > mult * 1.3
-    }
-    print(
-        json.dumps(
-            {
-                "summary": {
-                    "n": len(results),
-                    "mult": mult,
-                    "superlinear_time": sup,
-                    "superlinear_state": bloat,
-                    "load_avg": [round(x, 2) for x in os.getloadavg()],
-                }
-            }
-        )
-    )
-
-
-def probe_pairs(spark, dest: str, mult: int) -> None:
-    """Capped-vs-uncapped curvature for the pair generators (VERDICT r4 task
-    10): r4 probed caps-OFF semantics at 25×; this measures the SHIPPING
-    capped path (minhash bucket_cap=50, simhash block_cap=50) side by side
-    with the uncapped one at base and mult×, plus the pair-count delta the
-    caps cost (0 when no bucket exceeds the cap — the planted-recall tests
-    pin that the delta only ever removes mega-bucket template pairs)."""
-    from makinage_spark import dedup
-    from makinage_spark.sources import load_table
-
-    variants = {
-        "minhash_uncapped": lambda d: dedup.minhash_lsh_pairs(d),
-        "minhash_cap50": lambda d: dedup.minhash_lsh_pairs(d, bucket_cap=50),
-        "simhash_uncapped": lambda d: dedup.simhash_pairs(d),
-        "simhash_cap50": lambda d: dedup.simhash_pairs(d, block_cap=50),
-    }
-    results = {}
-    for name, fn in variants.items():
-        row = {}
-        for tag, sf_dir in (("base", SRC), ("big", dest)):
-            docs = load_table(spark, sf_dir, "documents")
-            best, n = float("inf"), None
-            for attempt in range(2):  # attempt 0 = warm-up, uncounted
-                spark.catalog.clearCache()
-                t0 = time.time()
-                n = fn(docs).count()
-                if attempt:
-                    best = min(best, time.time() - t0)
-            row[tag] = round(best, 3)
-            row[f"pairs_{tag}"] = n
-        row["ratio"] = round(row["big"] / row["base"], 2)
-        results[name] = row
-        print(json.dumps({"variant": name, **row, "mult": mult}), flush=True)
-    sup = {n: r for n, r in results.items() if r["ratio"] > mult * 1.3}
-    print(
-        json.dumps(
-            {
-                "summary": {
-                    "mult": mult,
-                    "superlinear": sup,
-                    "load_avg": [round(x, 2) for x in os.getloadavg()],
-                }
-            }
-        )
-    )
-
-
-def probe_hot_segment(spark, copies: int) -> None:
-    """Manufactured-skew probe for segment_dup_fraction (VERDICT r4 task 1):
-    a corpus where ONE boilerplate 10-token segment occurs ``copies`` times
-    (one per doc) alongside uniform filler. Under the old COUNT()-window
-    formulation all ``copies`` rows of that segment hash land on one window
-    partition — a straggler task that scales with the hot count; the shipped
-    groupBy+join formulation map-side-combines the hot key, so runtime
-    tracks corpus SIZE, not segment concentration. The probe times the
-    shipped query on (a) the hot corpus and (b) an equal-size uniform corpus
-    — flat ratio = skew-proof."""
-    from pyspark.sql import functions as F
-
-    boiler = " ".join(f"boiler{i}" for i in range(10))
-    n = copies
-    base = spark.range(n).select(
-        F.col("id").alias("doc_id"),
-        F.concat(
-            F.lit(boiler + " "),
-            F.concat_ws(
-                " ",
-                *[
-                    F.concat(
-                        F.lit(f"w{j}u"),
-                        ((F.col("id") * 31 + j) % 99991).cast("string"),
-                    )
-                    for j in range(10)
-                ],
-            ),
-        ).alias("text"),
-    )
-    uniform = spark.range(n).select(
-        F.col("id").alias("doc_id"),
-        F.concat_ws(
-            " ",
-            *[
-                F.concat(
-                    F.lit(f"v{j}u"),
-                    ((F.col("id") * 37 + j) % 99991).cast("string"),
-                )
-                for j in range(20)
-            ],
-        ).alias("text"),
-    )
-    import tempfile
-
-    from makinage_spark.queries import QUERIES
-
-    out = {}
-    for tag, df in (("hot", base), ("uniform", uniform)):
-        d = tempfile.mkdtemp(prefix=f"mk_hotseg_{tag}_")
-        df.withColumn("source", F.lit("synth")).write.mode("overwrite").parquet(
-            f"{d}/documents.parquet"
-        )
-        best = float("inf")
-        for attempt in range(2):
-            spark.catalog.clearCache()
-            t0 = time.time()
-            QUERIES["segment_dup_fraction"](spark, d).write.format(
-                "noop"
-            ).mode("overwrite").save()
-            if attempt:
-                best = min(best, time.time() - t0)
-        out[tag] = round(best, 3)
-    out["hot_over_uniform"] = round(out["hot"] / out["uniform"], 2)
-    print(json.dumps({"probe": "hot_segment", "copies": copies, **out}))
-
-
-def probe_hot_gram(spark, n: int, mult: int) -> None:
-    """Skewed gram-frequency probe for containment_pairs post-broadcast-fix
-    (VERDICT r5 task 7): every doc opens with the SAME 10-token boilerplate
-    (so its word-5-grams have document frequency = corpus size — the
-    stop-gram regime of real web text), plus unique filler; every 100th doc
-    gets a planted SHORT twin built from 5 of its filler tokens
-    (containment short→long = 1.0). The lossless prefix filter must (a)
-    never let the hot grams become join keys — they are the most frequent,
-    so they sort LAST and stay out of every probe prefix — giving ~linear
-    runtime in corpus size despite df(hot gram) = n, and (b) still find
-    exactly the planted n/100 pairs at both scales. Runs the SHIPPED
-    default (broadcast_freq=False: the gram-frequency table is
-    corpus-token-scale here, exactly the case the forced broadcast would
-    OOM at 100 TB)."""
-    from pyspark.sql import functions as F
-
-    from makinage_spark import dedup
-    from makinage_spark.text import word_shingles
-
-    boiler = " ".join(f"hot{i}" for i in range(10))
-
-    def corpus(rows: int):
-        longs = spark.range(rows).select(
-            (F.col("id") * 2).alias("doc_id"),
-            F.concat(
-                F.lit(boiler + " "),
-                F.concat_ws(
-                    " ",
-                    *[
-                        F.concat(
-                            F.lit(f"u{j}x"),
-                            (F.col("id") * 131 + j).cast("string"),
-                        )
-                        for j in range(12)
-                    ],
-                ),
-            ).alias("text"),
-        )
-        shorts = spark.range(rows).filter("id % 100 = 0").select(
-            (F.col("id") * 2 + 1).alias("doc_id"),
-            F.concat_ws(
-                " ",
-                *[
-                    F.concat(
-                        F.lit(f"u{j}x"), (F.col("id") * 131 + j).cast("string")
-                    )
-                    for j in range(6)
-                ],
-            ).alias("text"),
-        )
-        return longs.unionByName(shorts)
-
-    out = {}
-    for tag, rows in (("base", n), ("big", n * mult)):
-        docs = corpus(rows).select(
-            "doc_id", word_shingles("text", 5).alias("items")
-        )
-        best, pairs = float("inf"), None
-        for attempt in range(2):  # attempt 0 = warm-up, uncounted
-            spark.catalog.clearCache()
-            t0 = time.time()
-            pairs = dedup.containment_pairs(docs, "items", threshold=0.8).count()
-            if attempt:
-                best = min(best, time.time() - t0)
-        expected = (rows + 99) // 100  # short ⊂ long plants
-        out[tag] = {"s": round(best, 3), "pairs": pairs, "expected": expected}
-    out["ratio"] = round(out["big"]["s"] / out["base"]["s"], 2)
-    print(json.dumps({"probe": "hot_gram", "n": n, "mult": mult, **out}))
-
-
-def probe_kmeans_k(spark, dest: str) -> None:
-    """Literal-vs-table k-means assignment crossover at ADAPTIVE k (VERDICT
-    r5 tasks 4/7): the semantic-dedup policy k = n/250 instantiates k=400 on
-    the 25× embeddings (100k × d64). Times both assignment paths at that
-    operating point (production doubles — the arithmetic a real corpus run
-    uses), plus the table path at k=1000 for headroom; then the full
-    SemDeDup-shaped composition (kmeans cells → within-cell cosine → drop
-    list) on the table path. Sets the empirical basis for
-    kmeans_lloyd(table_threshold=512)."""
-    from pyspark.sql import functions as F
-
-    from makinage_spark import dedup, vectors
-    from makinage_spark.sources import load_table
-
-    emb = load_table(spark, dest, "embeddings").select("vec_id", "embedding")
-    n = emb.count()
-    k = max(8, n // 250)
-    res = {"n": n, "adaptive_k": k}
-    for name, kk, mode in (
-        (f"literal_k{k}", k, "literal"),
-        (f"table_k{k}", k, "table"),
-        ("table_k1000", 1000, "table"),
-    ):
-        best = float("inf")
-        for attempt in range(2):
-            spark.catalog.clearCache()
-            t0 = time.time()
-            vectors.kmeans_lloyd(
-                emb, k=kk, iters=2, exact=False, assign=mode
-            ).write.format("noop").mode("overwrite").save()
-            if attempt:
-                best = min(best, time.time() - t0)
-        res[name] = round(best, 3)
-        print(json.dumps({"probe": "kmeans_k", name: res[name]}), flush=True)
-    # full semantic-dedup composition on the table path at adaptive k
-    spark.catalog.clearCache()
-    t0 = time.time()
-    assigns = vectors.kmeans_lloyd(
-        emb, k=k, iters=2, exact=False, assign="table"
-    ).persist()
-    bc = emb.join(assigns, "vec_id")
-    pairs = dedup.embedding_neardup_pairs(bc, threshold=0.999, block_on="cluster")
-    drop = pairs.select(F.col("b").alias("vec_id")).distinct()
-    survivors = assigns.join(drop, "vec_id", "left_anti").count()
-    res["semdedup_table_total_s"] = round(time.time() - t0, 3)
-    res["survivors"] = survivors
-    assigns.unpersist()
-    print(json.dumps({"probe": "kmeans_k", **res}))
-
-
-def probe_cc_jump(spark, src: str = SRC) -> None:
-    """A/B for the CC pointer-jump materialization fix (VERDICT r5 task 5):
-    build the sf0.1 near-dup pair graph once, then run connected components
-    with the SHIPPED loop (stepped localCheckpoint-ed before the self-join)
-    vs the r5 loop (stepped lazy — its join+agg subtree evaluates twice per
-    round and lineage quadruples). Reports wall time and rounds for each."""
-    from pyspark.sql import functions as F
-
-    from makinage_spark import dedup
-    from makinage_spark.sources import load_table
-
-    docs = load_table(spark, src, "documents")
-    pairs = dedup.minhash_lsh_pairs(docs, bucket_cap=50).select("a", "b").persist()
-    print(json.dumps({"probe": "cc_jump", "src": src, "pairs": pairs.count()}),
-          flush=True)
-
-    def old_cc(p, max_iter=25):  # the r5 loop, verbatim minus materialization
-        edges = (
-            p.select(F.col("a").alias("u"), F.col("b").alias("v"))
-            .union(p.select(F.col("b").alias("u"), F.col("a").alias("v")))
-            .persist()
-        )
-        labels = (
-            edges.select(F.col("u").alias("id"))
-            .distinct()
-            .withColumn("label", F.col("id"))
-        ).localCheckpoint(eager=True)
-        rounds = 0
-        for _ in range(max_iter):
-            rounds += 1
-            nbr = (
-                edges.join(labels, edges.v == labels.id)
-                .groupBy("u")
-                .agg(F.min("label").alias("nbr"))
-            )
-            stepped = labels.join(nbr, labels.id == nbr.u, "left").select(
-                labels.id.alias("id"),
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nbr"), F.col("label"))
-                ).alias("label"),
-            )  # NOT materialized — the defect under test
-            jumped = (
-                stepped.alias("l1")
-                .join(stepped.alias("l2"), F.col("l1.label") == F.col("l2.id"), "left")
-                .select(
-                    F.col("l1.id").alias("id"),
-                    F.least(
-                        F.col("l1.label"),
-                        F.coalesce(F.col("l2.label"), F.col("l1.label")),
-                    ).alias("label"),
-                )
-            ).localCheckpoint(eager=True)
-            changed = (
-                jumped.alias("n")
-                .join(labels.alias("o"), "id")
-                .filter(F.col("n.label") != F.col("o.label"))
-                .limit(1)
-                .count()
-            )
-            labels = jumped
-            if changed == 0:
-                break
-        edges.unpersist()
-        return labels, rounds
-
-    out = {}
-    for tag in ("shipped", "old_lazy_stepped"):
-        best = float("inf")
-        for attempt in range(2):
-            spark.catalog.clearCache()
-            pairs.persist().count()
-            t0 = time.time()
-            if tag == "shipped":
-                n = dedup.connected_components(pairs).count()
-            else:
-                labels, rounds = old_cc(pairs)
-                n = labels.count()
-                out["rounds_old"] = rounds
-            if attempt:
-                best = min(best, time.time() - t0)
-        out[tag] = {"s": round(best, 3), "nodes": n}
-    out["speedup"] = round(
-        out["old_lazy_stepped"]["s"] / out["shipped"]["s"], 2
-    )
-    print(json.dumps({"probe": "cc_jump", **out}))
-
-
-def probe_cumsum(spark, dest: str) -> None:
-    """A/B for the global-cumsum formulations behind token_budget_pick: the
-    naive single-reducer ``Window.orderBy`` (no partition key — every row
-    through ONE task) vs ``smath.global_running_sum`` (repartitionByRange +
-    per-partition prefix sums + broadcast offsets). Run against --dest's
-    documents table (pass /tmp/scale_x5 or /tmp/scale_x25). Also verifies the
-    two formulations agree bit-for-bit before timing."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from makinage_spark import smath, text
-    from makinage_spark.sources import load_table
-
-    if dest.startswith("synthetic:"):
-        # crossover probe: the docs tables top out at 125k rows, far below
-        # where a single-reducer sort starts to hurt — synthesize a plain
-        # (id, weight, value) relation at the requested row count instead
-        rows = int(dest.split(":", 1)[1])
-        scored = (
-            spark.range(rows)
-            .select(
-                F.col("id").alias("doc_id"),
-                ((F.col("id") * 13) % 997 + 1).cast("bigint").alias("n_tok"),
-                (((F.col("id") * 2654435761) % 1000003) / 1000003.0).alias(
-                    "quality"
-                ),
-            )
-            .persist()
-        )
-    else:
-        docs = load_table(spark, dest, "documents")
-        scored = docs.select(
-            "doc_id",
-            F.coalesce(text.token_count(F.lower(F.col("text"))), F.lit(0))
-            .cast("bigint")
-            .alias("n_tok"),
-            text.quality_score("text").alias("quality"),
-        ).persist()
-    n = scored.count()
-    order = [F.col("quality").desc(), F.col("doc_id")]
-
-    naive_w = Window.orderBy(*order).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-
-    def naive():
-        return scored.withColumn("cum", F.sum("n_tok").over(naive_w))
-
-    def twophase():
-        return smath.global_running_sum(scored, order, "n_tok", "cum")
-
-    agree = (
-        naive().select("doc_id", "cum")
-        .exceptAll(twophase().select("doc_id", "cum"))
-        .limit(1)
-        .count()
-        == 0
-    )
-    out = {"probe": "cumsum", "dest": dest, "rows": n, "agree_exact": agree}
-    # the STRUCTURAL claim, from the plan itself: the naive empty-partition
-    # window plans an Exchange SinglePartition — every row through ONE task
-    # (OOM-bound at corpus scale regardless of wall time); the two-phase path
-    # plans only range/hash exchanges, worst task ~n/shuffle_partitions.
-    # (spark_partition_id() probing is unreliable here: Catalyst may evaluate
-    # it below the window exchange.)
-    for tag, fn in (("naive", naive), ("two_phase", twophase)):
-        plan = fn()._jdf.queryExecution().executedPlan().toString()
-        out[f"single_partition_exchanges_{tag}"] = plan.count("SinglePartition")
-    for tag, fn in (("naive_single_reducer", naive), ("two_phase", twophase)):
-        best = float("inf")
-        for attempt in range(3):  # attempt 0 = warm-up
-            spark.catalog.clearCache()
-            scored.persist().count()
-            t0 = time.time()
-            fn().write.format("noop").mode("overwrite").save()
-            if attempt:
-                best = min(best, time.time() - t0)
-        out[tag] = round(best, 3)
-    out["speedup"] = round(out["naive_single_reducer"] / out["two_phase"], 2)
-    print(json.dumps(out))
-
-
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument(
-        "cmd",
-        choices=["make", "run", "stream", "pairs", "hotseg", "hotgram",
-                 "kmeansk", "ccjump", "cumsum"],
-    )
+    ap.add_argument("cmd", choices=["make", "run"])
     ap.add_argument("queries", nargs="*")
     ap.add_argument("--mult", type=int, default=5)
     ap.add_argument("--dest", default="/tmp/scale_x5")
@@ -720,22 +192,6 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
     if args.cmd == "make":
         make(spark, args.dest, args.mult)
-    elif args.cmd == "stream":
-        probe_stream(spark, args.dest, args.mult, args.queries)
-    elif args.cmd == "pairs":
-        probe_pairs(spark, args.dest, args.mult)
-    elif args.cmd == "hotseg":
-        probe_hot_segment(spark, args.mult)
-    elif args.cmd == "hotgram":
-        probe_hot_gram(spark, n=20_000, mult=args.mult)
-    elif args.cmd == "kmeansk":
-        probe_kmeans_k(spark, args.dest)
-    elif args.cmd == "ccjump":
-        # --dest selects the corpus whose pair graph is clustered
-        # (pass /root/testdata/sf0.1 for the base-scale A/B)
-        probe_cc_jump(spark, args.dest)
-    elif args.cmd == "cumsum":
-        probe_cumsum(spark, args.dest)
     else:
         run(spark, args.dest, args.mult, args.queries)
     spark.stop()
