@@ -16,6 +16,8 @@ oracles reproduce signatures bit-for-bit.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -230,57 +232,34 @@ def minhash_signature_df(
     )
 
 
-def minhash_band_table(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    bands: int = 4,
-    ngram: int = 5,
-    stateless: bool = False,
-    with_all_buckets: bool = False,
-) -> DataFrame:
-    """The shareable LSH index: one ``(id, band, bucket)`` row per document
-    per band (bucket = md5 of the band's concatenated minima). This is the
-    table a production pipeline MATERIALIZES once per corpus snapshot and
-    reuses — self-joined for full-corpus pair mining
-    (:func:`minhash_lsh_pairs`) or stream-static-joined to screen newly
-    arriving documents against the historical corpus without recomputing
-    anything on the static side.
+def _explode_bands(frame: DataFrame, keep: list[str], buckets: list[Column]) -> DataFrame:
+    """One ``(*keep, band, bucket)`` row per input row per band, ``band`` =
+    the position of its expression in ``buckets``."""
+    return frame.select(
+        *keep,
+        F.explode(F.array(*[
+            F.struct(F.lit(b).alias("band"), bkt.alias("bucket"))
+            for b, bkt in enumerate(buckets)
+        ])).alias("bb"),
+    ).select(*keep, "bb.band", "bb.bucket")
 
-    ``with_all_buckets=True`` additionally carries ``__bkts`` — the full
-    band-ordered bucket array — on every exploded row (+~(bands-1)×32
-    chars/row on a table that is tiny next to the corpus). This is what
-    lets :func:`minhash_lsh_pairs` emit each pair at its FIRST colliding
-    band and skip the global distinct entirely (r11; see its docstring for
-    the measured motivation).
 
-    ``stateless=True`` computes the signature with the single-expression
-    in-row fold (:func:`minhash_array`) instead of the explode→groupBy
-    throughput formulation — bit-identical minima, but NO aggregation in the
-    plan, so it runs on a STREAMING DataFrame in append mode (a streaming
-    groupBy would demand watermarked state). Use it for the per-micro-batch
-    side of a stream-static screen; keep the default for corpus-scale batch
-    builds (the fold is ~50× slower per shingle).
-
-    NULL-text docs are dropped by an explicit ``IS NOT NULL`` guard shared
-    by BOTH paths (they cannot be near-duplicates of anything). Without it
-    the paths diverge on degenerate docs — grouped would bucket them at
-    md5('') via a NULL-shingle minima row while stateless folds them to the
-    sentinel-minima bucket — and either way all null-text docs collide into
-    ONE shared bucket per band, so a stream-static screen would flag every
-    degenerate doc as a near-dup candidate of every other."""
+def _minhash_buckets(
+    df: DataFrame, text_col: str, id_col: str, num_hashes: int, bands: int, ngram: int
+) -> tuple[DataFrame, list[Column]]:
+    """The ``(id, mh0..mhk)`` signature table of the non-null-text docs and
+    the per-band bucket expressions over it (md5 of the band's minima)."""
     rows_per_band = num_hashes // bands
     if rows_per_band * bands != num_hashes:
         raise ValueError("bands must divide num_hashes")
     df = df.filter(F.col(text_col).isNotNull())
-    if stateless:
+    if df.isStreaming:
         sig = df.select(
             F.col(id_col), *minhash_signature(text_col, num_hashes, ngram)
         )
     else:
         sig = minhash_signature_df(df, text_col, id_col, num_hashes, ngram)
-    band_buckets = [
+    return sig, [
         F.md5(
             F.concat_ws(
                 "|",
@@ -290,21 +269,223 @@ def minhash_band_table(
         )
         for b in range(bands)
     ]
-    if with_all_buckets:
-        return sig.select(
-            F.col(id_col), F.array(*band_buckets).alias("__bkts")
-        ).select(
-            id_col,
-            F.posexplode("__bkts").alias("band", "bucket"),
-            "__bkts",
+
+
+def minhash_band_table(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    num_hashes: int = 16,
+    bands: int = 4,
+    ngram: int = 5,
+) -> DataFrame:
+    """The shareable LSH index: one ``(id, band, bucket)`` row per document
+    per band (bucket = md5 of the band's concatenated minima). This is the
+    table a production pipeline MATERIALIZES once per corpus snapshot and
+    reuses — self-joined for full-corpus pair mining
+    (:func:`minhash_lsh_pairs`) or stream-static-joined to screen newly
+    arriving documents against the historical corpus without recomputing
+    anything on the static side.
+
+    A STREAMING ``df`` gets its signature from the single-expression in-row
+    fold (:func:`minhash_array`) instead of the explode→groupBy throughput
+    formulation — bit-identical minima, but NO aggregation in the plan, so
+    it runs in append mode (a streaming groupBy would demand watermarked
+    state). That is the per-micro-batch side of a stream-static screen;
+    batch builds keep the grouped form (the fold is ~50× slower per
+    shingle).
+
+    NULL-text docs are dropped by an explicit ``IS NOT NULL`` guard shared
+    by BOTH paths (they cannot be near-duplicates of anything). Without it
+    the paths diverge on degenerate docs — grouped would bucket them at
+    md5('') via a NULL-shingle minima row while the fold maps them to the
+    sentinel-minima bucket — and either way all null-text docs collide into
+    ONE shared bucket per band, so a stream-static screen would flag every
+    degenerate doc as a near-dup candidate of every other."""
+    sig, buckets = _minhash_buckets(df, text_col, id_col, num_hashes, bands, ngram)
+    return _explode_bands(sig, [id_col], buckets)
+
+
+def _big_buckets(table: DataFrame, cap: int) -> DataFrame:
+    """The ``(band, bucket)`` groups of ``table`` holding more than ``cap``
+    rows — one map-side-combined size scan."""
+    return (
+        table.groupBy("band", "bucket")
+        .agg(F.count(F.lit(1)).alias("__bs"))
+        .filter(F.col("__bs") > cap)
+        .select("band", "bucket")
+    )
+
+
+def _banded_pairs(
+    stacked: DataFrame,
+    id_col: str,
+    bands: int,
+    band_key: Callable[[str, int], Column],
+    bucket_cap: int | None = None,
+    salt: int | None = None,
+    salt_threshold: int = 4096,
+    extra: tuple[Column, ...] = (),
+) -> DataFrame:
+    """Emit-once self-join of an ``(id, band, bucket, …)`` table, shared by
+    :func:`minhash_lsh_pairs` and :func:`simhash_pairs`: every pair of
+    distinct ids sharing a (band, bucket) group comes out EXACTLY once, as
+    ``(a, b, *extra)`` with ``a < b``. ``band_key(side, j)`` is the band-j
+    key of the row aliased ``side`` (``"l"``/``"r"``), computed from what
+    the row carries; ``extra`` columns may read both aliases and must be
+    symmetric in them (salted cross cells can swap the sides). ``id_col``
+    values must be unique — uniqueness of the output is by construction.
+
+    **Emit-once instead of distinct (r11 minhash, r12 simhash).** A pair
+    that collides in m bands used to be emitted m times and collapsed by a
+    global ``distinct()`` — a full shuffle of the PAIR STREAM, the largest
+    dataset in the pipeline. Measured on the hot-band fixture (SCALING.md
+    r11): enumerating 465M pre-distinct rows took 16.6 s while the plan
+    WITH the distinct took 111.7 s — the dedup shuffle was ~85% of the
+    cost. Now the join emits a pair only at its FIRST colliding band (for
+    all j < band: ``band_key(l, j) != band_key(r, j)``), so the union
+    across bands is duplicate-free BY CONSTRUCTION and the pair stream
+    never shuffles at all. Same pair set, bit-identical to the old distinct
+    (the SQL oracles pin it). The predicate is UNROLLED over the
+    compile-time band count with plain expressions, NOT
+    slice/zip_with/forall: higher-order-function lambdas are interpreted
+    per evaluation, and this predicate runs once per JOIN CANDIDATE — on a
+    hot-bucket fixture the HOF form measured 322 s where the unrolled form
+    (fully inside whole-stage codegen) and the old distinct-based plan
+    measured ~94 s.
+
+    ``bucket_cap``: drop (band, bucket) groups holding more than this many
+    rows before the self-join. The capped contract is "pair surfaces iff
+    equal in any KEPT band", so the first-hit test must not count an
+    earlier equal band whose bucket was DROPPED: each doc also carries
+    band-ordered ``__kept`` flags and the suppression term is ``collided
+    AND kept``. Only docs that TOUCH a dropped bucket can carry a false
+    flag (r12, VERDICT r11 task 2), so the per-doc groupBy runs over
+    template members only — everyone else coalesces to the all-true literal
+    instead of paying a corpus-wide shuffle on the id.
+
+    ``salt`` (r10, VERDICT task 3): buckets LARGER than ``salt_threshold``
+    split into ``salt`` blocks by id-hash and enumerate the triangular block
+    grid: left rows carry their block i exploded to targets j ∈ [i, salt),
+    right rows carry block j, join key = (band, bucket, j) — the shuffle
+    spreads the bucket over ``salt`` reducer keys, each cross cell (i,j)
+    runs (s/salt)² work, and every unordered pair lands exactly once
+    (same-block cells keep the a<b guard; cross cells take
+    least/greatest). Buckets at or under the threshold keep the plain
+    self-join — the ~salt/2× left-side row expansion is paid only where it
+    buys parallelism."""
+    capped = bucket_cap is not None
+    if capped:
+        # persist the raw band table: three consumers derive from it below
+        # (size scan, kept-flag build, the anti-join) and none should
+        # recompute the signature pipeline
+        stacked = materialize(stacked)
+        dropped = _big_buckets(stacked, bucket_cap)
+        touched = (
+            stacked.join(dropped, ["band", "bucket"], "left_semi")
+            .select(id_col)
+            .distinct()
         )
-    band_structs = [
-        F.struct(F.lit(b).alias("band"), bkt.alias("bucket"))
-        for b, bkt in enumerate(band_buckets)
-    ]
-    return sig.select(
-        id_col, F.explode(F.array(*band_structs)).alias("bb")
-    ).select(id_col, "bb.band", "bb.bucket")
+        kept_arr = (
+            stacked.join(touched, id_col, "left_semi")
+            .join(
+                dropped.withColumn("__dropped", F.lit(True)),
+                ["band", "bucket"],
+                "left",
+            )
+            .select(id_col, "band", F.col("__dropped").isNull().alias("__k"))
+            .groupBy(id_col)
+            .agg(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("band", "__k"))),
+                    lambda s: s["__k"],
+                ).alias("__kept")
+            )
+        )
+        all_true = F.array(*[F.lit(True) for _ in range(bands)])
+        stacked = (
+            stacked.join(dropped, ["band", "bucket"], "left_anti")
+            .join(kept_arr, id_col, "left")
+            .withColumn("__kept", F.coalesce(F.col("__kept"), all_true))
+        )
+    # Persist before the self-join: both join branches would otherwise
+    # recompute the whole signature pipeline (a broadcast join has no
+    # shuffle exchange for Catalyst to reuse). Same move as materializing the
+    # signature table to storage before bucket-joining in a lake pipeline —
+    # the band table is tiny relative to the text. It stays held for the
+    # lazy result: run repeated calls inside materialize.scope().
+    # NOT size_by, and specifically never repartitioned by "bucket"
+    # (r8 review): HashPartitioning(bucket) satisfies the self-join's
+    # (band, bucket) clustering on BOTH co-partitioned sides, so
+    # EnsureRequirements would drop the join exchange. Keeping the exchange
+    # lets AQE re-balance INPUT-size skew (many medium buckets hashing into
+    # one fat partition); it does NOT split a single mega-bucket's s²
+    # OUTPUT amplification — skew detection is input-bytes-based (r10) —
+    # that case needs the cap or the salt.
+    stacked = materialize(stacked)
+
+    first_hit = F.lit(True)
+    for j in range(bands - 1):
+        t = (F.col("l.band") <= F.lit(j)) | (band_key("l", j) != band_key("r", j))
+        if capped:
+            t = t | ~F.col("l.__kept")[j]
+        first_hit = first_hit & t
+
+    def self_join(part: DataFrame) -> DataFrame:
+        left, right = part.alias("l"), part.alias("r")
+        return left.join(
+            right,
+            on=[
+                F.col("l.band") == F.col("r.band"),
+                F.col("l.bucket") == F.col("r.bucket"),
+                F.col(f"l.{id_col}") < F.col(f"r.{id_col}"),
+                first_hit,
+            ],
+        ).select(
+            F.col(f"l.{id_col}").alias("a"), F.col(f"r.{id_col}").alias("b"), *extra
+        )
+
+    if salt is None or salt <= 1:
+        return self_join(stacked)
+    # Fill the persisted band table before the salted path fans out into
+    # four consumers (size scan + anti/semi joins + plain self-join):
+    # otherwise whichever branch's first action wins the persist fill race
+    # recomputes the signature pipeline once more than intended (ADVICE
+    # r10). This makes the salted call eager by one tiny cached-side job.
+    stacked.count()
+    big = _big_buckets(stacked, salt_threshold)
+    plain = self_join(stacked.join(big, ["band", "bucket"], "left_anti"))
+    bigpart = stacked.join(big, ["band", "bucket"], "left_semi")
+    block = F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt)).cast("int")
+    l2 = (
+        bigpart.withColumn("__bi", block)
+        .withColumn("__bj", F.explode(F.expr(f"sequence(__bi, {salt - 1})")))
+        .alias("l")
+    )
+    r2 = bigpart.withColumn("__bj", block).alias("r")
+    salted = (
+        l2.join(
+            r2,
+            on=[
+                F.col("l.band") == F.col("r.band"),
+                F.col("l.bucket") == F.col("r.bucket"),
+                F.col("l.__bj") == F.col("r.__bj"),
+                (F.col("l.__bi") != F.col("r.__bj"))
+                | (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
+                first_hit,
+            ],
+        )
+        .select(
+            F.least(F.col(f"l.{id_col}"), F.col(f"r.{id_col}")).alias("a"),
+            F.greatest(F.col(f"l.{id_col}"), F.col(f"r.{id_col}")).alias("b"),
+            *extra,
+        )
+    )
+    # no distinct: plain and salted partition each band's buckets by size
+    # (disjoint), within a leg each unordered pair lands exactly once
+    # (a<b guard / triangular grid), and first_hit suppresses every
+    # band after a pair's first kept collision
+    return plain.unionByName(salted)
 
 
 def minhash_lsh_pairs(
@@ -327,39 +508,19 @@ def minhash_lsh_pairs(
 
     Physical plan: signature = narrow map; band bucket = md5 of the band's
     concatenated minima (constant width regardless of r); one shuffle per the
-    exploded (band, bucket) key; pairs form by equi-join *within* buckets only.
+    exploded (band, bucket) key; pairs form by the emit-once equi-join
+    *within* buckets only (:func:`_banded_pairs`), each row carrying the
+    full band-ordered bucket array ``__bkts`` for the first-hit test.
     Returns distinct ``(a, b)`` pairs with ``a < b``.
 
-    PRECONDITION: ``id_col`` values must be unique (one row per document).
-    With the pair-stream ``distinct()`` gone (emit-once, below), output
-    uniqueness is BY CONSTRUCTION from unique ids — duplicate-id rows would
-    emit one ``(a, b)`` row per colliding row combination where the old
-    distinct silently collapsed them. The band table (two tables when
-    ``bucket_cap`` is on) stays held for the lazy result: run repeated
-    calls inside ``materialize.scope()``. EAGERNESS: ``salt > 1``
-    materializes the band table at DataFrame-construction time (one small
-    cached-side count job) so the four salted-path consumers don't race the
-    persist fill — the returned DataFrame is otherwise lazy as usual.
-
-    **Emit-once instead of distinct (r11).** A pair that collides in m
-    bands used to be emitted m times and collapsed by a global
-    ``distinct()`` — a full shuffle of the PAIR STREAM, the largest
-    dataset in the pipeline. Measured on the hot-band fixture
-    (SCALING.md r11): enumerating 465M pre-distinct rows took 16.6 s while
-    the plan WITH the distinct took 111.7 s — the dedup shuffle was ~85%
-    of the cost. Now each row carries the full band-ordered bucket array
-    (``__bkts``, via ``minhash_band_table(with_all_buckets=True)``) and
-    the join emits a pair only at its FIRST colliding band (for all
-    j < band: ``l.__bkts[j] != r.__bkts[j]``), so the union across bands
-    is duplicate-free BY CONSTRUCTION and the pair stream never shuffles
-    at all — it flows straight from the bucket joins to the consumer.
-    Same pair set, bit-identical to the old distinct (the SQL oracles pin
-    it). Under ``bucket_cap`` the first-hit test must not count an earlier
-    equal band whose bucket was DROPPED by the cap (the capped contract is
-    "pair surfaces iff equal in any KEPT band"), so each doc also carries
-    band-ordered ``__kept`` flags and the suppression term is
-    ``collided AND kept``; the flags are one extra groupBy+join on the
-    tiny band table, paid only when the cap is on.
+    PRECONDITION: ``id_col`` values must be unique (one row per document):
+    output uniqueness is BY CONSTRUCTION from unique ids — duplicate-id rows
+    would emit one ``(a, b)`` row per colliding row combination. The band
+    table (two tables when ``bucket_cap`` is on) stays held for the lazy
+    result: run repeated calls inside ``materialize.scope()``. EAGERNESS:
+    ``salt > 1`` materializes the band table at DataFrame-construction time
+    (one small cached-side count job) — the returned DataFrame is otherwise
+    lazy as usual.
 
     ``bucket_cap`` (off by default, so results are exactly the banding
     semantics): drop (band, bucket) groups holding more than this many docs
@@ -369,186 +530,33 @@ def minhash_lsh_pairs(
     exactly this shape: 158M true pairs from replica-correlated shingles,
     SCALING.md round-4 section). Industrial dedup pipelines cap or sample
     such mega-buckets: members that numerous are mutual near-dups of a
-    template; pair enumeration adds nothing a cluster label doesn't. The size
-    scan is one map-side-combined groupBy + a semi-join — output unchanged
+    template; pair enumeration adds nothing a cluster label doesn't
+    (:func:`lsh_mega_buckets` returns them as labels). Output is unchanged
     whenever no bucket exceeds the cap.
 
     ``salt`` (r10, VERDICT task 3): parallelize the s² pair expansion of
     buckets LARGER than ``salt_threshold`` across ``salt`` hash blocks —
     for when the pairs of a large bucket are genuinely wanted (organic
     near-dup neighborhoods too big for one task, too real to cap away).
-    The hot-band probe (tools/skewed_band_probe.py) showed why this cannot
-    be left to AQE: OptimizeSkewedJoin detects skew by INPUT partition
-    bytes, and a mega-bucket's input is s tiny rows while its join OUTPUT
-    is s² — invisible to the detector, so the expansion serializes into
-    one task no matter what (measured: AQE on/off within noise on an
-    8k-doc hot bucket; at a 10⁶-doc corpus-scale bucket that one task is
-    the job). The salted path splits each big bucket into ``salt`` blocks
-    by id-hash and enumerates the triangular block grid: left rows carry
-    their block i exploded to targets j ∈ [i, salt), right rows carry
-    block j, join key = (band, bucket, j) — so the shuffle spreads the
-    bucket over ``salt`` reducer keys, each cross cell (i,j) runs
-    (s/salt)² work, every unordered pair lands exactly once (same-block
-    cells keep the a<b guard; cross cells take least/greatest), and
-    output is bit-identical to the unsalted join. Buckets at or under the
-    threshold keep the plain self-join — the ~salt/2× left-side row
-    expansion is paid only where it buys parallelism.
+    The r10 hot-band probe (tools/skewed_band_probe.py) showed why this
+    cannot be left to AQE: OptimizeSkewedJoin detects skew by INPUT
+    partition bytes, and a mega-bucket's input is s tiny rows while its
+    join OUTPUT is s² — invisible to the detector, so the expansion
+    serializes into one task no matter what. Output is bit-identical to
+    the unsalted join.
     """
-    stacked = minhash_band_table(
-        df, text_col, id_col, num_hashes, bands, ngram, with_all_buckets=True
+    sig, buckets = _minhash_buckets(df, text_col, id_col, num_hashes, bands, ngram)
+    stacked = sig.select(
+        F.col(id_col), F.array(*buckets).alias("__bkts")
+    ).select(id_col, F.posexplode("__bkts").alias("band", "bucket"), "__bkts")
+    return _banded_pairs(
+        stacked, id_col, bands, lambda s, j: F.col(f"{s}.__bkts")[j],
+        bucket_cap, salt, salt_threshold,
     )
-    capped = bucket_cap is not None
-    if capped:
-        # persist the raw band table: three consumers derive from it below
-        # (size scan, kept-flag build, the anti-join) and none should
-        # recompute the shingle→minhash pipeline
-        stacked = materialize(stacked)
-        big_caps = (
-            stacked.groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("__bs"))
-            .filter(F.col("__bs") > bucket_cap)
-            .select("band", "bucket")
-        )
-        # band-ordered kept flags per doc: the emit-once suppression below
-        # must count an earlier equal band as a collision ONLY if that
-        # band's bucket survived the cap — the capped contract is "pair
-        # surfaces iff equal in ANY kept band". Only docs that TOUCH a
-        # dropped bucket can carry a false flag (r12, VERDICT r11 task 2),
-        # so the per-doc groupBy runs over template members only — everyone
-        # else coalesces to the all-true literal below instead of paying a
-        # corpus-wide shuffle on the id.
-        touched = (
-            stacked.join(big_caps, ["band", "bucket"], "left_semi")
-            .select(id_col)
-            .distinct()
-        )
-        kept_arr = (
-            stacked.join(touched, id_col, "left_semi")
-            .join(
-                big_caps.withColumn("__dropped", F.lit(True)),
-                ["band", "bucket"],
-                "left",
-            )
-            .select(id_col, "band", F.col("__dropped").isNull().alias("__k"))
-            .groupBy(id_col)
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("band", "__k"))),
-                    lambda s: s["__k"],
-                ).alias("__kept")
-            )
-        )
-        all_true = F.array(*[F.lit(True) for _ in range(bands)])
-        stacked = (
-            stacked.join(big_caps, ["band", "bucket"], "left_anti")
-            .join(kept_arr, id_col, "left")
-            .withColumn("__kept", F.coalesce(F.col("__kept"), all_true))
-        )
-    # Persist before the self-join: both join branches would otherwise
-    # recompute the whole shingle→minhash pipeline (a broadcast join has no
-    # shuffle exchange for Catalyst to reuse). Same move as materializing the
-    # signature table to storage before bucket-joining in a lake pipeline —
-    # the band table is tiny (id, band, 32-char bucket) relative to the text.
-    # NOT size_by, and specifically never repartitioned by "bucket"
-    # (r8 review): HashPartitioning(bucket) satisfies the self-join's
-    # (band, bucket) clustering on BOTH co-partitioned sides, so
-    # EnsureRequirements would drop the join exchange. Keeping the exchange
-    # lets AQE re-balance INPUT-size skew (many medium buckets hashing into
-    # one fat partition); note it does NOT split a single mega-bucket's s²
-    # OUTPUT amplification — skew detection is input-bytes-based (r10
-    # correction, measured by tools/skewed_band_probe.py) — that case needs
-    # ``bucket_cap`` (drop + lsh_mega_buckets labels) or ``salt``.
-    stacked = materialize(stacked)
-
-    def first_hit() -> Column:
-        # emit-once: no EARLIER band already surfaced this pair — for every
-        # j < band, the band-j buckets differ (or, under a cap, band j was
-        # dropped). UNROLLED over the compile-time band count with literal
-        # array ordinals, NOT slice/zip_with/forall: higher-order-function
-        # lambdas are interpreted per evaluation, and this predicate runs
-        # once per JOIN CANDIDATE — on a hot-bucket fixture the HOF form
-        # measured 322 s where this unrolled form (plain GetArrayItem +
-        # string compares, fully inside whole-stage codegen) and the old
-        # distinct-based plan measured ~94 s and the shuffle saving can
-        # actually materialize.
-        cond = F.lit(True)
-        for j in range(bands - 1):
-            t = (F.col("l.band") <= F.lit(j)) | (
-                F.col("l.__bkts")[j] != F.col("r.__bkts")[j]
-            )
-            if capped:
-                t = t | ~F.col("l.__kept")[j]
-            cond = cond & t
-        return cond
-
-    def self_join(part: DataFrame) -> DataFrame:
-        left, right = part.alias("l"), part.alias("r")
-        return left.join(
-            right,
-            on=[
-                F.col("l.band") == F.col("r.band"),
-                F.col("l.bucket") == F.col("r.bucket"),
-                F.col(f"l.{id_col}") < F.col(f"r.{id_col}"),
-                first_hit(),
-            ],
-        ).select(F.col(f"l.{id_col}").alias("a"), F.col(f"r.{id_col}").alias("b"))
-
-    if salt is None or salt <= 1:
-        return self_join(stacked)
-    # Materialize the persisted band table before the salted path fans out
-    # into four consumers (size scan + anti/semi joins + plain self-join):
-    # otherwise whichever branch's first action wins the persist fill race
-    # recomputes the shingle→minhash pipeline once more than intended
-    # (ADVICE r10 — same materialize-before-reuse move as the covered set
-    # in submodular_greedy_coverage). Output is unaffected; the count is a
-    # tiny cached-side job.
-    stacked.count()
-    big = (
-        stacked.groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).alias("__bs"))
-        .filter(F.col("__bs") > salt_threshold)
-        .select("band", "bucket")
-    )
-    plain = self_join(stacked.join(big, ["band", "bucket"], "left_anti"))
-    bigpart = stacked.join(big, ["band", "bucket"], "left_semi")
-    block = F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt)).cast("int")
-    l2 = (
-        bigpart.withColumn("__bi", block)
-        .withColumn("__bj", F.explode(F.expr(f"sequence(__bi, {salt - 1})")))
-        .alias("l")
-    )
-    r2 = bigpart.withColumn("__bj", block).alias("r")
-    salted = (
-        l2.join(
-            r2,
-            on=[
-                F.col("l.band") == F.col("r.band"),
-                F.col("l.bucket") == F.col("r.bucket"),
-                F.col("l.__bj") == F.col("r.__bj"),
-                (F.col("l.__bi") != F.col("r.__bj"))
-                | (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-                first_hit(),
-            ],
-        )
-        .select(
-            F.least(F.col(f"l.{id_col}"), F.col(f"r.{id_col}")).alias("a"),
-            F.greatest(F.col(f"l.{id_col}"), F.col(f"r.{id_col}")).alias("b"),
-        )
-    )
-    # no distinct: plain and salted partition each band's buckets by size
-    # (disjoint), within a leg each unordered pair lands exactly once
-    # (a<b guard / triangular grid), and first_hit() suppresses every
-    # band after a pair's first kept collision — the union is
-    # duplicate-free by construction
-    return plain.unionByName(salted)
 
 
 def lsh_mega_buckets(
-    band_table: DataFrame,
-    bucket_cap: int,
-    id_col: str = "doc_id",
-    band_col: str = "band",
-    bucket_col: str = "bucket",
+    band_table: DataFrame, bucket_cap: int, id_col: str = "doc_id"
 ) -> DataFrame:
     """Membership of the (band, bucket) groups LARGER than ``bucket_cap`` —
     the exact complement of ``minhash_lsh_pairs(bucket_cap=...)``, so what
@@ -568,24 +576,16 @@ def lsh_mega_buckets(
     expansion anywhere. Input is the MATERIALIZED band table
     (:func:`minhash_band_table`), shared with the pair mine, so a
     production run gets pairs-for-organic-buckets + labels-for-templates
-    from one index build.
-
-    ``band_col``/``bucket_col`` generalize the same complement to any
-    block-keyed self-join table with the same exposure — e.g. the simhash
-    pigeonhole table: ``lsh_mega_buckets(stacked, cap, band_col="blk",
-    bucket_col="val")`` labels what ``simhash_pairs(block_cap=...)``
-    drops."""
+    from one index build. The SimHash pigeonhole table has the same
+    columns and the same s² exposure:
+    ``lsh_mega_buckets(simhash_band_table(...), cap)`` labels what
+    ``simhash_pairs(block_cap=cap)`` drops."""
     from pyspark.sql import Window
 
-    keys = [band_col, bucket_col]
-    sizes = (
-        band_table.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("__bs"))
-        .filter(F.col("__bs") > bucket_cap)
-        .select(*keys)
+    members = band_table.join(
+        _big_buckets(band_table, bucket_cap), ["band", "bucket"], "left_semi"
     )
-    members = band_table.join(sizes, keys, "left_semi")
-    w = Window.partitionBy(*keys)
+    w = Window.partitionBy("band", "bucket")
     return (
         members.withColumn("cluster", F.min(id_col).over(w))
         .select(id_col, "cluster")
@@ -608,64 +608,72 @@ def lsh_mega_buckets(
 #: emit a pair twice — run through an id-level dropDuplicates instead.
 #: 64 covers the prefix length of every organic bench/test doc (rarest-
 #: first canonical order front-loads shared tokens, so real first matches
-#: sit early regardless). Module-level so tests can monkeypatch it tiny to
-#: exercise the long arms.
+#: sit early regardless); a mixed-length brute-force test runs the long
+#: arms at this value. Module-level so tests can also monkeypatch it tiny.
 _PRE_CARRY_CAP = 64
 
 
-def prefix_filter_pairs(
-    df: DataFrame,
-    items_col: str,
-    id_col: str = "doc_id",
-    threshold: float = 0.8,
-    broadcast_freq: bool = False,
-) -> DataFrame:
-    """PPJoin-style LOSSLESS set-similarity join over an array column.
-
-    Order each row's (distinct) item set rarest-item-first by global document
-    frequency, keep only the first ``|s| - ⌈t·|s|⌉ + 1`` items as the
-    "prefix", and generate candidate pairs ONLY from rows sharing a prefix
-    item — the prefix-filter theorem guarantees every pair with Jaccard ≥ t
-    shares at least one, so exact verification of candidates (in-row
-    ``array_intersect`` of the two full sets) returns exactly the unpruned
-    O(n²) answer.
-
-    Why this is the 100 TB default over a raw inverted-index join: the naive
-    join keys on EVERY item, so one stop-item ("of the" shingles, common
-    tokens) with document frequency f contributes f² candidate pairs on a
-    single reducer key. Here the frequent items never enter the join — only
-    the ~(1-t)·|s| rarest per row do — and verification touches the two
-    bounded item arrays, never the corpus.
-
-    Returns ``(a, b, inter, sz_a, sz_b, jaccard)``; ``inter``/sizes are exact
-    BIGINTs, the filter compares the raw (unrounded) ratio.
-    """
-    sets = df.select(
+def _item_sets(df: DataFrame, items_col: str, id_col: str) -> DataFrame:
+    """``(doc_id, items)`` with each row's items made distinct."""
+    return df.select(
         F.col(id_col).alias("doc_id"),
         F.array_distinct(F.col(items_col)).alias("items"),
     )
+
+
+def _carried(ordered: DataFrame, arr: str) -> tuple[DataFrame, DataFrame]:
+    """Posexplode ``arr`` (``"prefix"`` or the full rarest-first set
+    ``"oit"``) into one row per token — ``(doc_id, sz, ptok, __pos, __pre)``
+    plus ``__plen`` for a prefix — where ``__pre`` holds the first
+    min(pos, _PRE_CARRY_CAP) tokens before it; split into the rows of SHORT
+    docs (the exploded array fits the cap) and of LONG docs."""
+    lens = ["__plen"] if arr == "prefix" else []  # the full set's length is sz
+    rows = ordered.select(
+        "doc_id", "sz", *[F.size(arr).alias(c) for c in lens],
+        F.posexplode(arr).alias("__pos", "ptok"), arr
+    ).select(
+        "doc_id", "sz", "ptok", "__pos", *lens,
+        F.slice(arr, 1, F.least(F.col("__pos"), F.lit(_PRE_CARRY_CAP))).alias("__pre"),
+    )
+    n = F.col((lens or ["sz"])[0])
+    return rows.filter(n <= _PRE_CARRY_CAP), rows.filter(n > _PRE_CARRY_CAP)
+
+
+def _ppjoin(
+    sets: DataFrame,
+    threshold: float,
+    index_arr: str,
+    pair_cond: list[Column],
+    need: Column,
+) -> DataFrame:
+    """PPJoin core (Xiao et al., WWW'08) of :func:`prefix_filter_pairs` and
+    :func:`containment_pairs`. ``sets`` is ``(doc_id, items)`` with distinct
+    items. Every set is ordered rarest-item-first by global document
+    frequency; each set's PREFIX (its first ``|s| - ⌈t·|s|⌉ + 1`` items)
+    probes the index side's ``index_arr`` (``"prefix"``, or ``"oit"`` = the
+    full set); a probe row joins an index row on a shared token iff
+    ``pair_cond`` holds and the positional bound reaches ``need`` (the
+    overlap the mine's threshold demands). Each candidate pair comes out
+    once, with both full sets attached for the in-row verify. Returns
+    ``(a, b, inter, sz_a, sz_b)`` — exact BIGINTs; the mine filters on its
+    own score."""
     dfreq = (
         sets.select(F.explode("items").alias("it"))
         .groupBy("it")
         .agg(F.count(F.lit(1)).alias("dfr"))
     )
     # rarest-first canonical order: sort (df, item) structs, project back.
-    # BROADCAST POLICY (matches the unigram/bigram LM tables,
-    # queries.py q_unigram_logprob_score): dfreq has one row per DISTINCT
-    # item. For token items that is zipf-bounded vocabulary scale, but for
-    # word-n-gram items it grows with total corpus tokens — billions of
-    # rows at 100 TB — so a forced broadcast hint OOMs every executor.
-    # Default broadcast_freq=False leaves the strategy to Catalyst/AQE,
-    # which picks a broadcast at runtime exactly when the table fits;
-    # pass True only for corpora with known-small item universes.
+    # dfreq has one row per DISTINCT item — vocabulary scale for tokens but
+    # corpus-token scale for word-n-gram items, so the join strategy is left
+    # to Catalyst/AQE (a forced broadcast OOMs executors at 100 TB; AQE
+    # broadcasts at runtime exactly when the table fits).
     # ordered feeds three branches (prefix explode + both sides of the array
     # attach) — persist so the sort-by-rarity aggregation runs once; it
     # stays held for the lazy result: run repeated calls inside
     # materialize.scope().
-    maybe_bc = F.broadcast if broadcast_freq else (lambda d: d)
     ordered = materialize(
         sets.select("doc_id", F.explode("items").alias("it"))
-        .join(maybe_bc(dfreq), "it")
+        .join(dfreq, "it")
         .groupBy("doc_id")
         .agg(
             F.expr(
@@ -691,104 +699,75 @@ def prefix_filter_pairs(
     # Emit-once instead of distinct (r12, carrying the r11 minhash result
     # over): a pair sharing m prefix tokens used to be emitted m times and
     # collapsed by a global distinct() — a full shuffle of the PAIR stream,
-    # the largest dataset in the mine (the r11 minhash measurement put that
-    # dedup shuffle at ~85% of hot-corpus pair cost). Now each exploded
-    # prefix row also carries __pre — the tokens BEFORE its own position in
-    # the rarest-first prefix — and the join emits a pair only at its FIRST
-    # shared token: both prefixes are sorted by the same global (dfr, it)
-    # order, so "an earlier shared token exists" is exactly
-    # arrays_overlap(a.__pre, b.__pre), a native (non-lambda) expression
-    # that stays inside whole-stage codegen (the r11 HOF-in-join-condition
-    # lesson does not apply — no interpreted lambda anywhere). The carry is
-    # triangular (row at prefix position k carries k-1 tokens, ~|prefix|²/2
-    # per doc through the exchange) and buys the pair stream never
-    # shuffling at all; candidate ids otherwise stay narrow, and the full
-    # arrays still attach only once per surviving pair.
+    # the largest dataset in the mine. Now each exploded row also carries
+    # __pre — the tokens BEFORE its own position — and the join emits a
+    # pair only at its FIRST shared token: both sides are sorted by the
+    # same global (dfr, it) order, so "an earlier shared token exists" is
+    # exactly arrays_overlap(a.__pre, b.__pre) (for t' < t, "t' in b's
+    # array anywhere" ⟺ "t' before t there"), a native (non-lambda)
+    # expression that stays inside whole-stage codegen.
     # CARRY CAP + SHORT/LONG ARMS (r13; VERDICT r12 "What's wrong" #3): the
-    # triangular carry is quadratic in prefix length — measured 12× slower
-    # than the old distinct on the containment mine's few-dup |s|=1024
-    # fixture (OPTIMIZATION_r13.md task 3; the exchange payload became the
-    # cost, not the pair stream). Fix, two parts:
+    # full carry is triangular (~|s|²/2 tokens per doc through the
+    # exchange; the containment index side explodes the FULL set) —
+    # measured 12× slower than the old distinct at |s|=1024
+    # (OPTIMIZATION_r13.md task 3). Fix, two parts:
     #   1. Each exploded row carries only the first _PRE_CARRY_CAP earlier
-    #      tokens (slice capped via least) — the carry is LINEAR in set
-    #      size. The in-row suppression stays exact whenever the pair's
-    #      first shared token sits within the cap on both sides; deeper
-    #      first matches can emit the pair more than once (the capped
-    #      arrays cannot see the earlier match).
-    #   2. The join splits into doc-length arms: docs whose exploded side
-    #      fits the cap entirely are SHORT; short×short candidates are
-    #      exactly the r12 emit-once plan (full carries, provably
-    #      exactly-once, NO dedup anywhere), and only candidates touching
-    #      a LONG doc flow through a dropDuplicates on the candidate ids.
-    #      Arm membership is a DOC property, so every candidate row of a
-    #      pair lands in the same arm — no cross-arm duplicates. On
-    #      corpora with no long docs the three long arms are empty (AQE
-    #      sees 0-row stages) and the plan costs what r12's did; the
-    #      measured hot-fixture wins (SCALING.md r12) are preserved
-    #      because those fixtures are all-short. Long-arm pairs still
-    #      benefit from emit-once: the capped suppression kills every
-    #      within-cap duplicate in-row, so the dedup exchange ships
-    #      ~unique candidate ids, not the per-shared-token multiplicity
-    #      the old global distinct shipped.
-    # Losslessness is unchanged: at a qualifying pair's first match there
-    # is NO earlier shared token, and the capped arrays are subsets of the
-    # exact earlier-token sets (subsets of disjoint sets are disjoint), so
-    # that row always survives; the long-arm dedup only collapses exact
-    # (a, b) duplicates before the attach, which computes identical
-    # verified columns per pair either way. Pinned by the capped-carry
-    # far-path test (tests/test_text_dedup_vectors.py, cap monkeypatched
-    # to 1) plus the brute-force losslessness properties.
-    # The PPJoin LENGTH filter rides the join condition: Jaccard ≥ t forces
-    # min(|a|,|b|) ≥ t·max(|a|,|b|), so wildly different-sized sets never
-    # become candidates at all (lossless).
-    # POSITIONAL filter (PPJoin, Xiao et al. 2008, §3.2 — r12): a match at
-    # 0-based positions (i, j) of the canonically-sorted sets bounds the
-    # overlap by 1 + min(|a|-i-1, |b|-j-1) (one for the match, the shorter
-    # suffix for everything after; earlier shared tokens are impossible at
-    # the pair's FIRST match, which is the only row emit-once keeps).
-    # Jaccard ≥ t needs overlap ≥ t/(1+t)·(|a|+|b|), so rows whose bound
-    # falls short are pruned BEFORE the arrays_overlap suppression runs —
-    # on hot long-set corpora that test dominates per-candidate cost
+    #      tokens — the carry is LINEAR in set size. The in-row suppression
+    #      stays exact whenever the pair's first shared token sits within
+    #      the cap on both sides; deeper first matches can emit the pair
+    #      more than once (the capped arrays cannot see the earlier match).
+    #   2. The join splits into doc-length arms (_carried): short×short
+    #      candidates are exactly the r12 emit-once plan (full carries,
+    #      provably exactly-once, NO dedup anywhere), and only candidates
+    #      touching a LONG doc flow through a dropDuplicates on the
+    #      candidate ids. Arm membership is a DOC property, so every
+    #      candidate row of a pair lands in the same arm — no cross-arm
+    #      duplicates. On corpora with no long docs the three long arms are
+    #      empty (AQE sees 0-row stages) and the plan costs what r12's did.
+    #      Long-arm pairs still benefit from emit-once: the capped
+    #      suppression kills every within-cap duplicate in-row, so the
+    #      dedup exchange ships ~unique candidate ids.
+    # Losslessness: at a qualifying pair's first match there is NO earlier
+    # shared token, and the capped arrays are subsets of the exact
+    # earlier-token sets (subsets of disjoint sets are disjoint), so that
+    # row always survives; the long-arm dedup only collapses exact (a, b)
+    # duplicates before the attach, which computes identical verified
+    # columns per pair either way.
+    # POSITIONAL filter (PPJoin §3.2 — r12): a match at 0-based positions
+    # (i, j) of the canonically-sorted sets bounds the overlap by
+    # 1 + min(|a|-i-1, |b|-j-1) (one for the match, the shorter suffix for
+    # everything after; earlier shared tokens are impossible at the pair's
+    # FIRST match, the only row emit-once keeps), so rows whose bound falls
+    # short of ``need`` are pruned BEFORE the arrays_overlap suppression
+    # runs — on hot long-set corpora that test dominates per-candidate cost
     # (SCALING.md r12). The 1e-9 slack makes float rounding strictly
-    # conservative (can only under-prune), preserving losslessness: a
-    # genuine pair's first-match row always satisfies the exact bound.
-    pa = ordered.select(
-        "doc_id", "sz", F.size("prefix").alias("__plen"),
-        F.posexplode("prefix").alias("__pos", "ptok"), "prefix"
-    ).select(
-        "doc_id", "sz", "ptok", "__pos", "__plen",
-        F.slice(
-            "prefix", 1, F.least(F.col("__pos"), F.lit(_PRE_CARRY_CAP))
-        ).alias("__pre"),
-    )
-    pa_s = pa.filter(F.col("__plen") <= _PRE_CARRY_CAP)
-    pa_l = pa.filter(F.col("__plen") > _PRE_CARRY_CAP)
+    # conservative (can only under-prune): a genuine pair's first-match row
+    # always satisfies the exact bound.
+    a_short, a_long = _carried(ordered, "prefix")
+    b_short, b_long = (a_short, a_long) if index_arr == "prefix" else _carried(ordered, index_arr)
     ubound = 1 + F.least(
         F.col("a.sz") - F.col("a.__pos") - 1, F.col("b.sz") - F.col("b.__pos") - 1
     )
-    alpha = (threshold / (1.0 + threshold)) * (F.col("a.sz") + F.col("b.sz"))
 
-    def _cand(left: DataFrame, right: DataFrame) -> DataFrame:
+    def cand(left: DataFrame, right: DataFrame) -> DataFrame:
         return (
             left.alias("a")
             .join(
                 right.alias("b"),
                 on=[
                     F.col("a.ptok") == F.col("b.ptok"),
-                    F.col("a.doc_id") < F.col("b.doc_id"),
-                    F.least(F.col("a.sz"), F.col("b.sz"))
-                    >= threshold * F.greatest(F.col("a.sz"), F.col("b.sz")),
-                    ubound >= alpha - 1e-9,
+                    *pair_cond,
+                    ubound >= need - 1e-9,
                     ~F.arrays_overlap(F.col("a.__pre"), F.col("b.__pre")),
                 ],
             )
             .select(F.col("a.doc_id").alias("a"), F.col("b.doc_id").alias("b"))
         )
 
-    pairs = _cand(pa_s, pa_s).union(
-        _cand(pa_l, pa_s)
-        .union(_cand(pa_s, pa_l))
-        .union(_cand(pa_l, pa_l))
+    pairs = cand(a_short, b_short).union(
+        cand(a_long, b_short)
+        .union(cand(a_short, b_long))
+        .union(cand(a_long, b_long))
         .dropDuplicates(["a", "b"])
     )
     left = ordered.select(
@@ -799,9 +778,52 @@ def prefix_filter_pairs(
         F.col("doc_id").alias("b"), F.col("oit").alias("tb"),
         F.col("sz").alias("sz_b"),
     )
-    cand = pairs.join(left, "a").join(right, "b")
     inter = F.size(F.array_intersect("ta", "tb")).cast("bigint")
-    scored = cand.select("a", "b", inter.alias("inter"), "sz_a", "sz_b")
+    return pairs.join(left, "a").join(right, "b").select(
+        "a", "b", inter.alias("inter"), "sz_a", "sz_b"
+    )
+
+
+def prefix_filter_pairs(
+    df: DataFrame,
+    items_col: str,
+    id_col: str = "doc_id",
+    threshold: float = 0.8,
+) -> DataFrame:
+    """PPJoin-style LOSSLESS set-similarity join over an array column.
+
+    Order each row's (distinct) item set rarest-item-first by global document
+    frequency, keep only the first ``|s| - ⌈t·|s|⌉ + 1`` items as the
+    "prefix", and generate candidate pairs ONLY from rows sharing a prefix
+    item — the prefix-filter theorem guarantees every pair with Jaccard ≥ t
+    shares at least one, so exact verification of candidates (in-row
+    ``array_intersect`` of the two full sets) returns exactly the unpruned
+    O(n²) answer. The core is :func:`_ppjoin`; this mine adds the PPJoin
+    LENGTH filter (Jaccard ≥ t forces min(|a|,|b|) ≥ t·max(|a|,|b|), so
+    wildly different-sized sets never become candidates) and the overlap
+    Jaccard ≥ t demands: t/(1+t)·(|a|+|b|).
+
+    Why this is the 100 TB default over a raw inverted-index join: the naive
+    join keys on EVERY item, so one stop-item ("of the" shingles, common
+    tokens) with document frequency f contributes f² candidate pairs on a
+    single reducer key. Here the frequent items never enter the join — only
+    the ~(1-t)·|s| rarest per row do — and verification touches the two
+    bounded item arrays, never the corpus.
+
+    Returns ``(a, b, inter, sz_a, sz_b, jaccard)``; ``inter``/sizes are exact
+    BIGINTs, the filter compares the raw (unrounded) ratio.
+    """
+    scored = _ppjoin(
+        _item_sets(df, items_col, id_col),
+        threshold,
+        "prefix",
+        [
+            F.col("a.doc_id") < F.col("b.doc_id"),
+            F.least(F.col("a.sz"), F.col("b.sz"))
+            >= threshold * F.greatest(F.col("a.sz"), F.col("b.sz")),
+        ],
+        (threshold / (1.0 + threshold)) * (F.col("a.sz") + F.col("b.sz")),
+    )
     jac = F.col("inter").cast("double") / (
         F.col("sz_a") + F.col("sz_b") - F.col("inter")
     )
@@ -813,7 +835,6 @@ def containment_pairs(
     items_col: str,
     id_col: str = "doc_id",
     threshold: float = 0.8,
-    broadcast_freq: bool = False,
 ) -> DataFrame:
     """ASYMMETRIC set-containment join: pairs ``(a, b)`` where
     ``C(a→b) = |a ∩ b| / |a| ≥ threshold`` — "a is mostly contained in b".
@@ -830,142 +851,28 @@ def containment_pairs(
     arbitrarily larger), but join keys are only a-prefix items, i.e. the
     rarest of each probe row: stop-item posting lists never become join
     keys unless a tiny doc is all stop items. A size guard
-    ``|b| ≥ t·|a|`` (implied by inter ≤ |b|) rides the join condition.
-    Verification is an in-row ``array_intersect`` of the two bounded item
-    arrays — exactly the unpruned O(n²) answer, as with
-    :func:`prefix_filter_pairs`.
+    ``|b| ≥ t·|a|`` (implied by inter ≤ |b|) rides the join condition, and
+    the positional bound must reach t·|a|. Verification is an in-row
+    ``array_intersect`` of the two bounded item arrays — exactly the
+    unpruned O(n²) answer, as with :func:`prefix_filter_pairs` (same core,
+    :func:`_ppjoin`; the carry cap matters MOST here, where the index side
+    explodes the full set).
 
     Returns ``(a, b, inter, sz_a, sz_b, containment)``; both directions of
-    a mutual containment appear as separate rows.
-
-    BROADCAST POLICY: the gram document-frequency table has one row per
-    DISTINCT item — corpus-token scale for word-n-gram items, so the
-    default ``broadcast_freq=False`` leaves the join strategy to AQE
-    (broadcast happens at runtime iff the table fits); force ``True`` only
-    for known-small item universes. The ``ordered`` relation feeds three
-    plan branches and stays held for the lazy result: run repeated calls
-    inside ``materialize.scope()``.
+    a mutual containment appear as separate rows. The ``ordered`` relation
+    stays held for the lazy result: run repeated calls inside
+    ``materialize.scope()``.
     """
-    sets = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.array_distinct(F.col(items_col)).alias("items"),
-    ).filter(F.size("items") > 0)
-    dfreq = (
-        sets.select(F.explode("items").alias("it"))
-        .groupBy("it")
-        .agg(F.count(F.lit(1)).alias("dfr"))
+    scored = _ppjoin(
+        _item_sets(df, items_col, id_col).filter(F.size("items") > 0),
+        threshold,
+        "oit",
+        [
+            F.col("a.doc_id") != F.col("b.doc_id"),
+            F.col("b.sz") >= threshold * F.col("a.sz"),
+        ],
+        threshold * F.col("a.sz"),
     )
-    maybe_bc = F.broadcast if broadcast_freq else (lambda d: d)
-    ordered = materialize(
-        sets.select("doc_id", F.explode("items").alias("it"))
-        .join(maybe_bc(dfreq), "it")
-        .groupBy("doc_id")
-        .agg(
-            F.expr(
-                "transform(array_sort(collect_list(struct(dfr, it))), s -> s.it)"
-            ).alias("oit")
-        )
-        .select(
-            "doc_id",
-            "oit",
-            F.size("oit").cast("bigint").alias("sz"),
-            F.expr(
-                f"slice(oit, 1, size(oit) - CAST(ceil({threshold} * size(oit)) AS INT) + 1)"
-            ).alias("prefix"),
-        )
-        # NOT size_by (r8 A/B): this |docs|-row relation EXPLODES into
-        # prefix-token rows downstream, so its partition count sets the map
-        # parallelism of the expanded join build — sizing it to ~250k input
-        # rows (4 partitions at sf0.1) throttled the prefix join 4.5x
-        # (dedup_jaccard_pairs 5.1 -> 22.7 s). The sizing rule applies to
-        # relations consumed at their own row count (graph edges, band
-        # tables), never to pre-explosion inputs.
-    )
-    # Emit-once instead of distinct (r12): same construction as
-    # prefix_filter_pairs — each exploded row carries __pre, the tokens
-    # before its own position in the shared global (dfr, it) order, and the
-    # join emits a pair only at its FIRST shared token
-    # (¬arrays_overlap(a.__pre, b.__pre); for t' < t, "t' ∈ b.oit anywhere"
-    # ⟺ "t' before t in b.oit", so the triangular slices on both sides
-    # capture exactly the earlier-shared-token test). The asymmetric cost:
-    # the index side explodes the FULL item set, so its triangular carry is
-    # ~|s|²/2 tokens per doc through the exchange (the probe side stays
-    # ~|prefix|²/2) — bought back by the pair stream never shuffling; see
-    # the r12 A/B in SCALING.md.
-    # POSITIONAL filter, containment form (r12; see prefix_filter_pairs):
-    # a match at 0-based positions (i, j) bounds the intersection by
-    # 1 + min(|a|-i-1, |b|-j-1); containment ≥ t needs inter ≥ t·|a|, so
-    # short-suffix rows are pruned before the arrays_overlap suppression —
-    # the dominant per-candidate cost on long sets, and doubly valuable
-    # here where the index side explodes the FULL set. 1e-9 slack keeps
-    # the float comparison strictly conservative (lossless).
-    # CARRY CAP + SHORT/LONG ARMS (r13): same construction and proof as
-    # prefix_filter_pairs — see the note there. It matters MOST here: the
-    # index side explodes the FULL item set, so the uncapped triangular
-    # carry was ~|s|²/2 tokens/doc (measured 12× slower than the old
-    # distinct at |s|=1024 on the few-dup fixture,
-    # OPTIMIZATION_r13.md task 3); capped, it is ≤ _PRE_CARRY_CAP·|s| —
-    # linear. Index-side docs are LONG when |oit| exceeds the cap (the
-    # probe side when its prefix does); only candidates touching a long
-    # doc pay the id-level dedup.
-    pa = ordered.select(
-        "doc_id", "sz", F.size("prefix").alias("__plen"),
-        F.posexplode("prefix").alias("__pos", "ptok"), "prefix"
-    ).select(
-        "doc_id", "sz", "ptok", "__pos", "__plen",
-        F.slice(
-            "prefix", 1, F.least(F.col("__pos"), F.lit(_PRE_CARRY_CAP))
-        ).alias("__pre"),
-    )
-    pb = ordered.select(
-        "doc_id", "sz", F.posexplode("oit").alias("__pos", "ptok"), "oit"
-    ).select(
-        "doc_id", "sz", "ptok", "__pos",
-        F.slice(
-            "oit", 1, F.least(F.col("__pos"), F.lit(_PRE_CARRY_CAP))
-        ).alias("__pre"),
-    )
-    pa_s = pa.filter(F.col("__plen") <= _PRE_CARRY_CAP)
-    pa_l = pa.filter(F.col("__plen") > _PRE_CARRY_CAP)
-    pb_s = pb.filter(F.col("sz") <= _PRE_CARRY_CAP)
-    pb_l = pb.filter(F.col("sz") > _PRE_CARRY_CAP)
-    ubound = 1 + F.least(
-        F.col("a.sz") - F.col("a.__pos") - 1, F.col("b.sz") - F.col("b.__pos") - 1
-    )
-
-    def _cand(left: DataFrame, right: DataFrame) -> DataFrame:
-        return (
-            left.alias("a")
-            .join(
-                right.alias("b"),
-                on=[
-                    F.col("a.ptok") == F.col("b.ptok"),
-                    F.col("a.doc_id") != F.col("b.doc_id"),
-                    F.col("b.sz") >= threshold * F.col("a.sz"),
-                    ubound >= threshold * F.col("a.sz") - 1e-9,
-                    ~F.arrays_overlap(F.col("a.__pre"), F.col("b.__pre")),
-                ],
-            )
-            .select(F.col("a.doc_id").alias("a"), F.col("b.doc_id").alias("b"))
-        )
-
-    pairs = _cand(pa_s, pb_s).union(
-        _cand(pa_l, pb_s)
-        .union(_cand(pa_s, pb_l))
-        .union(_cand(pa_l, pb_l))
-        .dropDuplicates(["a", "b"])
-    )
-    left = ordered.select(
-        F.col("doc_id").alias("a"), F.col("oit").alias("ta"),
-        F.col("sz").alias("sz_a"),
-    )
-    right = ordered.select(
-        F.col("doc_id").alias("b"), F.col("oit").alias("tb"),
-        F.col("sz").alias("sz_b"),
-    )
-    cand = pairs.join(left, "a").join(right, "b")
-    inter = F.size(F.array_intersect("ta", "tb")).cast("bigint")
-    scored = cand.select("a", "b", inter.alias("inter"), "sz_a", "sz_b")
     cont = F.col("inter").cast("double") / F.col("sz_a")
     return scored.filter(cont >= threshold).withColumn("containment", cont)
 
@@ -1071,6 +978,33 @@ def simhash_df(
     return g.select(F.col(id_col), sh.alias("sh"))
 
 
+def _block(sh: Column, b: int, block_bits: int) -> Column:
+    """Block ``b`` of a SimHash: bits ``[b·block_bits, (b+1)·block_bits)``."""
+    return F.shiftright(sh, b * block_bits).bitwiseAND(F.lit((1 << block_bits) - 1))
+
+
+def simhash_band_table(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    bits: int = 32,
+    blocks: int = 4,
+) -> DataFrame:
+    """The SimHash pigeonhole index: one ``(id, sh, band, bucket)`` row per
+    document per block — ``band`` is the block number, ``bucket`` the
+    block's ``bits/blocks``-bit value, ``sh`` the full hash for the verify
+    stage. Any two hashes within Hamming distance < ``blocks`` agree on ≥1
+    whole block, so an equi-join on (band, bucket) generates every such
+    pair (no cross product). Same ``band``/``bucket`` columns as
+    :func:`minhash_band_table`, so :func:`lsh_mega_buckets` runs on it
+    unchanged."""
+    return _explode_bands(
+        simhash_df(df, text_col, id_col, bits),
+        [id_col, "sh"],
+        [_block(F.col("sh"), b, bits // blocks) for b in range(blocks)],
+    )
+
+
 def simhash_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -1081,39 +1015,28 @@ def simhash_pairs(
     block_cap: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs by SimHash with pigeonhole blocking: split the hash into
-    ``blocks`` blocks; any pair within Hamming distance < ``blocks`` agrees on
-    ≥1 whole block, so candidates come from equi-joins on block values (no
-    cross product). Verify stage computes the true Hamming distance via
-    ``bit_count(xor)``.
+    ``blocks`` blocks (:func:`simhash_band_table`); any pair within Hamming
+    distance < ``blocks`` agrees on ≥1 whole block, so candidates come from
+    equi-joins on block values (no cross product). Verify stage computes the
+    true Hamming distance via ``bit_count(xor)``.
 
-    **Emit-once instead of distinct (r12, carrying the r11 minhash result
-    over).** A pair within Hamming ≤ ``max_hamming`` typically agrees on
-    SEVERAL whole blocks, so it used to be emitted once per agreeing block
-    and collapsed by a global ``distinct()`` — a full shuffle of the pair
-    stream, the largest dataset in the mine (the r11 minhash measurement
-    put that dedup shuffle at ~85% of hot-corpus pair cost, SCALING.md
-    r11). Now the join emits a pair only at its FIRST agreeing block: both
-    sides already carry the full hash ``sh``, so "block j also agreed" is
-    plain bit arithmetic (``shiftright``/``bitwiseAND`` — no carried
-    arrays at all, cheaper than the minhash ``__bkts`` form), unrolled
-    over the compile-time block count so whole-stage codegen keeps it.
-    Under ``block_cap`` the suppression must not count an earlier agreeing
-    block whose (blk, val) group was DROPPED by the cap (the capped
-    contract is "pair surfaces iff it agrees in any KEPT block"), so each
-    doc carries block-ordered ``__kept`` flags — one extra groupBy+join on
-    the tiny block table, paid only when the cap is on. Output is
-    bit-identical to the old distinct-based plan; the pair stream never
-    shuffles.
+    Candidates come from the emit-once self-join shared with
+    :func:`minhash_lsh_pairs` (:func:`_banded_pairs`, r12): a pair within
+    Hamming ≤ ``max_hamming`` typically agrees on SEVERAL whole blocks but
+    is emitted only at its FIRST agreeing block, so the pair stream never
+    shuffles through a distinct. Both sides carry the full hash ``sh``, so
+    "block j also agreed" is plain bit arithmetic (``shiftright``/
+    ``bitwiseAND`` — no carried arrays at all). Output is bit-identical to
+    the old distinct-based plan.
 
-    ``block_cap`` (off by default): drop (blk, val) groups larger than this
-    before the self-join — the same mega-bucket guard as
+    ``block_cap`` (off by default): drop (band, bucket) block groups larger
+    than this before the self-join — the same mega-bucket guard as
     :func:`minhash_lsh_pairs` ``bucket_cap`` (a template block of s docs is
     s² candidate pairs on one reducer key; see SCALING.md round-4 — and the
     round-10 hot-band probe: AQE's skew split cannot see that s² OUTPUT
     amplification, so the cap is the only defense, not a belt-and-braces).
     What the cap drops comes back as cluster labels via
-    ``lsh_mega_buckets(stacked, cap, band_col="blk", bucket_col="val")``
-    over the same block table.
+    ``lsh_mega_buckets(simhash_band_table(...), cap)``.
 
     Scale sizing (measured, SCALING.md round-5): block-value cardinality is
     ``2^(bits/blocks)`` — with the 32-bit/4-block default that is only 256
@@ -1125,113 +1048,15 @@ def simhash_pairs(
     with ``max_hamming`` scaled ~2× for the longer hash; keep ``block_cap``
     as a template-bucket safety valve only, sized ≫ corpus/2^(bits/blocks)."""
     block_bits = bits // blocks
-    sh = simhash_df(df, text_col, id_col, bits)
-    stacked = sh.select(
+    hamming = F.bit_count(F.col("l.sh").bitwiseXOR(F.col("r.sh"))).alias("hamming")
+    return _banded_pairs(
+        simhash_band_table(df, text_col, id_col, bits, blocks),
         id_col,
-        "sh",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("blk"),
-                    F.shiftright(F.col("sh"), b * block_bits).bitwiseAND(
-                        F.lit((1 << block_bits) - 1)
-                    ).alias("val"),
-                )
-                for b in range(blocks)
-            ])
-        ).alias("bb"),
-    ).select(id_col, "sh", "bb.blk", "bb.val")
-    capped = block_cap is not None
-    if capped:
-        # persist the raw block table: three consumers derive from it below
-        # (size scan, kept-flag build, the anti-join) and none should
-        # recompute the token→simhash pipeline; run repeated calls inside
-        # materialize.scope().
-        stacked = materialize(stacked)
-        big = (
-            stacked.groupBy("blk", "val")
-            .agg(F.count(F.lit(1)).alias("__bs"))
-            .filter(F.col("__bs") > block_cap)
-            .select("blk", "val")
-        )
-        # block-ordered kept flags per doc — same construction (and same
-        # capped contract) as minhash_lsh_pairs' __kept: the emit-once
-        # suppression counts an earlier agreeing block as a collision ONLY
-        # if that block's group survived the cap. As there, only docs that
-        # TOUCH a dropped group can carry a false flag, so the per-doc
-        # groupBy runs over template members only and everyone else
-        # coalesces to the all-true literal through a left join.
-        touched = (
-            stacked.join(big, ["blk", "val"], "left_semi")
-            .select(id_col)
-            .distinct()
-        )
-        kept_arr = (
-            stacked.join(touched, id_col, "left_semi")
-            .join(
-                big.withColumn("__dropped", F.lit(True)),
-                ["blk", "val"],
-                "left",
-            )
-            .select(id_col, "blk", F.col("__dropped").isNull().alias("__k"))
-            .groupBy(id_col)
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("blk", "__k"))),
-                    lambda s: s["__k"],
-                ).alias("__kept")
-            )
-        )
-        all_true = F.array(*[F.lit(True) for _ in range(blocks)])
-        stacked = (
-            stacked.join(big, ["blk", "val"], "left_anti")
-            .join(kept_arr, id_col, "left")
-            .withColumn("__kept", F.coalesce(F.col("__kept"), all_true))
-        )
-    # persist before the self-join — same rationale as minhash_lsh_pairs: a
-    # broadcast join would otherwise recompute the token→simhash pipeline on
-    # both branches; the (id, sh, blk, val) table is tiny relative to the text
-    stacked = materialize(stacked)
-
-    def first_hit() -> Column:
-        # emit-once: no EARLIER block already surfaced this pair — for every
-        # j < blk, the block-j values differ (or, under a cap, block j was
-        # dropped). Block-j values come straight from the carried hash via
-        # shiftright/bitwiseAND (no arrays), UNROLLED over the compile-time
-        # block count so the predicate stays inside whole-stage codegen
-        # (r11 lesson: HOF lambdas in a JOIN CONDITION are interpreted per
-        # candidate and measured 3.4× worse than the shuffle they replace).
-        cond = F.lit(True)
-        for j in range(blocks - 1):
-            blkval_eq = (
-                F.shiftright(F.col("a.sh"), j * block_bits).bitwiseAND(
-                    F.lit((1 << block_bits) - 1)
-                )
-                == F.shiftright(F.col("b.sh"), j * block_bits).bitwiseAND(
-                    F.lit((1 << block_bits) - 1)
-                )
-            )
-            t = (F.col("a.blk") <= F.lit(j)) | ~blkval_eq
-            if capped:
-                t = t | ~F.col("a.__kept")[j]
-            cond = cond & t
-        return cond
-
-    a, b = stacked.alias("a"), stacked.alias("b")
-    cand = a.join(
-        b,
-        on=[
-            F.col("a.blk") == F.col("b.blk"),
-            F.col("a.val") == F.col("b.val"),
-            F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-            first_hit(),
-        ],
-    ).select(
-        F.col(f"a.{id_col}").alias("a"),
-        F.col(f"b.{id_col}").alias("b"),
-        F.bit_count(F.col("a.sh").bitwiseXOR(F.col("b.sh"))).alias("hamming"),
-    )
-    return cand.filter(F.col("hamming") <= max_hamming)
+        blocks,
+        lambda s, j: _block(F.col(f"{s}.sh"), j, block_bits),
+        bucket_cap=block_cap,
+        extra=(hamming,),
+    ).filter(F.col("hamming") <= max_hamming)
 
 
 # ---------------------------------------------------------------------------
@@ -1282,6 +1107,18 @@ def embedding_neardup_pairs(
 # ---------------------------------------------------------------------------
 # Duplicate clustering (connected components)
 # ---------------------------------------------------------------------------
+
+
+def _is_star_forest(edges: DataFrame) -> bool:
+    """Whether canonical ``(big, small)`` edges form a star forest: no
+    ``small`` endpoint is also a ``big`` endpoint, and every ``big`` has
+    exactly one edge. ONE job on the checkpointed edges — both violations
+    feed one ``limit(1)`` (``{(5,1),(4,1),(4,2)}`` fails only the second)."""
+    chained = edges.alias("x").join(
+        edges.alias("y"), F.col("x.small") == F.col("y.big"), "left_semi"
+    ).select("big")
+    shared = edges.groupBy("big").count().where("count > 1").select("big")
+    return chained.union(shared).limit(1).count() == 0
 
 
 def connected_components(
@@ -1336,8 +1173,9 @@ def connected_components(
     lazily into a single checkpoint, and the convergence signature (edge
     count + exact DECIMAL(38,0) endpoint sums) rides that job as
     ``observe`` metrics. When the signature repeats, convergence is PROVEN
-    (never assumed) by one star-forest check — no ``small`` endpoint also
-    appears as a ``big`` endpoint — before the loop exits. Lineage is cut
+    (never assumed) by one star-forest check (:func:`_is_star_forest`: no
+    ``small`` endpoint also appears as a ``big`` endpoint, and each ``big``
+    appears once) before the loop exits. Lineage is cut
     per round: ``checkpoint="local"`` (default) uses executor-local
     storage — fastest, but a lost executor forces recompute from source
     lineage; on a real cluster pass ``checkpoint="reliable"`` after
@@ -1433,21 +1271,11 @@ def connected_components(
         if rounds > 1:
             release(e)  # the superseded round; e0 stays for the self-pairs
         e = nxt
-        if sig == prev:
-            # candidate fixpoint — PROVE it before exiting: a star forest
-            # has no ``small`` endpoint that also appears as a ``big``
-            # endpoint (signature equality alone could collide). One
-            # cheap job on the checkpointed edges, run only at the
-            # candidate round, never per round.
-            nonstar = (
-                e.alias("x")
-                .join(e.alias("y"), F.col("x.small") == F.col("y.big"), "left_semi")
-                .limit(1)
-                .count()
-            )
-            if nonstar == 0:
-                converged = True
-                break
+        # candidate fixpoint — PROVE it before exiting (signature equality
+        # alone could collide); checked only at the candidate round
+        if sig == prev and _is_star_forest(e):
+            converged = True
+            break
         prev = sig
     if not converged:
         # ADVICE r8: rounds == max_iter alone cannot distinguish "converged

@@ -1638,14 +1638,14 @@ def q_stream_neardup_screen(spark, sf_dir):
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{d}/b*")
     )
-    # repartition INSIDE the micro-batch before the stateless fold: a
+    # repartition INSIDE the micro-batch before the in-row fold: a
     # single-file trigger arrives as ONE partition, which would run the
     # CPU-heavy in-row minhash fold on one core regardless of cluster width
     # (the streaming analog of load_wide's up-front exchange; the r5
     # streaming probe measured 6.3× at 5× data before this, 1-partition
     # serial — see SCALING.md streaming section)
     wide = stream.repartition(spark.sparkContext.defaultParallelism)
-    new_bands = dedup.minhash_band_table(wide, stateless=True).select(
+    new_bands = dedup.minhash_band_table(wide).select(
         F.col("doc_id").alias("b"), "band", "bucket"
     )
     pairs = (
@@ -3806,8 +3806,8 @@ def q_stream_static_enrich(spark, sf_dir):
     ``with_latest_from``/stream-static join shape (SURVEY §2.2 'Combine
     streams', A27) registered as a first-class streaming query: an unbounded
     event stream hash-enriched per micro-batch against a bounded dimension
-    table, no state store, no watermark (stream-static inner joins are
-    stateless — each batch joins against the static relation as-of that
+    table, no state store, no watermark (stream-static inner joins keep
+    no state — each batch joins against the static relation as-of that
     batch). The dimension side carries an explicit broadcast hint: dims that
     fit in executor memory should ship once per executor rather than shuffle
     every micro-batch's events; for dims that outgrow broadcast, drop the

@@ -130,7 +130,7 @@ def lsh_topk(
     cond = F.lit(False)
     for t in range(tables):
         tseed = seed + t
-        bucket_col = hyperplane_bucket(vec_col, dim, planes, tseed)
+        bucket = hyperplane_bucket(vec_col, dim, planes, tseed)
         hps = _hyperplanes(dim, planes, tseed)
         margins = [float(np.dot(query_vec, h)) for h in hps]
         qb = 0
@@ -142,7 +142,7 @@ def lsh_topk(
         buckets = [qb] + [
             qb ^ (1 << i) for i in flip_order[: max(0, probes - 1)]
         ]
-        cond = cond | bucket_col.isin(*buckets)
+        cond = cond | bucket.isin(*buckets)
     return brute_force_topk(df.filter(cond), query_vec, k, vec_col, id_col)
 
 

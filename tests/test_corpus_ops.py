@@ -5,36 +5,36 @@ filter (packed-bitmap build + probe)."""
 import pytest
 from pyspark.sql import functions as F
 
-from makinage_spark import dedup, smath
+from makinage_spark import dedup, materialize, smath
 
 
 def test_global_running_sum_matches_single_reducer_window(spark):
     rows = [(i, (i * 37) % 11, (i * 13) % 7 + 1) for i in range(200)]
     df = spark.createDataFrame(rows, "id long, key long, v long")
-    got = {
-        r.id: r.cum
-        for r in smath.global_running_sum(
-            df, [F.col("key").desc(), F.col("id")], "v", "cum"
-        ).collect()
-    }
-    from pyspark.sql import Window
+    with materialize.scope():
+        got = {
+            r.id: r.cum
+            for r in smath.global_running_sum(
+                df, [F.col("key").desc(), F.col("id")], "v", "cum"
+            ).collect()
+        }
+        from pyspark.sql import Window
 
-    w = (
-        Window.orderBy(F.col("key").desc(), F.col("id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    want = {r.id: r.cum for r in df.withColumn("cum", F.sum("v").over(w)).collect()}
-    spark.catalog.clearCache()
+        w = (
+            Window.orderBy(F.col("key").desc(), F.col("id"))
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        )
+        want = {r.id: r.cum for r in df.withColumn("cum", F.sum("v").over(w)).collect()}
     assert got == want
 
 
 def test_global_running_sum_empty_and_single_row(spark):
     df = spark.createDataFrame([], "id long, v long")
-    assert smath.global_running_sum(df, ["id"], "v", "cum").count() == 0
-    spark.catalog.clearCache()
+    with materialize.scope():
+        assert smath.global_running_sum(df, ["id"], "v", "cum").count() == 0
     one = spark.createDataFrame([(1, 5)], "id long, v long")
-    [r] = smath.global_running_sum(one, ["id"], "v", "cum").collect()
-    spark.catalog.clearCache()
+    with materialize.scope():
+        [r] = smath.global_running_sum(one, ["id"], "v", "cum").collect()
     assert r.cum == 5
 
 

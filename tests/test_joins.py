@@ -2,7 +2,7 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from makinage_spark import joins, ops, pipe
+from makinage_spark import joins, materialize, ops, pipe
 
 
 def ts(h, m=0):
@@ -78,12 +78,12 @@ def test_sorted_merge_strict_global_order(spark):
                 part, "src string, id long, ts double"
             ).repartition(5)
         )
-    out = joins.sorted_merge(*srcs, order=["ts", "src", "id"]).collect()
-    expect = sorted(((r.ts, r.src, r.id) for r in out))
-    got = [(r.ts, r.src, r.id) for r in sorted(out, key=lambda r: r.seq)]
-    assert got == expect
-    assert sorted(r.seq for r in out) == list(range(1, 301))
-    spark.catalog.clearCache()
+    with materialize.scope():
+        out = joins.sorted_merge(*srcs, order=["ts", "src", "id"]).collect()
+        expect = sorted(((r.ts, r.src, r.id) for r in out))
+        got = [(r.ts, r.src, r.id) for r in sorted(out, key=lambda r: r.seq)]
+        assert got == expect
+        assert sorted(r.seq for r in out) == list(range(1, 301))
 
 
 def test_salted_join_equals_plain_join(spark):

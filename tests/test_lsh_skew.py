@@ -12,10 +12,14 @@ measured in tools/skewed_band_probe.py). These tests pin the two defenses:
   enumeration comes back as cluster labels over the same band table.
 """
 
+import itertools
+from collections import defaultdict
+
+import pytest
 from conftest import broadcast_disabled
 from pyspark.sql import functions as F
 
-from makinage_spark import dedup
+from makinage_spark import dedup, materialize
 
 
 def _corpus(spark, n_tpl=40, n_bg=60):
@@ -78,31 +82,10 @@ def test_mega_buckets_label_what_the_cap_drops(spark):
 
 
 def test_mega_bucket_labels_generalize_to_simhash_blocks(spark):
-    """The labels complement works on any block-keyed table with the same
-    s² exposure — here the simhash pigeonhole table (blk, val)."""
+    """The labels complement works on any band table with the same s²
+    exposure — here the simhash pigeonhole table."""
     docs = _corpus(spark)
-    sh = dedup.simhash_df(docs)
-    blocks = 4
-    block_bits = 32 // blocks
-    stacked = sh.select(
-        "doc_id",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("blk"),
-                    F.shiftright(F.col("sh"), b * block_bits)
-                    .bitwiseAND(F.lit((1 << block_bits) - 1))
-                    .alias("val"),
-                )
-                for b in range(blocks)
-            ])
-        ).alias("bb"),
-    ).select("doc_id", "bb.blk", "bb.val")
-    labels = dedup.lsh_mega_buckets(
-        stacked, bucket_cap=8, band_col="blk", bucket_col="val"
-    )
-    from collections import defaultdict
-
+    labels = dedup.lsh_mega_buckets(dedup.simhash_band_table(docs), bucket_cap=8)
     lab = defaultdict(set)
     for r in labels.collect():
         lab[r.doc_id].add(r.cluster)
@@ -151,3 +134,62 @@ def test_salted_join_shuffles_on_block_key(spark):
 
         exchanges = re.findall(r"Exchange hashpartitioning\([^)]*\)", plan)
         assert any("__bj" in e for e in exchanges), exchanges
+
+
+def _banding_reference(rows, cap=None):
+    """Pure-Python banding of a collected band table: every pair of docs
+    sharing a (band, bucket) group of at most ``cap`` members."""
+    groups = defaultdict(list)
+    for r in rows:
+        groups[(r.band, r.bucket)].append(r.doc_id)
+    pairs = set()
+    for ids in groups.values():
+        if cap is None or len(ids) <= cap:
+            pairs.update(itertools.combinations(sorted(ids), 2))
+    return pairs
+
+
+def _kernel_corpus(spark):
+    """``_corpus`` plus the capped emit-once edge: ten copies of T fill
+    mega buckets in bands 0, 1 and 3 that the two "ah " + T docs share,
+    while band 2 puts those two alone in a kept bucket (the fixture of
+    test_minhash_cap_emits_pair_whose_first_equal_band_is_dropped)."""
+    t = ("lorem ipsum dolor sit amet consectetur adipiscing elit sed do "
+         "eiusmod tempor")
+    edge = [(1000 + i, t) for i in range(10)] + [(1010, "ah " + t), (1011, "ah " + t)]
+    return _corpus(spark).unionByName(
+        spark.createDataFrame(edge, "doc_id long, text string")
+    )
+
+
+@pytest.mark.parametrize(
+    "mode", [{}, {"bucket_cap": 8}, {"salt": 4, "salt_threshold": 8}],
+    ids=["plain", "bucket_cap", "salted"],
+)
+def test_minhash_pairs_equal_python_banding(spark, mode):
+    """The emit-once banded self-join against a pure-Python banding of
+    the collected minhash_band_table: same pair set, each pair once."""
+    docs = _kernel_corpus(spark)
+    with materialize.scope():
+        rows = dedup.minhash_band_table(docs).collect()
+        got = [(r.a, r.b) for r in dedup.minhash_lsh_pairs(docs, **mode).collect()]
+    want = _banding_reference(rows, mode.get("bucket_cap"))
+    assert len(got) == len(set(got)) and set(got) == want
+    capped = _banding_reference(rows, 8)
+    assert capped != _banding_reference(rows) and (1010, 1011) in capped
+
+
+@pytest.mark.parametrize("block_cap", [None, 8], ids=["plain", "block_cap"])
+def test_simhash_pairs_equal_python_blocking(spark, block_cap):
+    """The same kernel under simhash_pairs against a pure-Python blocking
+    of the collected simhash_band_table, Hamming-filtered."""
+    docs = _kernel_corpus(spark)
+    with materialize.scope():
+        rows = dedup.simhash_band_table(docs).collect()
+        got = [(r.a, r.b, r.hamming) for r in
+               dedup.simhash_pairs(docs, max_hamming=3, block_cap=block_cap).collect()]
+    sh = {r.doc_id: r.sh for r in rows}
+    want = {(a, b, bin(sh[a] ^ sh[b]).count("1"))
+            for a, b in _banding_reference(rows, block_cap)}
+    assert len(got) == len(set(got))
+    assert set(got) == {w for w in want if w[2] <= 3}

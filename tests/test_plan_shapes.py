@@ -6,6 +6,7 @@ Python UDF sneaking into a hot path.
 
 import pytest
 
+from makinage_spark import materialize
 from makinage_spark.queries import QUERIES
 
 SF = "/root/testdata/sf0.01"
@@ -51,11 +52,11 @@ def test_exists_decorrelates_to_semi_join(spark):
 
 
 def test_minhash_pairs_reuses_band_table(spark):
-    df = QUERIES["dedup_minhash_pairs"](spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # persisted band table → InMemoryTableScan on both join branches
-    assert plan.count("InMemoryTableScan") >= 2
-    spark.catalog.clearCache()
+    with materialize.scope():
+        df = QUERIES["dedup_minhash_pairs"](spark, SF)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        # persisted band table → InMemoryTableScan on both join branches
+        assert plan.count("InMemoryTableScan") >= 2
 
 
 def formatted_plan_of(spark, name):
@@ -81,27 +82,27 @@ def test_quality_ensemble_single_tokenize(spark):
     # the judge-flagged 4x re-tokenization must stay fixed: exactly ONE
     # regexp tokenization of the corpus in the whole plan, the rest reading
     # the persisted token/count relations
-    plan = formatted_plan_of(spark, "quality_ensemble")
-    assert plan.lower().count("regexp_extract_all") == 1
-    assert plan.count("InMemoryTableScan") >= 2
-    spark.catalog.clearCache()
+    with materialize.scope():
+        plan = formatted_plan_of(spark, "quality_ensemble")
+        assert plan.lower().count("regexp_extract_all") == 1
+        assert plan.count("InMemoryTableScan") >= 2
 
 
 def test_global_cumsum_uses_range_partitioning(spark):
     # token_budget_pick must NOT funnel the corpus through one task: the
     # two-phase cumsum plans a rangepartitioning exchange; the only
     # SinglePartition exchanges sit above control-plane-sized aggregates
-    plan = plan_of(spark, "token_budget_pick")
-    assert "rangepartitioning" in plan
-    spark.catalog.clearCache()
+    with materialize.scope():
+        plan = plan_of(spark, "token_budget_pick")
+        assert "rangepartitioning" in plan
 
 
 def test_bloom_probe_broadcasts_the_bitmap(spark):
     # the ≤1024-row bitmap relation must reach the probe as a broadcast,
     # never a shuffle join against the exploded candidate positions
-    plan = plan_of(spark, "bloom_prune_audit")
-    assert "BroadcastHashJoin" in plan
-    spark.catalog.clearCache()
+    with materialize.scope():
+        plan = plan_of(spark, "bloom_prune_audit")
+        assert "BroadcastHashJoin" in plan
 
 
 def test_shard_manifest_single_shard_exchange(spark):
@@ -143,9 +144,9 @@ def test_pareto_skyline_domain_table_broadcasts(spark):
 def test_kmv_bottomk_is_partial_topk(spark):
     # each bottom-k sketch is a TakeOrderedAndProject: per-partition
     # partial top-k, 256 rows cross the exchange — three sketches minimum
-    plan = plan_of(spark, "kmv_overlap_estimate")
-    assert plan.count("TakeOrderedAndProject") >= 3
-    spark.catalog.clearCache()
+    with materialize.scope():
+        plan = plan_of(spark, "kmv_overlap_estimate")
+        assert plan.count("TakeOrderedAndProject") >= 3
 
 
 def test_bm25_postings_pruned_by_broadcast_query_terms(spark):
@@ -209,6 +210,6 @@ def test_split_leakage_corpus_side_stays_mapside(spark):
 def test_entity_resolution_has_no_cartesian(spark):
     # BNLJ appears only as 1-row broadcast crossJoins inside CC's convergence
     # check — a CartesianProduct anywhere means the blocking key was lost
-    plan = plan_of(spark, "entity_resolution_e2e")
-    assert "CartesianProduct" not in plan
-    spark.catalog.clearCache()
+    with materialize.scope():
+        plan = plan_of(spark, "entity_resolution_e2e")
+        assert "CartesianProduct" not in plan

@@ -497,7 +497,7 @@ def test_stream_neardup_screen_checkpoint_recovery(spark):
             .option("maxFilesPerTrigger", 1)
             .parquet(path_glob)
         )
-        bands = dedup.minhash_band_table(stream, stateless=True).select(
+        bands = dedup.minhash_band_table(stream).select(
             F.col("doc_id").alias("b"), "band", "bucket"
         )
         pairs = (

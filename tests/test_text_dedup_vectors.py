@@ -1,10 +1,12 @@
 """North-star extension operators: text analysis, dedup, similarity search,
 multimodal plumbing."""
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
-from makinage_spark import dedup, multimodal, pipe, text, vectors
+from makinage_spark import dedup, materialize, multimodal, pipe, text, vectors
 
 DOCS = [
     (1, "The quick brown fox jumps over the lazy dog and it is fine for all"),
@@ -153,6 +155,20 @@ def test_connected_components_chain_and_triangle(spark):
 
     got = {r["id"]: r["cluster_id"] for r in connected_components(pairs).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
+
+
+def test_star_forest_proof_requires_unique_bigs(spark):
+    """ADVICE r13 #1: the fixpoint proof must reject a node hanging off two
+    roots. {(5,1),(4,1),(4,2)} has no small endpoint that is also a big
+    one, yet node 4 would be labeled twice."""
+    schema = "big long, small long"
+    assert not dedup._is_star_forest(
+        spark.createDataFrame([(5, 1), (4, 1), (4, 2)], schema)
+    )
+    assert not dedup._is_star_forest(spark.createDataFrame([(5, 4), (4, 1)], schema))
+    assert dedup._is_star_forest(
+        spark.createDataFrame([(5, 1), (4, 1), (3, 2)], schema)
+    )
 
 
 def test_pack_sequences_assigns_by_start_offset(spark):
@@ -824,6 +840,58 @@ def test_ppjoin_carry_cap_far_path_is_lossless(spark, monkeypatch):
     assert dict(got_c) == expect_c
 
 
+def _mixed_length_sets(seed):
+    """Seeded mixed-length item sets: short random sets over a small
+    vocabulary, plus near-dup clusters of LONG sets (|s| ≈ 200) whose
+    ~60-75 unique pad tokens sort first, so their first shared token sits
+    past the real carry cap and many of their prefixes (> 64 at t = 0.5)
+    are longer than the cap; a few short subsets of a cluster core make
+    short-in-long containments."""
+    import random
+
+    rnd = random.Random(seed)
+    vocab = [f"v{i}" for i in range(40)]
+    sets = [rnd.sample(vocab, rnd.randint(3, 30)) for _ in range(30)]
+    for c in range(4):
+        core = [f"c{c}_{i}" for i in range(rnd.randint(120, 150))]
+        for d in range(3):
+            pads = [f"p{c}_{d}_{i}" for i in range(rnd.randint(60, 75))]
+            sets.append(pads + [t for t in core if rnd.random() > 0.02])
+        sets.append(rnd.sample(core, 10))
+    return list(enumerate(sets))
+
+
+@pytest.mark.parametrize("seed", [3, 11])
+def test_ppjoin_long_arms_at_real_carry_cap(spark, seed):
+    """The PPJoin long arms at the REAL _PRE_CARRY_CAP (no monkeypatch):
+    both mines equal a plain-Python O(n²) brute force, each pair exactly
+    once, on mixed-length sets where some expected pairs join two docs
+    whose exploded sides exceed the cap."""
+    t, cap = 0.5, dedup._PRE_CARRY_CAP
+    rows = _mixed_length_sets(seed)
+    plen = {i: len(s) - math.ceil(t * len(s)) + 1 for i, s in rows}
+    size = {i: len(s) for i, s in rows}
+    expect_j, expect_c = {}, {}
+    for i, a in rows:
+        for j, b in rows:
+            inter = len(set(a) & set(b))
+            if i < j and inter / (len(a) + len(b) - inter) >= t:
+                expect_j[(i, j)] = inter
+            if i != j and inter / len(a) >= t:
+                expect_c[(i, j)] = inter
+    assert any(plen[a] > cap and plen[b] > cap for a, b in expect_j)
+    assert any(plen[a] > cap and size[b] > cap for a, b in expect_c)
+    assert any(plen[a] <= cap < size[b] for a, b in expect_c)
+    df = spark.createDataFrame(rows, "doc_id long, items array<string>")
+    with materialize.scope():
+        got_j = [((r.a, r.b), r.inter) for r in
+                 dedup.prefix_filter_pairs(df, "items", threshold=t).collect()]
+        got_c = [((r.a, r.b), r.inter) for r in
+                 dedup.containment_pairs(df, "items", threshold=t).collect()]
+    assert len(got_j) == len(dict(got_j)) and dict(got_j) == expect_j
+    assert len(got_c) == len(dict(got_c)) and dict(got_c) == expect_c
+
+
 @settings(max_examples=6, deadline=None)
 @given(
     docs_words=st.lists(
@@ -991,27 +1059,37 @@ def test_strip_repeated_spans_property_vs_python_oracle(spark):
     _case()
 
 
-def test_minhash_band_table_stateless_matches_grouped(spark, docs):
-    grouped = {tuple(r) for r in dedup.minhash_band_table(docs).collect()}
-    stateless = {tuple(r) for r in
-                 dedup.minhash_band_table(docs, stateless=True).collect()}
-    assert grouped == stateless and len(grouped) > 0
+def test_minhash_signature_df_matches_inrow_fold(spark, docs):
+    """Batch band tables use the grouped signature, streaming ones the
+    in-row fold: the two minima must be bit-identical."""
+    grouped = {tuple(r) for r in dedup.minhash_signature_df(docs).collect()}
+    inrow = {tuple(r) for r in
+             docs.select("doc_id", *dedup.minhash_signature("text")).collect()}
+    assert grouped == inrow and len(grouped) > 0
 
 
-def test_minhash_band_table_stateless_drops_null_text(spark):
+def test_minhash_band_table_streaming_drops_null_text(spark, tmp_path):
     """ADVICE r4: NULL-text docs must drop out of BOTH band-table paths —
-    without the stateless guard every degenerate doc folds to one shared
-    sentinel bucket and a stream-static screen flags each as a near-dup of
-    every other."""
+    without the guard every degenerate doc folds to one shared sentinel
+    bucket and a stream-static screen flags each as a near-dup of every
+    other. The streaming path is driven through a file stream."""
+    import uuid
+
+    from makinage_spark.streaming import run_available_now
+
+    schema = "doc_id long, text string"
     df = spark.createDataFrame(
-        [(1, None), (2, "the quick brown fox jumps over the dog")],
-        "doc_id long, text string",
+        [(1, None), (2, "the quick brown fox jumps over the dog")], schema
     )
+    df.coalesce(1).write.parquet(str(tmp_path / "in"))
+    stream = spark.readStream.schema(schema).parquet(str(tmp_path / "in"))
     grouped = {tuple(r) for r in dedup.minhash_band_table(df).collect()}
-    stateless = {tuple(r) for r in
-                 dedup.minhash_band_table(df, stateless=True).collect()}
-    assert grouped == stateless
-    assert {r[0] for r in stateless} == {2}
+    streamed = {tuple(r) for r in run_available_now(
+        dedup.minhash_band_table(stream), f"nulltext_{uuid.uuid4().hex[:6]}",
+        str(tmp_path / "ck"),
+    ).collect()}
+    assert grouped == streamed
+    assert {r[0] for r in streamed} == {2}
 
 
 def _planted_corpus():
@@ -1184,13 +1262,14 @@ def test_kmeans_two_level_exhaustive_equals_flat(spark):
     the Lloyd assignment was computed against, not one update past them)."""
     rows = [(i, [float((i * 7) % 5), float((i * 3) % 4), 1.0]) for i in range(60)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    cents = vectors.kmeans_centroid_table(df, k=9, iters=2, exact=False).persist()
-    flat = {r.vec_id: r.cluster for r in vectors.kmeans_lloyd(
-        df, k=9, iters=2, exact=False, assign="table").collect()}
-    exh = {r.vec_id: r.cluster for r in vectors.kmeans_assign_two_level(
-        df, cents, probe_cells=10**6).collect()}
-    assert flat == exh
-    spark.catalog.clearCache()
+    with materialize.scope():
+        cents = materialize.materialize(
+            vectors.kmeans_centroid_table(df, k=9, iters=2, exact=False))
+        flat = {r.vec_id: r.cluster for r in vectors.kmeans_lloyd(
+            df, k=9, iters=2, exact=False, assign="table").collect()}
+        exh = {r.vec_id: r.cluster for r in vectors.kmeans_assign_two_level(
+            df, cents, probe_cells=10**6).collect()}
+        assert flat == exh
 
 
 def test_kmeans_two_level_separated_clusters_pruned_probe(spark):
@@ -1205,13 +1284,14 @@ def test_kmeans_two_level_separated_clusters_pruned_probe(spark):
             base[c * 2 + 1] = float(i % 3)  # tiny within-blob spread
             rows.append((c * 100 + i, base))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents = vectors.kmeans_centroid_table(df, k=4, iters=2, exact=False).persist()
-    flat = {r.vec_id: r.cluster for r in vectors.kmeans_lloyd(
-        df, k=4, iters=2, exact=False, assign="table").collect()}
-    two = {r.vec_id: r.cluster for r in vectors.kmeans_assign_two_level(
-        df, cents, probe_cells=1).collect()}
-    assert two == flat
-    spark.catalog.clearCache()
+    with materialize.scope():
+        cents = materialize.materialize(
+            vectors.kmeans_centroid_table(df, k=4, iters=2, exact=False))
+        flat = {r.vec_id: r.cluster for r in vectors.kmeans_lloyd(
+            df, k=4, iters=2, exact=False, assign="table").collect()}
+        two = {r.vec_id: r.cluster for r in vectors.kmeans_assign_two_level(
+            df, cents, probe_cells=1).collect()}
+        assert two == flat
 
 
 def test_kmeans_two_level_twins_co_assign(spark):
@@ -1233,12 +1313,13 @@ def test_kmeans_two_level_twins_co_assign(spark):
             noisy = (np.asarray(base) + rng.normal(0, 1e-4, 4)).tolist()
             rows.append((1000 + i, noisy))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents = vectors.kmeans_centroid_table(df, k=100, iters=2, exact=False).persist()
-    got = {r.vec_id: r.cluster for r in vectors.kmeans_assign_two_level(
-        df, cents, probe_cells=1).collect()}
-    for i in range(40):
-        assert got[1000 + i] == got[i], f"twin {i} split under pruned probe"
-    spark.catalog.clearCache()
+    with materialize.scope():
+        cents = materialize.materialize(
+            vectors.kmeans_centroid_table(df, k=100, iters=2, exact=False))
+        got = {r.vec_id: r.cluster for r in vectors.kmeans_assign_two_level(
+            df, cents, probe_cells=1).collect()}
+        for i in range(40):
+            assert got[1000 + i] == got[i], f"twin {i} split under pruned probe"
 
 
 def test_kmeans_table_path_planted_duplicates_k1000(spark):
