@@ -28,9 +28,12 @@ real connector's replay path) is exercised for free.
 from __future__ import annotations
 
 import os
+import threading
 from typing import Any
 from urllib.parse import unquote, urlparse
 
+import pyarrow as pa
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -46,37 +49,33 @@ def topic_path(broker_dir: str, topic: str) -> str:
     return os.path.join(broker_dir, topic)
 
 
+def _local_dir(path: str) -> str | None:
+    """The local directory ``path`` names, or None when only Spark's reader
+    can answer for it (a remote scheme such as hdfs:// or s3a://).
+
+    The rule: a raw, scheme-less path is used as it is, never through
+    urlparse, which would cut a ``#`` or ``?`` in it into a fragment or
+    query. A ``file:`` URI with an empty or ``localhost`` authority, in any
+    of its ``file:/``, ``file://`` and ``file:///`` spellings, is parsed and
+    unquoted (Hadoop writes a space as ``%20``). Reading an existing local
+    log as empty would restart offsets and append duplicates; the tests
+    ``test_local_dir_rule``, ``test_single_slash_file_uri_sees_existing_log``
+    and ``test_scheme_prefixed_broker_dir_roundtrip`` pin it."""
+    parsed = urlparse(path)
+    if parsed.scheme == "":
+        return path
+    if parsed.scheme == "file" and parsed.netloc in ("", "localhost"):
+        return unquote(parsed.path)
+    return None
+
+
 def _existing(spark: SparkSession, broker_dir: str, topic: str) -> DataFrame:
     path = topic_path(broker_dir, topic)
-    # existence-check BEFORE touching the reader (r8): a read of a missing
-    # path fails inside DataSource resolution, and that failed analysis is
-    # re-raised asynchronously by any lingering ExecutionListener (e.g. an
-    # Observation registered by a metrics tap whose plan was explained but
-    # never executed) — the race logged "ERROR ExecutionListenerBus …
-    # PATH_NOT_FOUND …/events_topic" during plan audits. An empty log is a
-    # normal state for a topic, not an exception to catch. os.path can only
-    # answer for local paths, so scheme-prefixed broker_dirs (hdfs://,
-    # s3a://, …) keep the reader-probe fallback — the race fix targets the
-    # local/emulator path, which is the only one this sandbox exercises.
-    # URI handling (r9, ADVICE): string-prefix stripping only understood the
-    # double-slash form 'file://…'; Spark's own normalization emits
-    # 'file:/path' (single slash), which contains no '://' and therefore fell
-    # into the local branch where os.path.isdir('file:/…') is always False —
-    # an existing topic silently read as empty and produce() restarted
-    # offsets at -1, appending duplicate offsets. Parse the URI instead: any
-    # file-scheme (or scheme-less) path with a local authority is answered by
-    # os.path; everything else keeps the reader-probe fallback.
-    # (r10, ADVICE) two residual holes in the r9 urlparse fix: a file: URI
-    # can carry percent-encoding (Hadoop normalization emits %20 for spaces
-    # in local paths), so the decoded path must be unquoted before os.path
-    # sees it; and a RAW scheme-less path containing '#' or '?' would be
-    # split into fragment/query by urlparse, truncating parsed.path and
-    # making an existing topic read as empty (the exact duplicate-offset
-    # corruption this branch exists to prevent). Raw paths therefore bypass
-    # urlparse entirely — only genuine file: URIs go through unquote.
-    parsed = urlparse(path)
-    if parsed.scheme in ("", "file") and parsed.netloc in ("", "localhost"):
-        local = path if parsed.scheme == "" else unquote(parsed.path)
+    local = _local_dir(path)
+    if local is not None:
+        # a missing local topic is an empty log, answered before the reader:
+        # a failed DataSource resolution is re-raised asynchronously by any
+        # lingering ExecutionListener (test_missing_topic_never_reaches_the_reader)
         if not os.path.isdir(local):
             return spark.createDataFrame([], WIRE_SCHEMA)
         return spark.read.schema(WIRE_SCHEMA).parquet(path)
@@ -84,6 +83,76 @@ def _existing(spark: SparkSession, broker_dir: str, topic: str) -> DataFrame:
         return spark.read.schema(WIRE_SCHEMA).parquet(path)
     except Exception:  # remote topic not yet created: empty log
         return spark.createDataFrame([], WIRE_SCHEMA)
+
+
+def _segments(topic_dir: str) -> dict[str, tuple[int, int, int]]:
+    """Every data file under ``topic_dir`` → (inode, size, mtime), skipping
+    the ``_``/``.``-prefixed names Spark's file listing skips (``_SUCCESS``,
+    ``_temporary/``, ``.crc`` files, a writer's hidden temp file)."""
+    out = {}
+    for root, dirs, files in os.walk(topic_dir):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for f in files:
+            if not f.startswith(("_", ".")):
+                path = os.path.join(root, f)
+                st = os.stat(path)
+                out[path] = (st.st_ino, st.st_size, st.st_mtime_ns)
+    return out
+
+
+_OFFSET_COLS = pa.schema([("partition", pa.int32()), ("offset", pa.int64())])
+
+
+class _LogEnds:
+    """Each local topic's log-end offsets (partition → max offset), kept in
+    the driver the way a broker keeps them as partition metadata, keyed by
+    the topic's resolved directory so every spelling of one log shares one
+    entry. The directory listing is the source of truth: each lookup reads
+    ``partition``/``offset`` only from segments it has not seen, whoever
+    wrote them (this process, another one, or a crashed writer whose file
+    landed), and starts over when a remembered segment is gone or changed
+    (topic deleted, recreated or compacted)."""
+
+    def __init__(self) -> None:
+        self._lock = threading.Lock()
+        self._topics: dict[str, tuple[dict[str, tuple[int, int, int]], dict[int, int]]] = {}
+
+    def get(self, local_dir: str) -> dict[int, int]:
+        key = os.path.realpath(local_dir)
+        with self._lock:
+            segs = _segments(key)
+            seen, ends = self._topics.get(key, ({}, {}))
+            if any(segs.get(f) != sig for f, sig in seen.items()):
+                seen, ends = {}, {}
+            new = [f for f in segs if f not in seen]
+            if new:
+                cols = ds.dataset(new, schema=_OFFSET_COLS, format="parquet").to_table()
+                agg = cols.group_by("partition").aggregate([("offset", "max")]).to_pydict()
+                for p, hi in zip(agg["partition"], agg["offset_max"]):
+                    ends[p] = max(ends.get(p, -1), hi)
+                seen.update((f, segs[f]) for f in new)
+            self._topics[key] = (seen, ends)
+            return dict(ends)
+
+
+_LOG_ENDS = _LogEnds()
+
+
+def _log_end(spark: SparkSession, broker_dir: str, topic: str) -> dict[int, int]:
+    """partition → max offset of the topic log; {} for an empty one. Local
+    logs answer from driver-side metadata with no Spark job; a remote
+    broker_dir keeps the Spark read."""
+    path = topic_path(broker_dir, topic)
+    local = _local_dir(path)
+    if local is not None:
+        return _LOG_ENDS.get(local)
+    return {
+        r["partition"]: r["hi"]
+        for r in _existing(spark, broker_dir, topic)
+        .groupBy("partition")
+        .agg(F.max("offset").alias("hi"))
+        .collect()
+    }
 
 
 def produce(
@@ -100,44 +169,32 @@ def produce(
     ``encoding``/``key`` run through the real codec layer
     (:func:`encode_value`); partition = key-hash when a key column is given,
     else round-robin (Kafka's null-key behavior); offsets continue from the
-    current per-partition high-water mark — the bounded driver read is
-    |partitions| rows, never data."""
+    per-partition log-end offsets. For a local log those come from
+    driver-side broker metadata (:class:`_LogEnds`), which reads only the
+    segments appended since the last lookup and starts no Spark job; a
+    remote broker_dir reads the offset column of the whole log."""
     encoded = encode_value(df, encoding, key)  # (value) or (key, value)
-    if "key" not in encoded.columns:
-        encoded = encoded.withColumn("key", F.lit(None).cast("binary"))
     # ONE materialized sequence id drives both round-robin routing and the
     # intra-partition offset order — two separate monotonically_increasing_id
     # expressions would evaluate independently and disagree across stages
-    encoded = encoded.withColumn("__mid", F.monotonically_increasing_id())
-    part = (
-        F.pmod(F.xxhash64("key"), F.lit(partitions))
-        if key
-        else F.pmod(F.col("__mid"), F.lit(partitions))
-    ).cast("int")
-    highs = {
-        r["partition"]: r["hi"]
-        for r in _existing(spark, broker_dir, topic)
-        .groupBy("partition")
-        .agg(F.max("offset").alias("hi"))
-        .collect()
-    }
+    framed = encoded.select(
+        F.col("key") if key else F.lit(None).cast("binary").alias("key"),
+        F.col("value").cast("binary").alias("value"),
+        F.monotonically_increasing_id().alias("__mid"),
+    )
+    part = F.pmod(F.xxhash64("key") if key else F.col("__mid"), F.lit(partitions)).cast("int")
+    highs = _log_end(spark, broker_dir, topic)
     base = F.create_map(
         *[x for p in range(partitions) for x in (F.lit(p), F.lit(highs.get(p, -1)))]
     )
-    w = Window.partitionBy("partition").orderBy("__mid")
-    out = (
-        encoded.withColumn("topic", F.lit(topic))
-        .withColumn("partition", part)
-        .withColumn(
-            "offset",
-            (
-                F.element_at(base, F.col("partition")).cast("bigint")
-                + F.row_number().over(w)
-            ).cast("bigint"),
-        )
-        .withColumn("timestamp", F.current_timestamp())
-        .withColumn("value", F.col("value").cast("binary"))
-        .select("key", "value", "topic", "partition", "offset", "timestamp")
+    w = Window.partitionBy(part).orderBy("__mid")
+    out = framed.select(
+        "key",
+        "value",
+        F.lit(topic).alias("topic"),
+        part.alias("partition"),
+        (F.element_at(base, part).cast("bigint") + F.row_number().over(w)).cast("bigint").alias("offset"),
+        F.current_timestamp().alias("timestamp"),
     )
     out.write.mode("append").parquet(topic_path(broker_dir, topic))
 

@@ -669,3 +669,75 @@ def test_streaming_do_action_observed_metrics(spark):
     # two files -> two micro-batches, each tapped with its own counts
     assert sorted((m["n"], m["sv"]) for m in seen) == [(3, 180), (5, 100)]
     assert spark.sql("SELECT COUNT(*) c FROM tap_obs").first().c == 8
+
+
+def _running_totals(config, events):
+    """Graph factory: per-user running count and total of ``value``."""
+    cents = events.select("user_id", "event_id", F.col("value").alias("cents"))
+    return streaming_scan(cents, "user_id", "cents", "event_id")
+
+
+def test_two_sink_graph_over_emulated_topics(spark, tmp_path):
+    """The micro-service shape: one kafka_emu source feeding a stateful scan
+    and a serve operator, each writing its own sink topic, run as repeated
+    run_graph cycles with appends in between. Every event reaches each sink
+    exactly once, each sink's offsets run 0..n-1 per partition, and the
+    running totals equal a pandas prefix fold."""
+    import numpy as np
+    import pandas as pd
+
+    from makinage_spark.sources import kafka_emulator as emu
+
+    broker, ckpt = str(tmp_path / "broker"), str(tmp_path / "ckpt")
+    schema = "event_id bigint, user_id bigint, value bigint"
+    cfg = {
+        "application": {"name": "two_sinks", "source_type": "stream"},
+        "topics": [
+            {"name": "events", "format": "kafka_emu", "broker_dir": broker,
+             "encoder": "json", "schema": schema, "start_from": "beginning"},
+            *({"name": s, "format": "kafka_emu", "broker_dir": broker,
+               "encoder": "json", "checkpoint": f"{ckpt}/{s}"}
+              for s in ("running", "scored")),
+        ],
+        "operators": {
+            "scan": {"factory": f"{__name__}:_running_totals",
+                     "sources": ["events"], "sinks": ["running"]},
+            "serve": {"factory": "makinage_spark.serve:serve",
+                      "config": {"predict": "makinage_spark.sample.serve:double_predict",
+                                 "input_field": "value", "output_field": "pred"},
+                      "sources": ["events"], "sinks": ["scored"]},
+        },
+    }
+    rng = np.random.default_rng(7)
+    n = 0
+    for size in (40, 25, 60):
+        ev = pd.DataFrame({
+            "event_id": np.arange(n, n + size),
+            "user_id": rng.integers(0, 5, size),
+            "value": rng.integers(1, 1000, size),
+        })
+        n += size
+        emu.produce(spark, broker, "events", spark.createDataFrame(ev), encoding="json")
+        run_graph(spark, cfg)
+    events = emu.emu_source(spark, broker, ["events"], encoding="json",
+                            schema=schema).toPandas().sort_values("event_id")
+    assert events.event_id.tolist() == list(range(n))
+    events["running_count"] = events.groupby("user_id").cumcount() + 1
+    events["running_total"] = events.groupby("user_id").value.cumsum()
+    sinks = {
+        "running": "user_id bigint, event_id bigint, running_count bigint, running_total double",
+        "scored": "event_id bigint, value bigint, pred double",
+    }
+    for sink, sink_schema in sinks.items():
+        got = emu.emu_source(spark, broker, [sink], encoding="json",
+                             schema=sink_schema).toPandas()
+        assert sorted(got.event_id) == list(range(n)), sink
+        for _, offs in got.groupby("partition").offset:
+            assert sorted(offs) == list(range(len(offs))), sink
+        got = got.set_index("event_id").sort_index()
+        if sink == "scored":
+            assert (got.value.to_numpy() == events.value.to_numpy()).all()
+            assert (got.pred.to_numpy() == 2.0 * events.value.to_numpy()).all()
+        else:
+            for col in ("user_id", "running_count", "running_total"):
+                assert (got[col].to_numpy() == events[col].to_numpy()).all(), col

@@ -11,6 +11,11 @@ values topic "5" × 3 → multiplied_values topic "15"
 
 from __future__ import annotations
 
+import os
+import shutil
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 import pytest
 
@@ -401,3 +406,130 @@ def test_single_slash_file_uri_sees_existing_log(spark, tmp_path):
     _produce_strings(spark, "file:" + bare, "t", ["d"], partitions=1)
     again = emu._existing(spark, bare, "t").collect()
     assert sorted(r.offset for r in again) == [0, 1, 2, 3]
+
+
+def test_local_dir_rule():
+    """One rule decides local vs remote: raw paths pass through untouched
+    (a '#' or '?' is part of the name), local file: URIs in every spelling
+    are unquoted, anything else is remote."""
+    assert emu._local_dir("/b/t#1?x") == "/b/t#1?x"
+    assert emu._local_dir("rel/b%20c") == "rel/b%20c"
+    for uri in ("file:/b%20c/t", "file:///b%20c/t", "file://localhost/b%20c/t"):
+        assert emu._local_dir(uri) == "/b c/t", uri
+    for uri in ("hdfs://nn/b/t", "s3a://bucket/t", "file://otherhost/b/t"):
+        assert emu._local_dir(uri) is None, uri
+
+
+def _offsets_by_partition(spark, broker, topic):
+    out: dict[int, list[int]] = {}
+    for r in emu._existing(spark, broker, topic).collect():
+        out.setdefault(r.partition, []).append(r.offset)
+    return {p: sorted(o) for p, o in out.items()}
+
+
+def test_offsets_contiguous_across_appends(spark, broker):
+    """Three appends of uneven sizes over three partitions: each partition's
+    offsets run 0..n-1 with no gap and no repeat."""
+    for values in (list("abcde"), ["f"], list("ghijklm")):
+        _produce_strings(spark, broker, "t", values, partitions=3)
+    got = _offsets_by_partition(spark, broker, "t")
+    assert sum(map(len, got.values())) == 13
+    assert all(o == list(range(len(o))) for o in got.values()), got
+
+
+def test_segment_written_by_another_writer_is_counted(spark, broker):
+    """A segment that lands in the topic directory outside ``produce`` (here
+    pyarrow in the wire schema, as a second producer process or a writer
+    that crashed after its file landed would leave it) counts toward the
+    log-end offsets, even after this process has looked the topic up."""
+    _produce_strings(spark, broker, "t", ["a", "b"], partitions=1)
+    wire = pa.schema([
+        ("key", pa.binary()), ("value", pa.binary()), ("topic", pa.string()),
+        ("partition", pa.int32()), ("offset", pa.int64()),
+        ("timestamp", pa.timestamp("us", tz="UTC")),
+    ])
+    pq.write_table(
+        pa.table([[None] * 3, [b"x", b"y", b"z"], ["t"] * 3, [0, 0, 1], [2, 3, 7],
+                  pa.array([0] * 3, pa.int64()).cast(wire.field("timestamp").type)],
+                 schema=wire),
+        os.path.join(emu.topic_path(broker, "t"), "seg-external.parquet"),
+    )
+    _produce_strings(spark, broker, "t", ["c", "d"], partitions=2)
+    got = _offsets_by_partition(spark, broker, "t")
+    # round-robin may route both new rows to one partition; either way each
+    # continues past the external segment's offsets
+    assert len(got[0]) + len(got[1]) == 7
+    assert got[0] == list(range(len(got[0]))) and len(got[0]) >= 4
+    assert got[1] == list(range(7, 7 + len(got[1])))
+
+
+def test_recreated_topic_restarts_offsets_at_zero(spark, broker):
+    _produce_strings(spark, broker, "t", ["a", "b", "c"], partitions=1)
+    shutil.rmtree(emu.topic_path(broker, "t"))
+    _produce_strings(spark, broker, "t", ["d"], partitions=1)
+    assert _offsets_by_partition(spark, broker, "t") == {0: [0]}
+
+
+def test_log_end_lookup_starts_no_spark_job(spark, broker, monkeypatch):
+    """The log-end offsets of a local topic are driver-side metadata: no
+    Spark job runs between entering ``produce`` and its append."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    _produce_strings(spark, broker, "t", ["a", "b", "c"])
+    tracker = spark.sparkContext.statusTracker()
+    at_write: list[set[int]] = []
+    orig = DataFrameWriter.parquet
+
+    def spy(self, *a, **kw):
+        at_write.append(set(tracker.getJobIdsForGroup(None)))
+        return orig(self, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    before = set(tracker.getJobIdsForGroup(None))
+    _produce_strings(spark, broker, "t", ["d"])
+    assert at_write and at_write[0] == before
+    assert sum(map(len, _offsets_by_partition(spark, broker, "t").values())) == 4
+
+
+def test_log_end_map_under_concurrent_appends(tmp_path):
+    """Threads that each land a segment and then look the topic up, with a
+    short switch interval: every lookup sees at least its own segment, and
+    the final map equals the per-partition max over all segments."""
+    import sys
+    import threading
+
+    topic = tmp_path / "t"
+    topic.mkdir()
+    ends = emu._LogEnds()
+    errors: list[str] = []
+
+    def worker(i: int) -> None:
+        try:
+            for j in range(10):
+                off = 100 * i + j
+                # land each segment atomically, as every writer of a topic does
+                pq.write_table(
+                    pa.table({"partition": pa.array([i % 3], pa.int32()),
+                              "offset": pa.array([off], pa.int64())}),
+                    str(topic / f".seg-{i}-{j}"),
+                )
+                os.rename(topic / f".seg-{i}-{j}", topic / f"seg-{i}-{j}.parquet")
+                if ends.get(str(topic)).get(i % 3, -1) < off:
+                    errors.append(f"worker {i} lost offset {off}")
+        except Exception as e:
+            errors.append(f"worker {i}: {e!r}")
+
+    saved = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(i,)) for i in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(saved)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert ends.get(str(topic)) == {p: max(100 * i + 9 for i in range(16) if i % 3 == p)
+                                    for p in range(3)}
