@@ -28,7 +28,6 @@ real connector's replay path) is exercised for free.
 from __future__ import annotations
 
 import os
-import threading
 from typing import Any
 from urllib.parse import unquote, urlparse
 
@@ -85,67 +84,24 @@ def _existing(spark: SparkSession, broker_dir: str, topic: str) -> DataFrame:
         return spark.createDataFrame([], WIRE_SCHEMA)
 
 
-def _segments(topic_dir: str) -> dict[str, tuple[int, int, int]]:
-    """Every data file under ``topic_dir`` → (inode, size, mtime), skipping
-    the ``_``/``.``-prefixed names Spark's file listing skips (``_SUCCESS``,
-    ``_temporary/``, ``.crc`` files, a writer's hidden temp file)."""
-    out = {}
-    for root, dirs, files in os.walk(topic_dir):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        for f in files:
-            if not f.startswith(("_", ".")):
-                path = os.path.join(root, f)
-                st = os.stat(path)
-                out[path] = (st.st_ino, st.st_size, st.st_mtime_ns)
-    return out
-
-
 _OFFSET_COLS = pa.schema([("partition", pa.int32()), ("offset", pa.int64())])
 
 
-class _LogEnds:
-    """Each local topic's log-end offsets (partition → max offset), kept in
-    the driver the way a broker keeps them as partition metadata, keyed by
-    the topic's resolved directory so every spelling of one log shares one
-    entry. The directory listing is the source of truth: each lookup reads
-    ``partition``/``offset`` only from segments it has not seen, whoever
-    wrote them (this process, another one, or a crashed writer whose file
-    landed), and starts over when a remembered segment is gone or changed
-    (topic deleted, recreated or compacted)."""
-
-    def __init__(self) -> None:
-        self._lock = threading.Lock()
-        self._topics: dict[str, tuple[dict[str, tuple[int, int, int]], dict[int, int]]] = {}
-
-    def get(self, local_dir: str) -> dict[int, int]:
-        key = os.path.realpath(local_dir)
-        with self._lock:
-            segs = _segments(key)
-            seen, ends = self._topics.get(key, ({}, {}))
-            if any(segs.get(f) != sig for f, sig in seen.items()):
-                seen, ends = {}, {}
-            new = [f for f in segs if f not in seen]
-            if new:
-                cols = ds.dataset(new, schema=_OFFSET_COLS, format="parquet").to_table()
-                agg = cols.group_by("partition").aggregate([("offset", "max")]).to_pydict()
-                for p, hi in zip(agg["partition"], agg["offset_max"]):
-                    ends[p] = max(ends.get(p, -1), hi)
-                seen.update((f, segs[f]) for f in new)
-            self._topics[key] = (seen, ends)
-            return dict(ends)
-
-
-_LOG_ENDS = _LogEnds()
-
-
 def _log_end(spark: SparkSession, broker_dir: str, topic: str) -> dict[int, int]:
-    """partition → max offset of the topic log; {} for an empty one. Local
-    logs answer from driver-side metadata with no Spark job; a remote
+    """partition → max offset of the topic log; {} for an empty one. A local
+    log answers the way a broker answers from partition metadata: pyarrow
+    reads the ``partition``/``offset`` columns of the segments the directory
+    lists now (skipping the ``_``/``.``-prefixed names Spark's listing skips),
+    so segments from any writer count and no Spark job runs. A remote
     broker_dir keeps the Spark read."""
     path = topic_path(broker_dir, topic)
     local = _local_dir(path)
     if local is not None:
-        return _LOG_ENDS.get(local)
+        if not os.path.isdir(local):
+            return {}
+        cols = ds.dataset(local, schema=_OFFSET_COLS, format="parquet").to_table()
+        agg = cols.group_by("partition").aggregate([("offset", "max")]).to_pydict()
+        return dict(zip(agg["partition"], agg["offset_max"]))
     return {
         r["partition"]: r["hi"]
         for r in _existing(spark, broker_dir, topic)
@@ -169,10 +125,10 @@ def produce(
     ``encoding``/``key`` run through the real codec layer
     (:func:`encode_value`); partition = key-hash when a key column is given,
     else round-robin (Kafka's null-key behavior); offsets continue from the
-    per-partition log-end offsets. For a local log those come from
-    driver-side broker metadata (:class:`_LogEnds`), which reads only the
-    segments appended since the last lookup and starts no Spark job; a
-    remote broker_dir reads the offset column of the whole log."""
+    per-partition log-end offsets. For a local log those come from a
+    driver-side pyarrow read of the ``partition``/``offset`` columns
+    (:func:`_log_end`), which starts no Spark job; a remote broker_dir reads
+    the offset column of the whole log with Spark."""
     encoded = encode_value(df, encoding, key)  # (value) or (key, value)
     # ONE materialized sequence id drives both round-robin routing and the
     # intra-partition offset order — two separate monotonically_increasing_id

@@ -34,6 +34,13 @@ def _produce_strings(spark, broker, topic, values, partitions=2, key=None):
                 partitions=partitions)
 
 
+def _offsets_by_partition(spark, broker, topic):
+    out: dict[int, list[int]] = {}
+    for r in emu._existing(spark, broker, topic).collect():
+        out.setdefault(r.partition, []).append(r.offset)
+    return {p: sorted(o) for p, o in out.items()}
+
+
 def test_wire_schema_and_offsets(spark, broker):
     _produce_strings(spark, broker, "values", ["5", "7", "11"])
     raw = spark.read.parquet(emu.topic_path(broker, "values"))
@@ -51,6 +58,12 @@ def test_wire_schema_and_offsets(spark, broker):
     per = again.groupBy("partition", "offset").count()
     assert per.filter(F.col("count") > 1).count() == 0  # no offset collisions
     assert again.count() == 4
+    # a third, uneven append over more partitions: each partition's offsets
+    # still run 0..n-1 with no gap and no repeat
+    _produce_strings(spark, broker, "values", list("abcdefg"), partitions=3)
+    got = _offsets_by_partition(spark, broker, "values")
+    assert sum(map(len, got.values())) == 11
+    assert all(o == list(range(len(o))) for o in got.values()), got
 
 
 def test_start_from_semantics(spark, broker):
@@ -420,23 +433,6 @@ def test_local_dir_rule():
         assert emu._local_dir(uri) is None, uri
 
 
-def _offsets_by_partition(spark, broker, topic):
-    out: dict[int, list[int]] = {}
-    for r in emu._existing(spark, broker, topic).collect():
-        out.setdefault(r.partition, []).append(r.offset)
-    return {p: sorted(o) for p, o in out.items()}
-
-
-def test_offsets_contiguous_across_appends(spark, broker):
-    """Three appends of uneven sizes over three partitions: each partition's
-    offsets run 0..n-1 with no gap and no repeat."""
-    for values in (list("abcde"), ["f"], list("ghijklm")):
-        _produce_strings(spark, broker, "t", values, partitions=3)
-    got = _offsets_by_partition(spark, broker, "t")
-    assert sum(map(len, got.values())) == 13
-    assert all(o == list(range(len(o))) for o in got.values()), got
-
-
 def test_segment_written_by_another_writer_is_counted(spark, broker):
     """A segment that lands in the topic directory outside ``produce`` (here
     pyarrow in the wire schema, as a second producer process or a writer
@@ -472,64 +468,27 @@ def test_recreated_topic_restarts_offsets_at_zero(spark, broker):
 
 def test_log_end_lookup_starts_no_spark_job(spark, broker, monkeypatch):
     """The log-end offsets of a local topic are driver-side metadata: no
-    Spark job runs between entering ``produce`` and its append."""
+    Spark job runs between entering ``produce`` and its append. The call
+    under test runs in its own job group, and the listener bus is drained
+    before the status tracker is read, so every job started by then is
+    recorded and no earlier job is counted."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     _produce_strings(spark, broker, "t", ["a", "b", "c"])
-    tracker = spark.sparkContext.statusTracker()
-    at_write: list[set[int]] = []
+    sc = spark.sparkContext
+    at_write: list[list[int]] = []
     orig = DataFrameWriter.parquet
 
     def spy(self, *a, **kw):
-        at_write.append(set(tracker.getJobIdsForGroup(None)))
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        at_write.append(list(sc.statusTracker().getJobIdsForGroup("log-end")))
         return orig(self, *a, **kw)
 
     monkeypatch.setattr(DataFrameWriter, "parquet", spy)
-    before = set(tracker.getJobIdsForGroup(None))
-    _produce_strings(spark, broker, "t", ["d"])
-    assert at_write and at_write[0] == before
-    assert sum(map(len, _offsets_by_partition(spark, broker, "t").values())) == 4
-
-
-def test_log_end_map_under_concurrent_appends(tmp_path):
-    """Threads that each land a segment and then look the topic up, with a
-    short switch interval: every lookup sees at least its own segment, and
-    the final map equals the per-partition max over all segments."""
-    import sys
-    import threading
-
-    topic = tmp_path / "t"
-    topic.mkdir()
-    ends = emu._LogEnds()
-    errors: list[str] = []
-
-    def worker(i: int) -> None:
-        try:
-            for j in range(10):
-                off = 100 * i + j
-                # land each segment atomically, as every writer of a topic does
-                pq.write_table(
-                    pa.table({"partition": pa.array([i % 3], pa.int32()),
-                              "offset": pa.array([off], pa.int64())}),
-                    str(topic / f".seg-{i}-{j}"),
-                )
-                os.rename(topic / f".seg-{i}-{j}", topic / f"seg-{i}-{j}.parquet")
-                if ends.get(str(topic)).get(i % 3, -1) < off:
-                    errors.append(f"worker {i} lost offset {off}")
-        except Exception as e:
-            errors.append(f"worker {i}: {e!r}")
-
-    saved = sys.getswitchinterval()
-    sys.setswitchinterval(1e-6)
+    sc.setJobGroup("log-end", "produce under test")
     try:
-        threads = [threading.Thread(target=worker, args=(i,)) for i in range(16)]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join(timeout=60)
+        _produce_strings(spark, broker, "t", ["d"])
     finally:
-        sys.setswitchinterval(saved)
-    assert not any(t.is_alive() for t in threads)
-    assert errors == []
-    assert ends.get(str(topic)) == {p: max(100 * i + 9 for i in range(16) if i % 3 == p)
-                                    for p in range(3)}
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert at_write == [[]]
+    assert sum(map(len, _offsets_by_partition(spark, broker, "t").values())) == 4
