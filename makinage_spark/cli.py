@@ -79,9 +79,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.command == "run":
         from makinage_spark.plans import run_graph
 
-        handles = run_graph(spark, args.config, await_batch=not args.no_wait)
-        for h in handles or []:
-            name = h[0] if isinstance(h, tuple) else getattr(h, "name", str(h))
+        for name, _ in run_graph(spark, args.config, await_batch=not args.no_wait):
             print(f"sink done: {name}")
         return 0
 

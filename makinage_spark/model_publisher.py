@@ -7,8 +7,10 @@ config.sample.model_publisher.yml). The serving layer then hot-swaps on each
 new message (SURVEY §3.2).
 
 Spark mapping: a trivial batch job — ``binaryFile`` source → one row per
-artifact → Kafka (or any) sink. The 32 MB cap becomes the producer option
-``kafka.max.request.size`` passed through the topic config.
+artifact → Kafka (or any) sink. The 32 MB cap becomes the topic's default
+``max_request_size``, which ``sources.kafka.sink_options`` turns into the
+producer option ``kafka.max.request.size`` (a topic's own
+``max_request_size`` or ``options:`` entry wins).
 """
 
 from __future__ import annotations
@@ -41,6 +43,9 @@ def publish_models(
     "topic": {...}}]}``. Topic dicts use the graph-runner schema: ``format:
     kafka`` (server/options) or any file format with ``path`` (the test/dev
     sink). Returns ``(topic_name, artifacts_published)`` per model."""
+    from makinage_spark.sources.kafka import kafka_sink
+    from makinage_spark.sources.kafka_emulator import emu_sink
+
     out = []
     for model in config.get("models", []):
         df = read_model_files(spark, [model["file"]])
@@ -51,24 +56,13 @@ def publish_models(
                 f"model artifact exceeds the {MAX_REQUEST_SIZE} byte publish cap"
             )
         if fmt == "kafka":
-            from makinage_spark.sources.kafka import kafka_sink_batch
-
-            options = dict(topic.get("options", {}))
-            options.setdefault("kafka.max.request.size", str(MAX_REQUEST_SIZE))
-            kafka_sink_batch(df.select("value"), {**topic, "options": options})
-            n = df.count()
+            kafka_sink(df.select("value"), {"max_request_size": MAX_REQUEST_SIZE, **topic})
         elif fmt == "kafka_emu":
-            from makinage_spark.sources.kafka_emulator import emu_sink_batch
-
             # model topics are single-partition compacted logs: the consumer
             # reads the LAST retained message (start_from: last,
             # config.sample.serve.yml:8-10)
-            emu_sink_batch(
-                df.select("value"), {**topic, "encoder": "none", "partitions": 1}
-            )
-            n = df.count()
+            emu_sink(df.select("value"), {**topic, "encoder": "none", "partitions": 1})
         else:
             df.write.format(fmt).mode(topic.get("mode", "append")).save(topic["path"])
-            n = df.count()
-        out.append((topic.get("name", topic.get("path", "?")), n))
+        out.append((topic.get("name", topic.get("path", "?")), df.count()))
     return out

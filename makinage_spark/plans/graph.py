@@ -14,7 +14,9 @@ schema and factory contract, producing DataFrames:
 - operator ``factory(config, *sources) -> (sinks,)`` — the exact factory shape
   of makinage/operator.py:229, loaded by ``module:function``
   (makinage/util.py:5-23)
-- sink topics are written back per format (batch write / ``writeStream``).
+- sink topics are written back per format (batch write / ``writeStream``);
+  the two Kafka formats go through their connector's one sink, which picks
+  a batch write or a ``foreachBatch`` from ``df.isStreaming``.
 
 Example (the multiply sample, config.sample.yml:1-17 re-expressed)::
 
@@ -32,11 +34,11 @@ Example (the multiply sample, config.sample.yml:1-17 re-expressed)::
 
 from __future__ import annotations
 
+import os
 from typing import Any
 
 import yaml
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from makinage_spark.plans.loader import import_function
 
@@ -53,9 +55,7 @@ def _load_topic(spark: SparkSession, topic: dict[str, Any], streaming: bool) -> 
             reader = reader.schema(topic["schema"])
         elif streaming:
             raise ValueError(f"streaming topic {name!r} requires an explicit schema")
-        df = getattr(reader.format(fmt).options(**topic.get("options", {})), "load")(
-            topic["path"]
-        )
+        df = reader.format(fmt).options(**topic.get("options", {})).load(topic["path"])
     elif fmt == "app":
         # user-generator topic (A5): the Python Data Source app connector
         from makinage_spark.sources.app_source import AppSource
@@ -150,69 +150,73 @@ def compile_graph(
     return sinks, {"streaming": streaming, "topics": topics, "application": app}
 
 
+def _checkpoint(name: str, topic: dict[str, Any]) -> str:
+    """A streaming sink's checkpoint: ``checkpoint:``, else a place owned by
+    the sink — ``<path or /tmp/name>/_checkpoint`` for files and memory, and
+    inside the broker dir for an emulated topic, so a rerun after the broker
+    is wiped does not resume from a stale checkpoint. A Kafka sink must name
+    one: a shared default would let two graphs that write one topic name
+    resume each other's offsets."""
+    if "checkpoint" in topic:
+        return topic["checkpoint"]
+    fmt = topic.get("format", "parquet")
+    if fmt == "kafka_emu":
+        return os.path.join(topic["broker_dir"], "_ck", name)
+    if fmt == "kafka":
+        raise ValueError(f"streaming kafka sink {name!r} needs a checkpoint:")
+    return f"{topic.get('path', '/tmp/' + name)}/_checkpoint"
+
+
 def run_graph(spark: SparkSession, config: dict[str, Any] | str, await_batch: bool = True):
     """Compile and execute: write every sink topic.
 
     Batch mode: ``df.write`` per sink (overwrite). Stream mode: one
-    checkpointed ``writeStream`` per sink (the reference runs one Rx
-    subscription per sink, makinage/operator.py:244-251); returns the list of
-    ``StreamingQuery`` handles.
+    checkpointed streaming query per sink (the reference runs one Rx
+    subscription per sink, makinage/operator.py:244-251), each started and,
+    with ``await_batch``, awaited before the next starts. Returns
+    ``(name, handle)`` pairs: the ``StreamingQuery`` of each streaming sink,
+    the collected rows of a batch memory sink.
     """
+    from makinage_spark.sources.kafka import kafka_sink
+    from makinage_spark.sources.kafka_emulator import emu_sink
+
     sinks, meta = compile_graph(spark, config)
-    topics = meta["topics"]
+    streaming = meta["streaming"]
     handles = []
     for name, df in sinks.items():
-        topic = topics.get(name)
+        topic = meta["topics"].get(name)
         if topic is None:
             raise ValueError(f"sink topic {name!r} not declared in topics:")
         fmt = topic.get("format", "parquet")
-        if not meta["streaming"]:
+        ck = _checkpoint(name, topic) if streaming else None
+        q = None
+        if fmt == "kafka":
+            q = kafka_sink(df, topic, ck)
+        elif fmt == "kafka_emu":
+            q = emu_sink(df, topic, ck)
+        elif streaming:
+            writer = df.writeStream.option("checkpointLocation", ck).trigger(availableNow=True)
             if fmt == "memory":
-                # test/debug sink ONLY: materializes on the driver. Guarded
-                # so a production graph misconfigured to memory can't OOM the
-                # driver — cap via topic {"max_rows": N} (default 100k).
-                cap = int(topic.get("max_rows", 100_000))
-                rows = df.limit(cap + 1).collect()
-                if len(rows) > cap:
-                    raise ValueError(
-                        f"memory sink {name!r} exceeds max_rows={cap}; "
-                        "use a file/kafka sink for large results"
-                    )
-                handles.append((name, rows))
-            elif fmt == "kafka":
-                from makinage_spark.sources.kafka import kafka_sink_batch
-
-                kafka_sink_batch(df, topic)
-            elif fmt == "kafka_emu":
-                from makinage_spark.sources.kafka_emulator import emu_sink_batch
-
-                emu_sink_batch(df, topic)
+                q = writer.format("memory").queryName(name).start()
             else:
-                df.write.format(fmt).mode(topic.get("mode", "overwrite")).options(
-                    **topic.get("options", {})
-                ).save(topic["path"])
-        else:
-            writer = df.writeStream.option(
-                "checkpointLocation",
-                topic.get("checkpoint", f"{topic.get('path', '/tmp/' + name)}/_checkpoint"),
-            )
-            if fmt == "memory":
-                q = writer.format("memory").queryName(name).trigger(availableNow=True).start()
-            elif fmt == "kafka":
-                from makinage_spark.sources.kafka import kafka_sink_stream
-
-                q = kafka_sink_stream(df, topic)
-            elif fmt == "kafka_emu":
-                from makinage_spark.sources.kafka_emulator import emu_sink_stream
-
-                q = emu_sink_stream(df, topic)
-            else:
-                q = (
-                    writer.format(fmt)
-                    .options(**topic.get("options", {}))
-                    .trigger(availableNow=True)
-                    .start(topic["path"])
+                q = writer.format(fmt).options(**topic.get("options", {})).start(topic["path"])
+        elif fmt == "memory":
+            # test/debug sink ONLY: materializes on the driver. Guarded so a
+            # production graph misconfigured to memory can't OOM the driver —
+            # cap via topic {"max_rows": N} (default 100k).
+            cap = int(topic.get("max_rows", 100_000))
+            rows = df.limit(cap + 1).collect()
+            if len(rows) > cap:
+                raise ValueError(
+                    f"memory sink {name!r} exceeds max_rows={cap}; "
+                    "use a file/kafka sink for large results"
                 )
+            handles.append((name, rows))
+        else:
+            df.write.format(fmt).mode(topic.get("mode", "overwrite")).options(
+                **topic.get("options", {})
+            ).save(topic["path"])
+        if q is not None:
             if await_batch:
                 q.awaitTermination()
             handles.append((name, q))

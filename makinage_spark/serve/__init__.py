@@ -10,9 +10,12 @@ Spark mapping:
 
 - count-based ``batch()`` (serve.py:82-101) → Arrow-batched ``mapInPandas``
   (vectorization is the execution model, not an operator);
-- ``with_latest_from(model, config)`` → per-micro-batch control refresh in
-  ``foreachBatch`` (:func:`serve_stream`), micro-batch granularity per
-  SURVEY §7.3;
+- ``with_latest_from(model, config)`` → per-micro-batch control refresh:
+  :func:`serve_stream` is a call to
+  :func:`makinage_spark.streaming.runtime.for_each_batch_with_latest`, the one
+  ``foreachBatch`` hot-swap loop, at micro-batch granularity per SURVEY §7.3;
+- the default output schema is the input's fields (nested structs
+  included) plus a ``double`` ``output_field``;
 - MLflow pyfunc loading is import-gated (:func:`load_model`) — the custom
   ``predict`` hook (serve.py:31-43) needs no mlflow at all.
 """
@@ -28,8 +31,10 @@ from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from makinage_spark.plans.loader import import_function
+from makinage_spark.streaming.runtime import for_each_batch_with_latest
 
 log = logging.getLogger(__name__)
 
@@ -122,10 +127,8 @@ def serve(
     predict = create_predict(config, model)
     schema = output_schema or config.get("output_schema")
     if schema is None:
-        out_field = config.get("output_field", "pred")
-        schema = f"{data.schema.simpleString()[7:-1]},{out_field} double".replace(
-            "struct<", ""
-        )
+        fields = [StructField(f.name, f.dataType) for f in data.schema.fields]
+        schema = StructType(fields + [StructField(config.get("output_field", "pred"), DoubleType())])
     return data.mapInPandas(infer_batches(config, predict), schema=schema)
 
 
@@ -138,18 +141,14 @@ def serve_stream(
     output_schema: str | None = None,
 ):
     """Hot-swap serving (serve.py:104-148): every micro-batch re-reads the
-    latest model + config (tiny control inputs — e.g.
-    ``sources.kafka.read_last_message`` on the model topic) and runs inference
-    on the batch. Swap granularity = micro-batch (SURVEY §7.3)."""
+    latest model + config (tiny control inputs — e.g. a ``start_from: last``
+    read of the model topic) and runs inference on the batch. Swap
+    granularity = micro-batch (SURVEY §7.3)."""
 
-    def _body(batch_df: DataFrame, batch_id: int) -> None:
-        model = model_loader()
-        config = config_loader()
-        result = serve(config, batch_df, model=model, output_schema=output_schema)
-        sink(result, batch_id)
+    def _body(batch_df: DataFrame, control: tuple[Any, dict[str, Any]], batch_id: int) -> None:
+        model, config = control
+        sink(serve(config, batch_df, model=model, output_schema=output_schema), batch_id)
 
-    return (
-        data.writeStream.foreachBatch(_body)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    return for_each_batch_with_latest(
+        data, lambda: (model_loader(), config_loader()), _body, checkpoint
     )

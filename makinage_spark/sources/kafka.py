@@ -3,20 +3,30 @@ makinage/data/pull.py:6-76).
 
 Mapping of the reference's topic options (SURVEY §1.3, §2.1 A1/A2/A14):
 
-- ``start_from: end|beginning|last`` → ``startingOffsets: latest|earliest`` /
-  checkpointed offsets (``last`` without a checkpoint on a compacted model
-  topic = batch-read the final retained message: :func:`read_last_message`).
+- ``start_from: end|beginning|last`` → ``startingOffsets: latest|earliest``
+  for a stream (checkpointed offsets own the rest). A batch read takes the
+  whole retained log and applies :func:`bounded`, the one bounded-read rule
+  this connector and the topic emulator share: ``beginning`` is the whole
+  log, ``end`` is empty, ``last`` is the final message per (topic,
+  partition) — the compacted model-topic pattern (config.sample.serve.yml:
+  8-10).
 - ``max_partition_fetch_bytes`` → ``kafka.max.partition.fetch.bytes``
   (makinage/operator.py:258); producer ``max_request_size`` →
-  ``kafka.max.request.size`` (makinage/operator.py:267).
+  ``kafka.max.request.size`` (makinage/operator.py:267). A topic's
+  ``options:`` map goes to the reader and to the writer.
 - PID backpressure (makinage/operator.py:98-130) → ``maxOffsetsPerTrigger``
   (engine-managed pacing; SURVEY §7.2 drops the PID loop).
 - ``partition_selector`` (makinage/operator.py:44-48) → the Kafka ``key``
   column routes partitions; default (random over partitions) = Kafka's own
   round-robin when key is null.
+- ``encoder:`` → the codec pair of :data:`makinage_spark.encodings.ENCODINGS`
+  (:func:`decode_value` / :func:`encode_value`).
+
+:func:`kafka_sink` is the one producer sink: a batch write for a batch
+frame, a checkpointed ``foreachBatch`` of the same write for a streaming one.
 
 The Kafka connector JAR (spark-sql-kafka) may be absent in a test container —
-option construction is pure and unit-testable; ``.load()``/``.start()`` only
+option construction is pure and unit-testable; ``.load()``/``.save()`` only
 run where the package is available.
 """
 
@@ -24,7 +34,7 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from makinage_spark.encodings import ENCODINGS
@@ -54,24 +64,36 @@ def source_options(
     return opts
 
 
-def decode_value(df: DataFrame, encoding: str = "string", schema: str | None = None) -> DataFrame:
-    """Apply the topic encoder to the raw Kafka ``value: binary`` column
-    (reference encoders A10-A13, makinage/encoding/*)."""
-    if encoding == "string":
-        return df.withColumn("value", F.col("value").cast("string"))
-    if encoding == "json":
-        if schema is None:
-            raise ValueError("json encoding requires a schema")
-        return df.withColumn(
-            "record", F.from_json(F.col("value").cast("string"), schema)
-        ).select("key", "topic", "partition", "offset", "timestamp", "record.*")
-    if encoding == "none":
-        return df  # raw bytes pass-through
-    if encoding == "pickle":
-        from makinage_spark.encodings import pickle_decode
+def _codec(encoding: str):
+    if encoding not in ENCODINGS:
+        raise ValueError(f"unknown encoding {encoding!r}")
+    return ENCODINGS[encoding]
 
-        return pickle_decode()(df)
-    raise ValueError(f"unknown encoding {encoding!r}")
+
+def decode_value(df: DataFrame, encoding: str = "string", schema: str | None = None) -> DataFrame:
+    """Apply the topic decoder to the raw Kafka ``value: binary`` column
+    (reference encoders A10-A13, makinage/encoding/*); ``json`` needs the
+    topic's schema and flattens the record next to the wire columns."""
+    decode = _codec(encoding)[1]
+    if encoding != "json":
+        return decode()(df)
+    if schema is None:
+        raise ValueError("json encoding requires a schema")
+    return decode(schema)(df).select("key", "topic", "partition", "offset", "timestamp", "record.*")
+
+
+def bounded(raw: DataFrame, start_from: str) -> DataFrame:
+    """The bounded read of a wire frame at ``start_from``: ``beginning`` is
+    the whole log, ``end`` is empty (nothing lies beyond the log end), and
+    ``last`` is the final message per (topic, partition)."""
+    if start_from == "beginning":
+        return raw
+    if start_from == "end":
+        return raw.filter(F.lit(False))
+    if start_from == "last":
+        w = Window.partitionBy("topic", "partition").orderBy(F.desc("offset"))
+        return raw.withColumn("__rn", F.row_number().over(w)).filter("__rn = 1").drop("__rn")
+    raise ValueError(f"start_from must be beginning|end|last, got {start_from!r}")
 
 
 def kafka_source(
@@ -84,66 +106,50 @@ def kafka_source(
     streaming: bool = True,
     options: dict[str, Any] | None = None,
 ) -> DataFrame:
-    """Subscribe topics → decoded DataFrame (A1). Batch mode bounds the read
-    (earliest→latest), the reference's ``source_type: batch``
-    (makinage/operator.py:176-178) / ``pull()`` helper (makinage/data/pull.py)."""
+    """Subscribe topics → decoded DataFrame (A1). Batch mode reads the
+    retained log (earliest→latest) and applies :func:`bounded` — the
+    reference's ``source_type: batch`` (makinage/operator.py:176-178) /
+    ``pull()`` helper (makinage/data/pull.py)."""
     opts = source_options(server, topics, start_from)
     if not streaming:
-        opts["startingOffsets"] = "earliest"
-        opts["endingOffsets"] = "latest"
+        opts.update(startingOffsets="earliest", endingOffsets="latest")
     if options:
         opts.update({k: str(v) for k, v in options.items()})
     reader = (spark.readStream if streaming else spark.read).format("kafka")
-    return decode_value(reader.options(**opts).load(), encoding, schema)
-
-
-def read_last_message(
-    spark: SparkSession, server: str, topic: str, encoding: str = "none"
-) -> DataFrame:
-    """``start_from: last`` for control/model topics (config.sample.serve.yml:
-    8-10): the most recent retained message per partition, as a bounded read."""
-    from makinage_spark import ops
-
-    df = kafka_source(spark, server, [topic], encoding="none", streaming=False)
-    last = ops.last(order_by=[F.col("offset")], by=["partition"])(df)
-    return decode_value(last, encoding)
+    raw = reader.options(**opts).load()
+    return decode_value(raw if streaming else bounded(raw, start_from), encoding, schema)
 
 
 def encode_value(df: DataFrame, encoding: str = "string", key: str | None = None) -> DataFrame:
     """Encode columns into the Kafka ``value`` (+ optional ``key``) wire
     columns (A2; key ≈ partition_selector, A14)."""
-    enc, _ = ENCODINGS[encoding]
-    if encoding == "json":
-        out = enc()(df)
-    elif encoding == "string":
-        out = enc()(df)
-    else:
-        out = enc()(df)
     cols = [F.col("value")]
     if key:
         cols.insert(0, F.col(key).cast("binary").alias("key"))
-    return out.select(*cols)
+    return _codec(encoding)[0]()(df).select(*cols)
 
 
-def sink_options(server: str, topic: str, max_request_size: int | None = None) -> dict[str, str]:
-    opts = {"kafka.bootstrap.servers": server, "topic": topic}
-    if max_request_size:
-        opts["kafka.max.request.size"] = str(max_request_size)
+def sink_options(topic: dict[str, Any]) -> dict[str, str]:
+    """The writer option map of a topic dict (pure): bootstrap server and
+    topic name, ``max_request_size``, then the topic's ``options:``."""
+    opts = {"kafka.bootstrap.servers": topic["server"], "topic": topic["name"]}
+    if topic.get("max_request_size"):
+        opts["kafka.max.request.size"] = str(topic["max_request_size"])
+    opts.update({k: str(v) for k, v in topic.get("options", {}).items()})
     return opts
 
 
-def kafka_sink_batch(df: DataFrame, topic: dict[str, Any]) -> None:
-    opts = sink_options(topic["server"], topic["name"], topic.get("max_request_size"))
-    encoded = encode_value(df, topic.get("encoder", "string"), topic.get("key"))
-    encoded.write.format("kafka").options(**opts).save()
+def kafka_sink(df: DataFrame, topic: dict[str, Any], checkpoint: str | None = None):
+    """Produce ``df`` onto ``topic`` (A2): a batch write, or for a streaming
+    ``df`` the same write per micro-batch (``foreachBatch``, default
+    trigger) under ``checkpoint``. Returns the query, or None."""
+    opts = sink_options(topic)
 
+    def write(batch: DataFrame, _batch_id: int | None = None) -> None:
+        encoded = encode_value(batch, topic.get("encoder", "string"), topic.get("key"))
+        encoded.write.format("kafka").options(**opts).save()
 
-def kafka_sink_stream(df: DataFrame, topic: dict[str, Any]):
-    opts = sink_options(topic["server"], topic["name"], topic.get("max_request_size"))
-    encoded = encode_value(df, topic.get("encoder", "string"), topic.get("key"))
-    return (
-        encoded.writeStream.format("kafka")
-        .options(**opts)
-        .option("checkpointLocation", topic.get("checkpoint", f"/tmp/ck_{topic['name']}"))
-        .start()
-    )
+    if not df.isStreaming:
+        write(df)
+        return None
+    return df.writeStream.foreachBatch(write).option("checkpointLocation", checkpoint).start()

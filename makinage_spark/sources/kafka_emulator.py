@@ -12,17 +12,19 @@ implements the SAME wire contract the real connector exposes:
   ``encode_value`` (the reference's encoder layer, A10–A13) run unchanged;
 - per-partition monotonically increasing offsets assigned at produce time;
 - ``start_from: beginning|end|last`` read semantics
-  (makinage/operator.py:50-53): ``beginning`` replays the full retained log,
-  ``end`` tails only data produced after subscription (batch: empty),
-  ``last`` reads the final retained message per partition (the compacted
-  model-topic pattern, config.sample.serve.yml:8-10);
+  (makinage/operator.py:50-53): a batch read applies the connector's own
+  :func:`makinage_spark.sources.kafka.bounded` (``beginning`` replays the
+  full retained log, ``end`` is empty, ``last`` is the final retained
+  message per partition, the compacted model-topic pattern,
+  config.sample.serve.yml:8-10); a stream replays from ``beginning``;
 - key-hash partition routing (null key → round-robin), the
   ``partition_selector`` contract (A14, makinage/operator.py:44-48).
 
 Storage is one parquet directory per topic under a broker root — append-only
 like a log segment; a streaming subscription is a plain file stream over the
 topic directory, so Structured Streaming's checkpoint/offset machinery (the
-real connector's replay path) is exercised for free.
+real connector's replay path) is exercised for free. :func:`emu_sink` is the
+one producer sink, a batch :func:`produce` or one per micro-batch.
 """
 
 from __future__ import annotations
@@ -36,7 +38,7 @@ import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from makinage_spark.sources.kafka import decode_value, encode_value
+from makinage_spark.sources.kafka import bounded, decode_value, encode_value
 
 WIRE_SCHEMA = (
     "key binary, value binary, topic string, partition int, "
@@ -166,8 +168,8 @@ def emu_source(
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Subscribe topics → decoded DataFrame: the A1 consumer contract with
-    the reference's ``start_from`` semantics. Decoding is the SAME
-    ``decode_value`` the real connector path uses.
+    the reference's ``start_from`` semantics (:func:`bounded`). Decoding is
+    the SAME ``decode_value`` the real connector path uses.
 
     ``max_files_per_trigger`` bounds how much of the retained log each
     micro-batch ingests — the emulator's pacing contract. The reference
@@ -176,8 +178,6 @@ def emu_source(
     bound (``maxOffsetsPerTrigger`` on the real Kafka connector,
     ``maxFilesPerTrigger`` on this file-backed log — each produce() append
     is one log segment, so the record bound is segment-granular)."""
-    if start_from not in ("beginning", "end", "last"):
-        raise ValueError(f"start_from must be beginning|end|last, got {start_from!r}")
     if streaming:
         if start_from != "beginning":
             # a file stream replays the whole retained log, then tails new
@@ -199,58 +199,34 @@ def emu_source(
     raw = parts[0]
     for p in parts[1:]:
         raw = raw.unionByName(p)
-    if not streaming and start_from == "end":
-        # batch at startingOffsets=latest: nothing beyond the high-water mark
-        raw = raw.filter(F.lit(False))
-    if not streaming and start_from == "last":
-        w = Window.partitionBy("topic", "partition").orderBy(F.desc("offset"))
-        raw = (
-            raw.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-    return decode_value(raw, encoding, schema)
+    return decode_value(raw if streaming else bounded(raw, start_from), encoding, schema)
 
 
-def emu_sink_batch(df: DataFrame, topic: dict[str, Any]) -> None:
-    """Batch producer sink for the graph compiler (mirrors kafka_sink_batch)."""
-    produce(
-        df.sparkSession,
-        topic["broker_dir"],
-        topic["name"],
-        df,
-        encoding=topic.get("encoder", "string"),
-        key=topic.get("key"),
-        partitions=int(topic.get("partitions", 2)),
-    )
+def emu_sink(df: DataFrame, topic: dict[str, Any], checkpoint: str | None = None):
+    """Producer sink for the graph compiler (the twin of ``kafka_sink``):
+    :func:`produce` ``df``, or for a streaming ``df`` each micro-batch
+    through ``foreachBatch`` under ``checkpoint``, drained by an
+    ``availableNow`` trigger (offsets continue from the log end, which is
+    per-batch driver-side state — the same transactional-append shape the
+    real sink delegates to the broker). Returns the query, or None."""
 
-
-def emu_sink_stream(df: DataFrame, topic: dict[str, Any]):
-    """Streaming producer sink: encode through the codec layer, then append
-    wire frames per micro-batch via foreachBatch (offset assignment needs the
-    log's high-water mark, which is per-batch driver-side state — the same
-    transactional-append shape the real sink delegates to the broker)."""
-    name = topic["name"]
-
-    def _write(batch_df: DataFrame, _batch_id: int) -> None:
+    def write(batch: DataFrame, _batch_id: int | None = None) -> None:
         produce(
-            batch_df.sparkSession,
+            batch.sparkSession,
             topic["broker_dir"],
-            name,
-            batch_df,
+            topic["name"],
+            batch,
             encoding=topic.get("encoder", "string"),
             key=topic.get("key"),
             partitions=int(topic.get("partitions", 2)),
         )
 
-    # default checkpoint lives INSIDE broker_dir so its lifetime is tied to
-    # the emulated broker instance — a global /tmp path would let two
-    # independent graphs (or a rerun after a broker_dir wipe) reusing a
-    # topic name silently resume from a stale checkpoint
-    default_ck = os.path.join(topic["broker_dir"], "_ck", name)
+    if not df.isStreaming:
+        write(df)
+        return None
     return (
-        df.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", topic.get("checkpoint", default_ck))
+        df.writeStream.foreachBatch(write)
+        .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
     )

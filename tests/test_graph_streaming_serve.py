@@ -130,7 +130,9 @@ def test_kafka_source_options():
 
 
 def test_kafka_sink_options_and_encode(spark):
-    opts = mkafka.sink_options("broker:9092", "out", max_request_size=32 * 1024 * 1024)
+    opts = mkafka.sink_options(
+        {"server": "broker:9092", "name": "out", "max_request_size": 32 * 1024 * 1024}
+    )
     assert opts["kafka.max.request.size"] == str(32 * 1024 * 1024)
     df = spark.createDataFrame([("k1", "hello")], "k string, value string")
     encoded = mkafka.encode_value(df, "string", key="k")
@@ -145,6 +147,108 @@ def test_kafka_json_decode_roundtrip(spark):
     )
     out = mkafka.decode_value(raw, "json", "x double")
     assert out.collect()[0]["x"] == 1.5
+
+
+def test_kafka_sink_options_take_the_topic_options():
+    opts = mkafka.sink_options({
+        "server": "b:9092", "name": "out", "max_request_size": 1024,
+        "options": {"kafka.max.request.size": 2048, "kafka.acks": "all"},
+    })
+    assert opts == {
+        "kafka.bootstrap.servers": "b:9092",
+        "topic": "out",
+        "kafka.max.request.size": "2048",  # options: come last and win
+        "kafka.acks": "all",
+    }
+
+
+def _wire_frame(spark):
+    """Two topics x two partitions, offsets 0..2 per partition; value names
+    (topic, partition, offset)."""
+    rows = [
+        (None, bytearray(f"{t}{p}{o}".encode()), t, p, o, None)
+        for t in ("a", "b") for p in (0, 1) for o in range(3)
+    ]
+    return spark.createDataFrame(
+        rows,
+        "key binary, value binary, topic string, partition int, offset bigint, timestamp timestamp",
+    )
+
+
+def test_bounded_read_rule(spark):
+    raw = _wire_frame(spark)
+
+    def values(df):
+        return sorted(bytes(r.value).decode() for r in df.collect())
+
+    assert values(mkafka.bounded(raw, "beginning")) == values(raw)
+    assert len(values(raw)) == 12
+    assert mkafka.bounded(raw, "end").count() == 0
+    assert values(mkafka.bounded(raw, "last")) == ["a02", "a12", "b02", "b12"]
+    assert mkafka.bounded(raw, "last").columns == raw.columns
+    with pytest.raises(ValueError, match="beginning|end|last"):
+        mkafka.bounded(raw, "nope")
+
+
+def test_kafka_batch_read_honours_start_from(spark, monkeypatch):
+    """A bounded ``format: kafka`` read applies start_from: ``end`` is
+    empty and ``last`` is the final message per (topic, partition), as the
+    emulator twin reads. The connector's load is stubbed with a wire frame."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    raw = _wire_frame(spark)
+    monkeypatch.setattr(DataFrameReader, "load", lambda self, *a, **kw: raw)
+
+    def read(start_from):
+        df = mkafka.kafka_source(spark, "b:9092", ["a", "b"], start_from=start_from,
+                                 streaming=False)
+        return sorted(r.value for r in df.collect())
+
+    assert len(read("beginning")) == 12
+    assert read("end") == []
+    assert read("last") == ["a02", "a12", "b02", "b12"]
+
+
+def test_model_publisher_cap_reaches_the_kafka_producer(spark, tmp_path, monkeypatch):
+    """The 32 MiB publish cap is a producer option of the Kafka write."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from makinage_spark import model_publisher
+
+    seen = {}
+
+    def options(self, **kw):
+        seen.update(kw)
+        return self
+
+    monkeypatch.setattr(DataFrameWriter, "options", options)
+    monkeypatch.setattr(DataFrameWriter, "save", lambda self, *a, **kw: None)
+    art = tmp_path / "model.zip"
+    art.write_bytes(b"model-bytes")
+    topic = {"name": "models", "format": "kafka", "server": "b:9092"}
+    out = model_publisher.publish_models(spark, {"models": [{"file": str(art), "topic": topic}]})
+    assert out == [("models", 1)]
+    assert seen["kafka.max.request.size"] == "33554432"
+    assert seen["topic"] == "models" and seen["kafka.bootstrap.servers"] == "b:9092"
+
+
+def test_streaming_kafka_sink_needs_a_checkpoint(spark, tmp_path):
+    """No shared default checkpoint for a Kafka sink: two graphs writing one
+    topic name would resume each other's offsets."""
+    indir = str(tmp_path / "in")
+    spark.createDataFrame([("5",)], "value string").write.parquet(indir)
+    config = {
+        "application": {"name": "k", "source_type": "stream"},
+        "topics": [
+            {"name": "values", "format": "parquet", "path": indir, "schema": "value string"},
+            {"name": "out", "format": "kafka", "server": "b:9092"},
+        ],
+        "operators": {"multiply": {
+            "factory": "makinage_spark.sample.processor:multiply",
+            "config": {"multiply": 3}, "sources": ["values"], "sinks": ["out"]}},
+    }
+    with pytest.raises(ValueError, match="checkpoint"):
+        run_graph(spark, config)
 
 
 # ---------------------------------------------------------------------------
@@ -271,6 +375,33 @@ def test_serve_error_isolation(spark):
     out = mserve.serve(config, data, model=type("M", (), {"predict": staticmethod(boom)})(),
                        output_schema="x double, pred double")
     assert out.collect() == []  # batch dropped, pipeline alive (serve.py:46-57)
+
+
+def test_serve_default_schema_keeps_nested_columns(spark):
+    data = spark.createDataFrame(
+        [(1.0, (1, "p")), (2.0, (2, "q"))], "x double, s struct<a:int,b:string>"
+    )
+    config = {"input_field": "x", "predict": "makinage_spark.sample.serve:double_predict"}
+    out = mserve.serve(config, data)
+    assert out.columns == ["x", "s", "pred"]
+    got = sorted((r.x, r.s.a, r.s.b, r.pred) for r in out.collect())
+    assert got == [(1.0, 1, "p", 2.0), (2.0, 2, "q", 4.0)]
+
+
+def test_serve_default_schema_on_flat_input(spark):
+    """Flat input: the input's fields, all nullable, plus ``pred double``."""
+    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+    data = spark.range(3).select("id", (F.col("id") * 1.0).alias("x"))
+    assert not data.schema["id"].nullable
+    config = {"input_field": "x", "predict": "makinage_spark.sample.serve:double_predict"}
+    out = mserve.serve(config, data)
+    assert out.schema == StructType([
+        StructField("id", LongType(), True),
+        StructField("x", DoubleType(), True),
+        StructField("pred", DoubleType(), True),
+    ])
+    assert sorted(r.pred for r in out.collect()) == [0.0, 2.0, 4.0]
 
 
 def test_serve_stream_hot_swap(spark):

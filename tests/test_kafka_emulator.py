@@ -195,12 +195,7 @@ def test_streaming_checkpoint_replays_only_new_offsets(spark, broker, tmp_path):
     offset progress lives in the Structured Streaming checkpoint exactly as
     it would in a Kafka consumer group."""
     ck = str(tmp_path / "ck")
-    out_topic = {
-        "name": "doubled",
-        "broker_dir": broker,
-        "encoder": "string",
-        "checkpoint": ck,
-    }
+    out_topic = {"name": "doubled", "broker_dir": broker, "encoder": "string"}
     _produce_strings(spark, broker, "nums", ["1", "2"])
     src = emu.emu_source(
         spark, broker, ["nums"], encoding="string", start_from="beginning",
@@ -209,7 +204,7 @@ def test_streaming_checkpoint_replays_only_new_offsets(spark, broker, tmp_path):
     doubled = src.withColumn(
         "value", (F.col("value").cast("long") * 2).cast("string")
     )
-    emu.emu_sink_stream(doubled, out_topic).awaitTermination()
+    emu.emu_sink(doubled, out_topic, ck).awaitTermination()
     first = sorted(
         r.value
         for r in emu.emu_source(spark, broker, ["doubled"]).collect()
@@ -217,7 +212,7 @@ def test_streaming_checkpoint_replays_only_new_offsets(spark, broker, tmp_path):
     assert first == ["2", "4"]
     # produce more, rerun against the SAME checkpoint: only new offsets flow
     _produce_strings(spark, broker, "nums", ["10"])
-    emu.emu_sink_stream(doubled, out_topic).awaitTermination()
+    emu.emu_sink(doubled, out_topic, ck).awaitTermination()
     second = sorted(
         int(r.value)
         for r in emu.emu_source(spark, broker, ["doubled"]).collect()

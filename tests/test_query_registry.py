@@ -17,11 +17,17 @@ from makinage_spark.queries import ORACLES, QUERIES
 
 SF_DIR = os.environ.get("SMOKE_SF_DIR", "/root/testdata/sf0.001")
 
-#: Streaming queries spin up a real StreamingQuery each call (~2s apiece);
-#: run a representative pair rather than all of them on every pytest pass.
-SLOW_STREAMING = {"stream_hourly_counts", "stream_roll_windows"}
+#: Streaming queries spin up a real StreamingQuery each call (~2s apiece):
+#: SLOW_STREAMING ones skip the determinism re-run, SKIP_IN_SMOKE ones do
+#: not run here.
+SLOW_STREAMING = {
+    "stream_hourly_counts",
+    "stream_roll_windows",
+    "stream_stream_join",
+    "stream_sliding_window",
+    "graph_multiply_streaming",
+}
 SKIP_IN_SMOKE = {"stream_dedup_keys", "stream_scan_running"}
-SLOW_STREAMING = SLOW_STREAMING | {"stream_stream_join", "stream_sliding_window", "graph_multiply_streaming"}
 
 
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - SKIP_IN_SMOKE))
