@@ -85,7 +85,7 @@ def pickle_decode(col: str = "value", out: str = "pickled", out_type: str = "str
     return _op
 
 
-def pickle_encode(col: str, out: str = "value"):
+def pickle_encode(col: str = "value", out: str = "value"):
     @F.pandas_udf(BinaryType())
     def _dumps(s: pd.Series) -> pd.Series:
         return s.map(lambda v: _pickle.dumps(v))

@@ -10,7 +10,7 @@ training-data pipeline runs at corpus scale.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from makinage_spark.materialize import materialize
 
@@ -21,7 +21,6 @@ def pagerank(
     dst: str = "dst",
     damping: float = 0.85,
     iterations: int = 3,
-    broadcast_ranks: bool = False,
     assume_distinct: bool = False,
     dangling: str = "drop",
     personalize: DataFrame | None = None,
@@ -43,169 +42,131 @@ def pagerank(
     oracle bit-for-bit. Every double op in the update runs on exact integer
     inputs below 2^53, so it is deterministic on any IEEE engine.
 
-    Scale shape: each iteration is one hash join of the |V|-row rank vector
-    to the edge list on ``src`` plus one shuffle-aggregate on ``dst`` — the
-    textbook distributed formulation. Out-degrees are pre-joined into the
-    edge list ONCE as a persisted loop invariant ``(src, dst, outdeg)``, so
-    no iteration ever re-joins the degree table; the per-edge contribution
-    ``half_up(rank_nanos / outdeg)`` depends only on src-level values, so
-    computing it per edge row is bit-identical to the per-source
-    formulation. With ``broadcast_ranks=True`` the rank
-    vector is broadcast instead, so the edge list moves ONCE per iteration
-    (the map-side-combined ``dst`` aggregate) rather than twice — the right
-    choice whenever |V| fits in executor memory (up to tens of millions of
-    nodes; beyond that leave it off and let AQE pick the join). The returned plan unrolls
+    Scale shape: the loop invariants are CO-PARTITIONED with the rank
+    vector. The weighted edge list ``ew = (src, dst, outdeg)`` is held once,
+    sized to the graph (~250k edges per partition, floor 4) and
+    hash-partitioned on ``src``; the node vector ``base`` is held
+    hash-partitioned on ``id`` into the same number of partitions, and its
+    count is the driver literal ``n``. A round joins ``ew`` with the previous
+    ranks partition by partition (a shuffled hash join with no exchange),
+    sums the per-edge contributions on ``dst`` through one map-side-combined
+    shuffle, and left-joins that aggregate back onto ``base``: one shuffle
+    per round and no broadcast. If the session's
+    ``spark.sql.shuffle.partitions`` differs from ``ew``'s partition count,
+    each round also re-exchanges the aggregate (|V| rows) to ``ew``'s
+    count, so ``ew`` itself never moves.
+
+    Jobs: the call runs two eager SQL executions, the sized ``ew`` persist
+    and the ``base`` count (three with ``personalize``: the seed count).
+    The lazy result then runs one shuffle-map job per round plus its result
+    job. The registry's graph_pagerank (sf0.01, local[4], 4 shuffle
+    partitions) runs 16 jobs per evaluation this way; with a broadcast rank
+    vector and contribution per round it ran 34. The returned plan unrolls
     ``iterations`` rounds of lineage; for iterations ≳ 8 on a real cluster,
     checkpoint the rank vector every few rounds to truncate lineage (same
     pattern as dedup.connected_components' pointer jumping).
 
-    The loop invariants (``e``, ``ew``, ``base``) stay held for the lazy
-    result: run repeated calls inside ``materialize.scope()``.
+    The loop invariants (``ew``, ``base``, the seed set) stay held for the
+    lazy result: run repeated calls inside ``materialize.scope()``.
 
     Personalized PageRank: pass ``personalize`` — a DataFrame whose first
     column is the restart node-id set S — and all teleport mass (both the
     initial vector and the per-iteration ``(1-d)`` term) concentrates
     uniformly on S instead of on all nodes: the random-walk-with-restart
     scores used for seed-relative relevance (e.g. propagating quality from
-    trusted seed domains through a web graph). S is broadcast (seed sets are
-    small by construction); non-seed nodes start at 0 and receive mass only
-    through edges. With ``dangling="drop"`` (required for now) dangling mass
-    vanishes exactly as in the uniform case.
+    trusted seed domains through a web graph). The seed flag rides on
+    ``base``; non-seed nodes start at 0 and receive mass only through edges.
+    With ``dangling="drop"`` (required for now) dangling mass vanishes
+    exactly as in the uniform case.
 
     Dangling nodes (no out-edges): ``dangling="drop"`` (default) lets their
     mass vanish, matching the common sparse formulation;
     ``dangling="redistribute"`` applies the textbook correction — each
-    iteration sums the exact fixed-point mass held by dangling nodes (one
-    anti-join + 1-row aggregate, broadcast back in-plan) and spreads the
-    per-node share ``half_up(dangling_nanos / n)`` uniformly inside the
+    iteration sums the exact fixed-point mass held by the nodes ``base``
+    flags as sinks (a 1-row aggregate, broadcast back in-plan) and spreads
+    the per-node share ``half_up(dangling_nanos / n)`` uniformly inside the
     damped term, so total mass is conserved up to rounding. Nodes never
     referenced by any edge are absent.
     """
     if dangling not in ("drop", "redistribute"):
         raise ValueError(f"dangling must be drop|redistribute, got {dangling!r}")
+    if personalize is not None and dangling != "drop":
+        raise ValueError("personalize currently requires dangling='drop'")
     half_up = lambda x: F.floor(x + F.lit(0.5)).cast("bigint")  # noqa: E731
-    # loop invariants: persist, or every unrolled round re-derives the edge
-    # list from source lineage (measured 4× total-work blowup at 3 rounds).
-    # SIZED persist (r8): e inherits corpus-width partitioning from its
-    # lineage, and nodes/outdeg/ew are all derived from it — sizing the
-    # FIRST materialization means every downstream pass (the nodes
-    # distinct, the degree agg, the ew join+count) runs over ~250k-row
-    # cached blocks instead of corpus-width near-empty ones. Interleaved
-    # min-of-3 at sf0.1 (1.17M sym edges, 3 iters, broadcast ranks):
-    # 6.6 → 3.6 s end-to-end vs sizing only ew.
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     if not assume_distinct:
         # duplicate edges would double-count contributions; callers that
         # guarantee uniqueness (assume_distinct=True) skip this E-sized shuffle
         e = e.distinct()
-    e = materialize(e, size_by="src")
-    # persisted (r13): nodes is referenced TWICE — the n_df 1-row count that
-    # broadcasts into base, and base itself — and without the persist the
-    # |V| union-distinct over the edge cache computed twice per evaluation
-    # (two back-to-back full-width jobs in the sf1 event-log breakdown).
-    # |V| rows is tiny next to the edge cache this function already holds.
-    # Measured A/B in OPTIMIZATION_r13.md: sf0.1 3.635 → 3.513 s, sf1 (10×
-    # fixture) 8.251 → 7.729 s, ranks bit-identical.
-    nodes = materialize(
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
+    # the one held edge invariant: out-degrees ride on the edge rows, so a
+    # round is a single join (rank vector -> weighted edges). Sized to the
+    # graph (see materialize._partitions_for): a derived graph inherits the
+    # corpus's partition count, and every round would otherwise schedule a
+    # corpus-width task wave over near-empty cached blocks.
+    ew = materialize(
+        e.withColumn("outdeg", F.count(F.lit(1)).over(Window.partitionBy("src"))),
+        size_by="src",
     )
-    # outdeg is consumed once to build ew; only the redistribute path re-reads
-    # it (per-iteration dangling anti-join), so only that path caches it —
-    # persisting on the drop path would hold edge-scale state for the whole
-    # session with zero reuse
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    if dangling == "redistribute":
-        outdeg = materialize(outdeg)
-    # loop invariant: edges annotated with their source's out-degree, so the
-    # iteration body is a single join (rank vector → weighted edges) instead
-    # of rank⋈outdeg followed by edges⋈emitting.
-    # The persisted invariant is SIZED TO THE GRAPH (~250k edges/partition,
-    # floor 4) — same policy as dedup.connected_components: a derived graph
-    # inherits the corpus's partition count, and every iteration then
-    # schedules a corpus-width task wave over near-empty cached blocks
-    # (cached plans don't get AQE re-coalescing by default). Measured at
-    # sf0.1 (1.17M sym edges, 3 iters, broadcast ranks): 7.97 → 3.63 s.
-    # At 100 TB the same rule yields thousands of partitions — it is a
-    # sizing rule, not a small-data shortcut. Sized by ``size_by`` (r8) so
-    # the guard compares against the relation's ACTUAL partition count, not
-    # the session shuffle-partitions config, and upsizes huge graphs on
-    # untuned sessions; its count doubles as the materialization barrier
-    # for the persisted edge list.
-    ew = materialize(e.join(outdeg, "src"), size_by="src")
-    n_df = nodes.agg(F.count(F.lit(1)).cast("double").alias("n"))
+    parts = ew.rdd.getNumPartitions()
+    # sink = 1 for a node with no out-edge (the redistribute path's flag)
+    nodes = (
+        ew.select(F.col("src").alias("id"), F.lit(0).alias("sink"))
+        .union(ew.select(F.col("dst").alias("id"), F.lit(1).alias("sink")))
+        .groupBy("id")
+        .agg(F.min("sink").alias("sink"))
+    )
+    restart = F.lit(True)
     if personalize is not None:
-        if dangling != "drop":
-            raise ValueError("personalize currently requires dangling='drop'")
-        seeds = personalize.select(
-            F.col(personalize.columns[0]).alias("id")
-        ).distinct()
-        s_df = seeds.agg(F.count(F.lit(1)).cast("double").alias("s"))
-        base = materialize(
-            nodes.join(
-                F.broadcast(seeds.select("id", F.lit(1).alias("is_seed"))),
-                "id",
-                "left",
-            )
-            .select("id", F.coalesce("is_seed", F.lit(0)).alias("is_seed"))
-            .crossJoin(F.broadcast(n_df))
-            .crossJoin(F.broadcast(s_df))
+        seeds = materialize(
+            personalize.select(F.col(personalize.columns[0]).alias("id")).distinct()
         )
-        carry = ["id", "n", "s", "is_seed"]
-        ranks = base.select(
-            *carry,
-            F.when(
-                F.col("is_seed") == 1, half_up(F.lit(1.0e9) / F.col("s"))
-            )
-            .otherwise(F.lit(0))
-            .cast("bigint")
-            .alias("rank_nanos"),
+        # an empty set or graph has no row that divides by its size
+        k = float(seeds.count() or 1)
+        nodes = nodes.join(
+            F.broadcast(seeds.withColumn("seed", F.lit(True))), "id", "left"
         )
-        tele = F.when(
-            F.col("is_seed") == 1, (1.0 - damping) * 1.0e9 / F.col("s")
-        ).otherwise(F.lit(0.0))
-    else:
-        base = materialize(nodes.crossJoin(F.broadcast(n_df)))
-        carry = ["id", "n"]
-        ranks = base.select(
-            *carry, half_up(F.lit(1.0e9) / F.col("n")).alias("rank_nanos")
-        )
-        tele = (1.0 - damping) * 1.0e9 / F.col("n")
-    maybe_bc = F.broadcast if broadcast_ranks else (lambda df: df)
+        restart = F.col("seed").isNotNull()
+    # the node vector, partitioned exactly like ew (the repartition is
+    # planned away when the aggregate above already has ``parts`` partitions)
+    base = materialize(nodes.repartition(parts, "id"))
+    n = float(base.count() or 1)
+    if personalize is None:
+        k = n
+    ranks = base.withColumn(
+        "rank_nanos",
+        F.when(restart, half_up(F.lit(1.0e9) / F.lit(k))).otherwise(F.lit(0)),
+    )
+    tele = F.when(restart, (1.0 - damping) * 1.0e9 / F.lit(k)).otherwise(F.lit(0.0))
     for _ in range(iterations):
         emitting = ranks.select(F.col("id").alias("src"), "rank_nanos")
         contrib = (
-            ew.join(maybe_bc(emitting), "src")
+            ew.join(emitting.hint("shuffle_hash"), "src")
             .groupBy(F.col("dst").alias("id"))
             .agg(
                 F.sum(
                     half_up(F.col("rank_nanos").cast("double") / F.col("outdeg"))
                 ).alias("contrib")
             )
+            # planned away when the session shuffles into ``parts``
+            # partitions; otherwise it moves |V| rows so that the next
+            # round's join does not move ew
+            .repartition(parts, "id")
         )
-        updated = base.join(maybe_bc(contrib), "id", "left")
+        updated = base.join(contrib.hint("shuffle_hash"), "id", "left")
         received = F.coalesce(F.col("contrib"), F.lit(0))
         if dangling == "redistribute":
             # exact bigint mass held by out-degree-0 nodes this round; the
             # 1-row aggregate broadcasts back into the update in-plan
-            dang = (
-                ranks.join(outdeg, ranks.id == outdeg.src, "left_anti")
-                .agg(
-                    F.coalesce(F.sum("rank_nanos"), F.lit(0))
-                    .cast("bigint")
-                    .alias("dang_nanos")
-                )
+            dang = ranks.filter(F.col("sink") == 1).agg(
+                F.coalesce(F.sum("rank_nanos"), F.lit(0))
+                .cast("bigint")
+                .alias("dang_nanos")
             )
             updated = updated.crossJoin(F.broadcast(dang))
-            received = received + half_up(
-                F.col("dang_nanos").cast("double") / F.col("n")
-            )
+            received = received + half_up(F.col("dang_nanos").cast("double") / n)
         ranks = updated.select(
-            *carry,
-            half_up(
-                tele + damping * received.cast("double")
-            ).alias("rank_nanos"),
+            *base.columns,
+            half_up(tele + damping * received.cast("double")).alias("rank_nanos"),
         )
     return ranks.select(
         "id",

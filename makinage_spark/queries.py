@@ -6999,9 +6999,7 @@ def q_graph_pagerank(spark, sf_dir):
     truncate the unrolled lineage."""
     e0 = _cust_supp_edges(spark, sf_dir)
     sym = e0.union(e0.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    return graphs.pagerank(
-        sym, damping=0.85, iterations=3, broadcast_ranks=True, assume_distinct=True
-    )
+    return graphs.pagerank(sym, damping=0.85, iterations=3, assume_distinct=True)
 
 
 def _label_prop_sql(iters: int = 3) -> str:
@@ -7113,14 +7111,13 @@ def q_graph_pagerank_dangling(spark, sf_dir):
     """PageRank with the textbook dangling-mass correction over the DIRECTED
     customer→supplier graph — every supplier node is dangling (no
     out-edges), so each round redistributes their exact fixed-point mass
-    uniformly (one anti-join + broadcast 1-row aggregate per iteration;
+    uniformly (one flagged-sink 1-row aggregate, broadcast, per iteration;
     graphs.pagerank(dangling='redistribute')). Verified against the
     unrolled 3-round CTE oracle, bit-for-bit like graph_pagerank."""
     return graphs.pagerank(
         _cust_supp_edges(spark, sf_dir),
         damping=0.85,
         iterations=3,
-        broadcast_ranks=True,
         assume_distinct=True,
         dangling="redistribute",
     )
@@ -18412,7 +18409,6 @@ def q_graph_personalized_pagerank(spark, sf_dir):
         sym,
         damping=0.85,
         iterations=3,
-        broadcast_ranks=True,
         assume_distinct=True,
         personalize=seeds,
     )

@@ -73,10 +73,11 @@ def _codec(encoding: str):
 def decode_value(df: DataFrame, encoding: str = "string", schema: str | None = None) -> DataFrame:
     """Apply the topic decoder to the raw Kafka ``value: binary`` column
     (reference encoders A10-A13, makinage/encoding/*); ``json`` needs the
-    topic's schema and flattens the record next to the wire columns."""
+    topic's schema and flattens the record next to the wire columns, every
+    other codec writes its decoded ``value`` over the raw one."""
     decode = _codec(encoding)[1]
     if encoding != "json":
-        return decode()(df)
+        return decode(out="value")(df)
     if schema is None:
         raise ValueError("json encoding requires a schema")
     return decode(schema)(df).select("key", "topic", "partition", "offset", "timestamp", "record.*")

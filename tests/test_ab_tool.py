@@ -79,3 +79,35 @@ def test_conf_without_equals_is_a_usage_error(capsys):
         ab.main(["--conf", "spark.sql.shuffle.partitions", "q1_pricing_summary"])
     assert e.value.code == 2
     assert "expected K=V" in capsys.readouterr().err
+
+
+def test_profile_rows_count_sql_executions_per_attempt():
+    ab = _ab()
+    sql = "org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart"
+
+    def ev(**kw):
+        return json.dumps(kw)
+
+    lines = [
+        # attempt 1 (10.0-11.0 s): two executions, the first stamped in its
+        # first millisecond, and one job
+        ev(Event=sql, executionId=0, time=9_999),
+        ev(Event="SparkListenerJobStart", **{"Job ID": 0, "Submission Time": 10_100, "Stage IDs": [0]}),
+        ev(Event="SparkListenerJobEnd", **{"Job ID": 0, "Completion Time": 10_400}),
+        ev(Event=sql, executionId=1, time=10_500),
+        # an adaptive-plan update mentions executions but starts none
+        ev(Event="org.apache.spark.sql.execution.ui.SparkListenerSQLAdaptiveExecutionUpdate",
+           executionId=1, physicalPlanDescription="after SQLExecutionStart"),
+        # attempt 2 (12.0-13.0 s): one execution, two jobs
+        ev(Event=sql, executionId=2, time=12_100),
+        ev(Event="SparkListenerJobStart", **{"Job ID": 1, "Submission Time": 12_200, "Stage IDs": [1]}),
+        ev(Event="SparkListenerJobEnd", **{"Job ID": 1, "Completion Time": 12_300}),
+        ev(Event="SparkListenerJobStart", **{"Job ID": 2, "Submission Time": 12_400, "Stage IDs": [2]}),
+        ev(Event="SparkListenerJobEnd", **{"Job ID": 2, "Completion Time": 12_500}),
+        # outside both attempts
+        ev(Event=sql, executionId=3, time=14_000),
+    ]
+    rows = ab.profile_rows(lines, {"q1": [(10.0, 11.0)], "q2": [(12.0, 13.0)]})
+    assert [r["spark.sql_executions"] for r in rows["q1"] + rows["q2"]] == [2, 1]
+    assert [r["spark.jobs"] for r in rows["q1"] + rows["q2"]] == [1, 2]
+    assert set(rows["q1"][0]) == set(ab.PROFILE_KEYS) | {"spark.sql_executions"}

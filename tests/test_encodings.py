@@ -46,3 +46,13 @@ def test_pickle_encode(spark):
     df = spark.createDataFrame([("hello",)], "v string")
     out = pipe(df, encodings.pickle_encode("v"))
     assert pickle.loads(bytes(out.collect()[0]["value"])) == "hello"
+
+
+def test_every_codec_factory_builds_without_arguments():
+    # the connectors build encoders as ENCODINGS[name][0]() and every
+    # decoder but json's (which needs the topic schema) as [1](out="value")
+    for name, (encode, decode) in encodings.ENCODINGS.items():
+        assert callable(encode()), name
+        if name != "json":
+            assert callable(decode()), name
+            assert callable(decode(out="value")), name

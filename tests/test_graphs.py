@@ -1,6 +1,9 @@
 """graphs.pagerank: fixed-point determinism and known-graph values."""
 
-from makinage_spark import graphs
+import pytest
+from conftest import conf_override
+
+from makinage_spark import graphs, materialize
 
 
 def _ranks(spark, edges, **kw):
@@ -146,3 +149,86 @@ def test_personalized_requires_drop_dangling(spark):
     seeds = spark.createDataFrame([("a",)], ["id"])
     with pytest.raises(ValueError, match="personalize"):
         graphs.pagerank(df, personalize=seeds, dangling="redistribute")
+
+
+# a directed graph with sources no edge reaches (n23..n39, src_only), a
+# dangling tail (t1) and duplicate-free rows; ew sizes to 4 partitions
+_MIXED = [(f"n{i}", f"n{(i * 7 + 3) % 23}") for i in range(40)] + [
+    ("n3", "t0"), ("t0", "t1"), ("src_only", "n2")
+]
+
+
+def _exchanges(plan):
+    """(shuffle, broadcast) exchanges of an executed physical plan, as
+    partitioning strings. Held frames are scanned in place and their own
+    plans ran before this one, so the walk stops at their scans."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _exchanges(plan.executedPlan())
+    if name.endswith("QueryStageExec"):
+        return _exchanges(plan.plan())
+    shuffles, broadcasts = [], []
+    if name == "ShuffleExchangeExec":
+        shuffles.append(plan.outputPartitioning().toString())
+    elif name == "BroadcastExchangeExec":
+        broadcasts.append(plan.outputPartitioning().toString())
+    children = plan.children()
+    for i in range(children.size()):
+        s, b = _exchanges(children.apply(i))
+        shuffles += s
+        broadcasts += b
+    return shuffles, broadcasts
+
+
+def _executed_exchanges(spark, iterations):
+    df = spark.createDataFrame(_MIXED, ["src", "dst"])
+    with materialize.scope():
+        out = graphs.pagerank(df, iterations=iterations)
+        out.collect()
+        return _exchanges(out._jdf.queryExecution().executedPlan())
+
+
+def test_pagerank_round_is_one_shuffle_without_broadcast(spark):
+    # At 4 shuffle partitions (= ew's sized count) a round is the dst
+    # aggregate's shuffle and nothing else: the rank join and the update join
+    # read the held ew and base in place, so the constant is 0.
+    for iterations in (1, 3):
+        shuffles, broadcasts = _executed_exchanges(spark, iterations)
+        assert broadcasts == [], broadcasts
+        assert len(shuffles) == iterations + 0, shuffles
+        assert all(s.startswith("hashpartitioning(dst#") for s in shuffles), shuffles
+    # At 7 shuffle partitions the |V|-row aggregate is re-exchanged to ew's
+    # 4 partitions each round; ew itself (hashed on src) never moves.
+    with conf_override(spark, "spark.sql.shuffle.partitions", "7"):
+        shuffles, broadcasts = _executed_exchanges(spark, 3)
+    assert broadcasts == [], broadcasts
+    kinds = sorted((s.split("#")[0], s.rsplit(", ", 1)[1]) for s in shuffles)
+    assert kinds == [("hashpartitioning(dst", "7)")] * 3 + [
+        ("hashpartitioning(id", "4)")
+    ] * 3, shuffles
+
+
+@pytest.mark.parametrize("path", ["drop", "redistribute", "personalize"])
+def test_rank_nanos_invariant_to_session_shuffle_partitions(spark, path):
+    # ew sizes to 4 partitions (floor); sessions at 3 and 7 shuffle
+    # partitions put the rank vector, the aggregate and ew on different
+    # counts, and every path must still return the 4-partition ranks
+    df = spark.createDataFrame(_MIXED, ["src", "dst"])
+    kw = {"iterations": 3}
+    if path == "redistribute":
+        kw["dangling"] = "redistribute"
+    if path == "personalize":
+        # "zz" is in no edge: it still counts towards |S|
+        kw["personalize"] = spark.createDataFrame(
+            [("n0",), ("n5",), ("t1",), ("zz",)], ["id"]
+        )
+
+    def ranks():
+        with materialize.scope():
+            return {r.id: r.rank_nanos for r in graphs.pagerank(df, **kw).collect()}
+
+    ref = ranks()
+    assert len(ref) == 43
+    for shuffle_partitions in ("3", "7"):
+        with conf_override(spark, "spark.sql.shuffle.partitions", shuffle_partitions):
+            assert ranks() == ref, shuffle_partitions

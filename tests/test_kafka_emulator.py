@@ -188,6 +188,16 @@ def test_json_codec_roundtrip_over_emulated_topic(spark, broker):
     assert sorted((r.id, r.name) for r in out.collect()) == [(1, "a"), (2, "b")]
 
 
+def test_pickle_codec_roundtrip_over_emulated_topic(spark, broker):
+    # encoder: pickle produces (the encoder factory takes no argument) and
+    # reads back as the decoded ``value`` column, the shim's repr text
+    df = spark.createDataFrame([("hello",), ("world",)], "value string")
+    emu.produce(spark, broker, "pk", df, encoding="pickle")
+    got = emu.emu_source(spark, broker, ["pk"], encoding="pickle")
+    assert "value" in got.columns and "pickled" not in got.columns
+    assert sorted(r.value for r in got.collect()) == ["'hello'", "'world'"]
+
+
 def test_streaming_checkpoint_replays_only_new_offsets(spark, broker, tmp_path):
     """The checkpointed-consumer contract behind start_from: last
     (makinage/operator.py:50-53): a second availableNow run against the same

@@ -22,7 +22,10 @@ all its attempts, the B/A ratio of the minima and the fingerprint.
 ``--profile`` adds one event-logged run per arm after the timed runs (so
 the event log cannot perturb the minima) and prints, per query and arm,
 ``perfbench.metrics.engine_metrics`` of each timed attempt: jobs, stages,
-tasks, shuffle bytes, spill, task skew, job union, driver gap.
+tasks, shuffle bytes, spill, task skew, job union, driver gap, and
+``spark.sql_executions``, the SQL executions started in the attempt (eager
+counts and persists each start one; the stage jobs of one adaptive
+execution do not).
 """
 
 from __future__ import annotations
@@ -50,6 +53,28 @@ PROFILE_KEYS = (
     "spark.shuffle_read_bytes", "spark.spill_bytes", "spark.task_skew",
     "spark.job_union_s", "spark.driver_gap_s", "spark.reconcile_err",
 )
+
+
+def profile_rows(lines: list[str], windows: dict[str, list[tuple[float, float]]]) -> dict[str, list[dict]]:
+    """Per query, one ``--profile`` row per attempt window: the
+    ``PROFILE_KEYS`` of the jobs inside it, and the count of SQL executions
+    started inside it."""
+    log = parse_event_log(lines)
+    starts = [
+        ev["time"] / 1000.0
+        for ev in (json.loads(line) for line in lines if "SQLExecutionStart" in line)
+        if ev.get("Event", "").endswith("SparkListenerSQLExecutionStart")
+    ]
+
+    def row(lo: float, hi: float) -> dict:
+        # job and execution times are whole milliseconds: one started in the
+        # attempt's first millisecond is stamped before ``lo``
+        metrics = engine_metrics(restrict(log, lo - 1e-3, hi), [(lo, hi)])
+        out = {k: round(v, 4) for k, v in metrics.items() if k in PROFILE_KEYS}
+        out["spark.sql_executions"] = sum(lo - 1e-3 <= t <= hi for t in starts)
+        return out
+
+    return {name: [row(lo, hi) for lo, hi in spans] for name, spans in windows.items()}
 
 
 def run_arm(root: str, confs: dict[str, str], names: list[str], event_log: str | None) -> dict:
@@ -107,15 +132,8 @@ def run_arm(root: str, confs: dict[str, str], names: list[str], event_log: str |
         for f in sorted(os.listdir(event_log)):
             with open(os.path.join(event_log, f)) as fh:
                 lines.extend(fh)
-        log = parse_event_log(lines)
-        for name in names:
-            # job times are whole milliseconds: a job submitted in the
-            # attempt's first millisecond is stamped before ``lo``
-            out[name]["profile"] = [
-                {k: round(v, 4) for k, v in engine_metrics(restrict(log, lo - 1e-3, hi), [(lo, hi)]).items()
-                 if k in PROFILE_KEYS}
-                for lo, hi in windows[name]
-            ]
+        for name, rows in profile_rows(lines, windows).items():
+            out[name]["profile"] = rows
     return out
 
 
