@@ -40,6 +40,11 @@ DEFAULT_CONFS = {
     # across driver/executors (the reference's timestamp_mapper extracts plain
     # values; makinage/operator.py:55-59).
     "spark.sql.session.timeZone": "UTC",
+    # Python workers fork from makinage_spark.pyworker, which stops each
+    # Python task from re-parsing the zipped pyspark's directory (16 times
+    # per task on CPython 3.11); the executors' Python must import
+    # makinage_spark, as every operator with Python code already requires.
+    "spark.python.daemon.module": "makinage_spark.pyworker",
 }
 
 
