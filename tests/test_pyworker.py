@@ -16,13 +16,6 @@ def _write_zip(path, modules):
             z.writestr(f"{name}.py", f"NAME = {name!r}\n")
 
 
-def _counting_reads(monkeypatch):
-    reads = []
-    read = zipimport._read_directory
-    monkeypatch.setattr(zipimport, "_read_directory", lambda path: reads.append(path) or read(path))
-    return reads
-
-
 @pytest.mark.skipif(sys.version_info >= (3, 12), reason="CPython 3.12+ reads zip directories lazily itself")
 def test_unchanged_archive_is_not_reread_and_a_rewritten_one_is(tmp_path, monkeypatch):
     from makinage_spark import pyworker
@@ -36,7 +29,9 @@ def test_unchanged_archive_is_not_reread_and_a_rewritten_one_is(tmp_path, monkey
 
         assert a.__loader__.archive == archive
         importlib.invalidate_caches()  # stamps every archive in the process
-        reads = _counting_reads(monkeypatch)
+        reads = []
+        read = zipimport._read_directory
+        monkeypatch.setattr(zipimport, "_read_directory", lambda path: reads.append(path) or read(path))
         importlib.invalidate_caches()
         assert reads == []
 

@@ -22,12 +22,11 @@ all its attempts, the B/A ratio of the minima and the fingerprint.
 ``--profile`` adds one event-logged run per arm after the timed runs (so
 the event log cannot perturb the minima) and prints, per query and arm,
 ``perfbench.metrics.engine_metrics`` of each timed attempt: jobs, stages,
-tasks, shuffle bytes, spill, task skew, job union, driver gap, executor
-run and CPU time (their gap is time a task spends outside the JVM, such as
-in its Python worker), and
-``spark.sql_executions``, the SQL executions started in the attempt (eager
-counts and persists each start one; the stage jobs of one adaptive
-execution do not).
+tasks, shuffle bytes, spill, task skew, job union, driver gap, executor run
+and CPU time (their gap is time a task spends outside the JVM, such as in
+its Python worker), and ``spark.sql_executions``, the SQL executions
+started in the attempt (eager counts and persists each start one; the
+stage jobs of one adaptive execution do not).
 """
 
 from __future__ import annotations
