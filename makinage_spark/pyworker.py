@@ -1,8 +1,11 @@
 """Spark's Python worker daemon, reading each zip directory once.
 
-``session.DEFAULT_CONFS`` names this module as ``spark.python.daemon.module``,
-so Spark starts ``python -m makinage_spark.pyworker pyspark.worker`` and
-``pyspark.daemon`` forks every Python worker from that process.
+In local mode ``session.get_spark`` names this module as
+``spark.python.daemon.module``, so Spark starts
+``python -m makinage_spark.pyworker pyspark.worker`` and ``pyspark.daemon``
+forks every Python worker from that process. Starting it imports the whole
+``makinage_spark`` package (pandas and pyarrow with it) once, in the daemon,
+before any worker forks.
 
 Every Python task calls ``importlib.invalidate_caches()``
 (``pyspark/worker_util.py:setup_spark_files``). Before CPython 3.12 that makes
@@ -52,8 +55,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    # run the copy imported under the package name, so the patched method
-    # names this module rather than ``__main__``
-    from makinage_spark.pyworker import main
-
     main()

@@ -40,12 +40,10 @@ DEFAULT_CONFS = {
     # across driver/executors (the reference's timestamp_mapper extracts plain
     # values; makinage/operator.py:55-59).
     "spark.sql.session.timeZone": "UTC",
-    # Python workers fork from makinage_spark.pyworker, which stops each
-    # Python task from re-parsing the zipped pyspark's directory (16 times
-    # per task on CPython 3.11); the executors' Python must import
-    # makinage_spark, as every operator with Python code already requires.
-    "spark.python.daemon.module": "makinage_spark.pyworker",
 }
+
+#: The directory holding the ``makinage_spark`` package.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -76,6 +74,14 @@ def get_spark(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
         )
+        # Python workers fork from makinage_spark.pyworker, which stops each
+        # Python task from re-parsing the zipped pyspark's directory (16 times
+        # per task on CPython 3.11). Its daemon imports the package before
+        # any task, so the workers' path names the package root; Spark merges
+        # it with the driver's PYTHONPATH. Cluster masters keep pyspark.daemon,
+        # where a package shipped only as a --py-files zip still serves.
+        confs.setdefault("spark.python.daemon.module", "makinage_spark.pyworker")
+        confs.setdefault("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)

@@ -2,7 +2,10 @@
 directory is re-read only when the archive changed on disk."""
 
 import importlib
+import os
+import subprocess
 import sys
+import textwrap
 import zipfile
 import zipimport
 
@@ -64,19 +67,57 @@ def test_python_workers_fork_from_the_daemon_module(spark):
         for _ in batches:
             pass
         yield pa.RecordBatch.from_pylist([{
-            "method_module": zipimport.zipimporter.invalidate_caches.__module__,
+            "method_file": zipimport.zipimporter.invalidate_caches.__code__.co_filename,
             "rereads": len(reads),
             "parent": " ".join(parent),
         }])
 
     rows = (
         spark.range(0, 400, numPartitions=4)
-        .mapInArrow(probe, "method_module string, rereads long, parent string")
+        .mapInArrow(probe, "method_file string, rereads long, parent string")
         .collect()
     )
     assert len(rows) == 4
     for row in rows:
         if sys.version_info < (3, 12):
-            assert row.method_module == "makinage_spark.pyworker"
+            assert row.method_file.endswith(os.path.join("makinage_spark", "pyworker.py"))
         assert row.rereads == 0
         assert "-m makinage_spark.pyworker " in row.parent
+
+
+def test_a_driver_that_finds_the_package_only_on_sys_path_runs_python_udfs(tmp_path):
+    # another working directory and no PYTHONPATH naming the package: the
+    # daemon still imports makinage_spark through the session's
+    # spark.executorEnv.PYTHONPATH
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = tmp_path / "outside.py"
+    script.write_text(textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {root!r})
+        import pandas as pd
+        from pyspark.sql import functions as F
+        import makinage_spark as mk
+
+        spark = mk.get_spark(master="local[1]", shuffle_partitions=1, extra_confs={{
+            "spark.ui.enabled": "false",
+            "spark.driver.memory": "1g",
+            "spark.sql.warehouse.dir": {str(tmp_path / "wh")!r},
+        }})
+
+        @F.pandas_udf("long")
+        def plus_one(v: pd.Series) -> pd.Series:
+            return v + 1
+
+        print("SUM", spark.range(0, 10, numPartitions=2).select(plus_one("id").alias("v")).agg(F.sum("v")).first()[0])
+        spark.stop()
+    """))
+    path = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep)
+            if p and not os.path.isdir(os.path.join(p, "makinage_spark"))]
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    if path:
+        env["PYTHONPATH"] = os.pathsep.join(path)
+    proc = subprocess.run(
+        [sys.executable, str(script)], cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "SUM 55" in proc.stdout.splitlines()

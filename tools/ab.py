@@ -141,12 +141,18 @@ def run_arm(root: str, confs: dict[str, str], names: list[str], event_log: str |
 
 def spawn(root: str, confs: dict[str, str], names: list[str], event_log: str | None = None) -> dict:
     """:func:`run_arm` in a fresh Python process whose Spark workers import
-    the code under ``root``."""
+    the code under ``root``. The process runs in ``root``: a worker daemon
+    started with ``python -m`` puts its working directory first on
+    ``sys.path``, ahead of ``PYTHONPATH``."""
     spec = json.dumps({"root": root, "confs": confs, "event_log": event_log})
-    env = {**os.environ, "PYTHONPATH": os.pathsep.join(filter(None, [root, os.environ.get("PYTHONPATH")]))}
+    env = {
+        **os.environ,
+        "PYTHONPATH": os.pathsep.join(filter(None, [root, os.environ.get("PYTHONPATH")])),
+        "SPARK_GRAFT_SF_DIR": os.path.abspath(os.environ["SPARK_GRAFT_SF_DIR"]),
+    }
     proc = subprocess.run(
         [sys.executable, os.path.abspath(__file__), "--arm", spec, *names],
-        stdout=subprocess.PIPE, text=True, env=env, check=True,
+        stdout=subprocess.PIPE, text=True, env=env, cwd=root, check=True,
     )
     return json.loads(proc.stdout.strip().splitlines()[-1])
 
