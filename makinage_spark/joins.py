@@ -112,32 +112,12 @@ def asof_join(
 
     tol = F.expr(f"INTERVAL {tolerance}") if tolerance is not None else None
 
-    if direction == "backward":
-        filled = unioned.withColumns(
-            {dst: F.last(F.when(F.col("__side") == 0, F.col(dst)), ignorenulls=True).over(w_back)
-             for dst in renames.values()}
-            | {"__match_ts": F.last(
-                F.when(F.col("__side") == 0, F.col("__ts")), ignorenulls=True).over(w_back)}
-        )
-        out = filled.filter(F.col("__side") == 1)
+    if direction != "nearest":
+        w = w_back if direction == "backward" else w_fwd
+        out = unioned.withColumns(_fills(w, "")).filter(F.col("__side") == 1)
         if tol is not None:
-            too_old = F.col("__match_ts") < F.col("__ts") - tol
-            out = out.withColumns(
-                {dst: F.when(too_old, F.lit(None)).otherwise(F.col(dst))
-                 for dst in renames.values()}
-            )
-        return out.drop("__ts", "__side", "__match_ts")
-
-    if direction == "forward":
-        filled = unioned.withColumns(
-            {dst: F.last(F.when(F.col("__side") == 0, F.col(dst)), ignorenulls=True).over(w_fwd)
-             for dst in renames.values()}
-            | {"__match_ts": F.last(
-                F.when(F.col("__side") == 0, F.col("__ts")), ignorenulls=True).over(w_fwd)}
-        )
-        out = filled.filter(F.col("__side") == 1)
-        if tol is not None:
-            too_far = F.col("__match_ts") > F.col("__ts") + tol
+            m, ts = F.col("__match_ts"), F.col("__ts")
+            too_far = m < ts - tol if direction == "backward" else m > ts + tol
             out = out.withColumns(
                 {dst: F.when(too_far, F.lit(None)).otherwise(F.col(dst))
                  for dst in renames.values()}

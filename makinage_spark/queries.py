@@ -385,6 +385,29 @@ def q_sessionize(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
+def _asof_click_enrich(spark, sf_dir, **asof_kw):
+    """Each event enriched with a click value of the same user by
+    ``joins.asof_join`` over the per-(user_id, ts) max-click table;
+    ``asof_kw`` sets the direction and tolerance."""
+    events = load_table(spark, sf_dir, "events")
+    clicks = (
+        events.filter("event_type = 'click'")
+        .groupBy("user_id", "ts")
+        .agg(F.max("value").alias("click_value"))
+        .withColumnRenamed("ts", "cts")
+    )
+    out = joins.asof_join(
+        events.select("event_id", "user_id", "ts"),
+        clicks,
+        on=["user_id"],
+        left_ts="ts",
+        right_ts="cts",
+        right_cols=["click_value"],
+        **asof_kw,
+    )
+    return out.select("event_id", "click_value")
+
+
 @register(
     "asof_enrich",
     """
@@ -402,22 +425,7 @@ def q_sessionize(spark, sf_dir):
 def q_asof(spark, sf_dir):
     """with_latest_from as an event-time as-of join (makinage/serve/serve.py:140-141):
     each event enriched with the user's most recent click value."""
-    events = load_table(spark, sf_dir, "events")
-    clicks = (
-        events.filter("event_type = 'click'")
-        .groupBy("user_id", "ts")
-        .agg(F.max("value").alias("click_value"))
-        .withColumnRenamed("ts", "cts")
-    )
-    out = joins.asof_join(
-        events.select("event_id", "user_id", "ts"),
-        clicks,
-        on=["user_id"],
-        left_ts="ts",
-        right_ts="cts",
-        right_cols=["click_value"],
-    )
-    return out.select("event_id", "click_value")
+    return _asof_click_enrich(spark, sf_dir)
 
 
 @register(
@@ -439,23 +447,7 @@ def q_asof_forward(spark, sf_dir):
     enriched with the user's NEXT click value at-or-after it — the lookahead
     enrich (time-to-next-action features). Same single-shuffle union+window
     plan as backward, descending sort."""
-    events = load_table(spark, sf_dir, "events")
-    clicks = (
-        events.filter("event_type = 'click'")
-        .groupBy("user_id", "ts")
-        .agg(F.max("value").alias("click_value"))
-        .withColumnRenamed("ts", "cts")
-    )
-    out = joins.asof_join(
-        events.select("event_id", "user_id", "ts"),
-        clicks,
-        on=["user_id"],
-        left_ts="ts",
-        right_ts="cts",
-        right_cols=["click_value"],
-        direction="forward",
-    )
-    return out.select("event_id", "click_value")
+    return _asof_click_enrich(spark, sf_dir, direction="forward")
 
 
 @register(
@@ -489,23 +481,7 @@ def q_asof_nearest(spark, sf_dir):
     shuffled union — one extra per-key sort, zero extra exchanges — then a
     per-row microsecond-distance choice. The oracle derives the identical
     answer from DuckDB's two directional ASOF joins."""
-    events = load_table(spark, sf_dir, "events")
-    clicks = (
-        events.filter("event_type = 'click'")
-        .groupBy("user_id", "ts")
-        .agg(F.max("value").alias("click_value"))
-        .withColumnRenamed("ts", "cts")
-    )
-    out = joins.asof_join(
-        events.select("event_id", "user_id", "ts"),
-        clicks,
-        on=["user_id"],
-        left_ts="ts",
-        right_ts="cts",
-        right_cols=["click_value"],
-        direction="nearest",
-    )
-    return out.select("event_id", "click_value")
+    return _asof_click_enrich(spark, sf_dir, direction="nearest")
 
 
 @register(
@@ -1492,7 +1468,8 @@ def q_containment_pairs(spark, sf_dir):
     # on unfiltered rows and sequence(1, size-4) turns DESCENDING for short
     # docs → slice(toks, 0, ..) → ANSI INVALID_PARAMETER_VALUE. CASE
     # branches are guaranteed lazy, making the expression safe wherever the
-    # optimizer replicates it (found by tests/test_degenerate_inputs.py).
+    # optimizer replicates it (found by the degenerate-input fixture of
+    # tests/test_query_registry.py).
     grams = toks.select(
         "doc_id",
         F.expr(
@@ -2172,23 +2149,7 @@ def q_simhash_pairs(spark, sf_dir):
 def q_asof_tolerance(spark, sf_dir):
     """As-of join with bounded lookback — the reference's merge_lookup_depth
     restated in event time (makinage/operator.py:61-63)."""
-    events = load_table(spark, sf_dir, "events")
-    clicks = (
-        events.filter("event_type = 'click'")
-        .groupBy("user_id", "ts")
-        .agg(F.max("value").alias("click_value"))
-        .withColumnRenamed("ts", "cts")
-    )
-    out = joins.asof_join(
-        events.select("event_id", "user_id", "ts"),
-        clicks,
-        on=["user_id"],
-        left_ts="ts",
-        right_ts="cts",
-        right_cols=["click_value"],
-        tolerance="1 hour",
-    )
-    return out.select("event_id", "click_value")
+    return _asof_click_enrich(spark, sf_dir, tolerance="1 hour")
 
 
 # ---------------------------------------------------------------------------
@@ -9953,20 +9914,20 @@ def _kmeans_oracle_sql(k: int) -> str:
 def q_kmeans_table_assign(spark, sf_dir):
     """The LARGE-K k-means assignment path (vectors._kmeans_lloyd_table),
     driver-hashed against the same unrolled-Lloyd oracle shape as
-    kmeans_lloyd_clusters but at k=64 and with assign="table" forced:
-    centroids live in a DataFrame (never as plan literals), assignment is
-    map-only — the centroid table collapses to one broadcast array row and
-    each vector folds its argmin in-row (array_min over (dist, cluster)
-    structs = the min_by tie-break; r12 — zero shuffles or sorts in the
-    assignment pass), and the centroid update stays distributed with NO
-    k·d driver collect. This is the path the semantic-dedup pipeline's adaptive
-    k = n/250 policy needs at 100 TB (millions of cells): a literal plan
+    kmeans_lloyd_clusters but at k=64, which takes the table path
+    (k >= vectors.KMEANS_TABLE_K): centroids live in a DataFrame (never as
+    plan literals), assignment is map-only — the centroid table collapses
+    to one broadcast array row and each vector folds its argmin in-row
+    (array_min over (dist, cluster) structs = the min_by tie-break; r12 —
+    zero shuffles or sorts in the assignment pass), and the centroid update
+    stays distributed with NO k·d driver collect. This is the path the
+    semantic-dedup pipeline's adaptive k = n/250 policy needs at 100 TB (millions of cells): a literal plan
     hits codegen/plan-size walls at k in the low thousands. Hash-equality
     with the relational oracle here proves the table path's decimal
     arithmetic, seed re-keying, and tie-break are bit-identical to the
     literal path's."""
     emb = load_wide(spark, sf_dir, "embeddings")
-    return vectors.kmeans_lloyd(emb, k=64, iters=2, assign="table")
+    return vectors.kmeans_lloyd(emb, k=64, iters=2)
 
 
 @register(
@@ -9999,9 +9960,7 @@ def q_kmeans_table_assign_prod(spark, sf_dir):
     map-only argmin) — on a duplicate-id fixture the one_cluster_per_vec
     audit column flags the violation instead of silently passing."""
     emb = load_wide(spark, sf_dir, "embeddings")
-    assigned = vectors.kmeans_lloyd(
-        emb, k=64, iters=2, assign="table", exact=False
-    )
+    assigned = vectors.kmeans_lloyd(emb, k=64, iters=2, exact=False)
     return assigned.agg(
         F.lit(64).cast("bigint").alias("k"),
         F.count(F.lit(1)).alias("n_assigned"),
@@ -10128,9 +10087,9 @@ def q_semantic_dedup_pipeline(spark, sf_dir):
     (k-means rounds, cell blocking, cosine verify, drop policy, anti-join)
     hash-matches the unrolled oracle exactly.
 
-    Scale shape: assignment is broadcast-literal map-only below k=512 and
-    switches automatically (kmeans_lloyd assign="auto") to the centroid-
-    TABLE path above it — crossJoin + min_by argmin with the centroid
+    Scale shape: assignment is broadcast-literal map-only below
+    vectors.KMEANS_TABLE_K (32) and switches automatically to the centroid-
+    TABLE path from it on — crossJoin + min_by argmin with the centroid
     update staying distributed — so the adaptive-k policy below survives
     its own growth (k = n/250 reaches millions of cells at 1B vectors;
     a literal plan dies at thousands of centroid structs and a per-round

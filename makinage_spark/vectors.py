@@ -343,6 +343,15 @@ def _kmeans_dist(v: Column, c: Column, exact: bool) -> Column:
     return F.aggregate(terms, zero, lambda acc, t: (acc + t).cast("decimal(30,12)"))
 
 
+#: k from which :func:`kmeans_lloyd` assigns through the centroid table
+#: instead of plan literals. MEASURED, not guessed (SCALING.md § Large-k
+#: assignment crossover, d=64, n=50k, production arithmetic): literal
+#: codegen + the k-way least() chain grow linearly in k — table wins 5.3× at
+#: k=32, 21× at k=64 — while below ~32 both are sub-10s. The crossover
+#: shifts with d (smaller vectors → cheaper literal folds).
+KMEANS_TABLE_K = 32
+
+
 def _kmeans_lloyd_table(
     df: DataFrame,
     k: int,
@@ -593,8 +602,6 @@ def kmeans_lloyd(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     exact: bool = True,
-    assign: str = "auto",
-    table_threshold: int = 32,
 ) -> DataFrame:
     """Full-corpus Lloyd's k-means; returns ``(id_col, cluster)``.
 
@@ -631,31 +638,22 @@ def kmeans_lloyd(
     seeds, same tie-break; on separated data the clusterings coincide
     (tested).
 
-    ``assign`` selects the assignment strategy: ``"literal"`` (the map-only
-    broadcast-by-value pass above — best only at small k, where the
-    crossJoin exchange isn't worth it), ``"table"`` (centroid DataFrame
-    collapsed to one broadcast array row + in-row argmin, see
-    :func:`_kmeans_lloyd_table` —
-    REQUIRED for large k: a literal plan with thousands of centroid structs
-    hits codegen/plan-size walls, and the literal path's per-round k·d
-    driver collect stops scaling long before SemDeDup-style adaptive k
-    reaches millions of cells), or ``"auto"`` (table iff
-    ``k >= table_threshold``). The default threshold 32 is MEASURED, not
-    guessed (SCALING.md r6 `kmeansk`, d=64, n=50k, production arithmetic):
-    literal codegen + the k-way least() chain grow linearly in k — table
-    wins 5.3× at k=32, 21× at k=64, 23× at k=128, 21.5× at k=200 — while
-    below ~32 both are sub-10s and the literal plan avoids a shuffle. The
-    crossover shifts with d (smaller vectors → cheaper literal folds);
-    override per corpus. Both paths share seeds, distance arithmetic, and
-    tie-break, so they produce identical assignments for identical inputs
-    (tested) — the oracle for one verifies the other.
+    The assignment strategy follows k: below :data:`KMEANS_TABLE_K` the
+    literal map-only broadcast-by-value pass above (the literal plan avoids
+    a shuffle), from it on the centroid-table path
+    (:func:`_kmeans_lloyd_table`: centroid DataFrame collapsed to one
+    broadcast array row + in-row argmin) — REQUIRED for large k: a literal
+    plan with thousands of centroid structs hits codegen/plan-size walls,
+    and the literal path's per-round k·d driver collect stops scaling long
+    before SemDeDup-style adaptive k reaches millions of cells. Both paths
+    share seeds, distance arithmetic, and tie-break, so they produce
+    identical assignments for identical inputs (tested) — the oracle for
+    one verifies the other.
     """
-    if assign not in ("auto", "literal", "table"):
-        raise ValueError(f"assign must be auto|literal|table, got {assign!r}")
     # NULL embeddings have no cluster (and a None seed would crash the
     # float() unpack) — drop them up front, same contract as ivf_centroids
     df = df.filter(F.col(vec_col).isNotNull())
-    if assign == "table" or (assign == "auto" and k >= table_threshold):
+    if k >= KMEANS_TABLE_K:
         return _kmeans_lloyd_table(df, k, iters, vec_col, id_col, exact)
     seeds = (
         df.select(id_col, F.col(vec_col).cast("array<double>").alias("v"))

@@ -1,9 +1,11 @@
-"""Registry-wide smoke gate: every ``queries()`` entry must run at the smoke
-scale (sf0.001) and produce a stable, sane result.
+"""Registry-wide smoke gate: every ``queries()`` entry must run on the
+degenerate smoke fixture (sf0.001 plus hostile rows, see ``degenerate_dir``)
+and produce a stable, sane result without holding anything.
 
 This is the local twin of the driver's t1 smoke + a schema-stability check:
-each query returns a non-empty schema, runs end-to-end, and (run twice) gives
-the same row count — catching nondeterminism before the oracle gate does.
+each query returns a non-empty schema, runs end-to-end, (run twice) gives
+the same row count — catching nondeterminism before the oracle gate does —
+and leaves no persistent RDD behind once its ``scope()`` exits.
 The value-level oracle comparison lives in tools/check_correctness.py (t2).
 """
 
@@ -11,9 +13,11 @@ import os
 import re
 
 import pytest
+from pyspark.sql import functions as F
 
 from makinage_spark.materialize import scope
 from makinage_spark.queries import ORACLES, QUERIES
+from makinage_spark.sources import load_table
 
 SF_DIR = os.environ.get("SMOKE_SF_DIR", "/root/testdata/sf0.001")
 
@@ -29,21 +33,85 @@ SLOW_STREAMING = {
 }
 SKIP_IN_SMOKE = {"stream_dedup_keys", "stream_scan_running"}
 
+DEGENERATE_DOCS = [
+    (900001, None),
+    (900002, ""),
+    (900003, "   "),
+    (900004, "solo"),
+    (900005, "two tokens"),
+    (900006, "héllo wörld üñïcødé tökèns"),
+    (900007, "spam " * 50),
+    (900008, "\n\t\r"),
+]
+
+
+@pytest.fixture(scope="module")
+def degenerate_dir(spark, tmp_path_factory):
+    """The smoke corpus plus the hostile rows a 100 TB corpus WILL contain:
+    null text, empty text, whitespace-only, single-token and two-token docs,
+    unicode-only docs, pathological repetition, and null and all-zero
+    embeddings.
+
+    The r4 advisor found exactly this bug class (bigram ANSI
+    INVALID_ARRAY_INDEX on 0/1-token docs — fixtures just happened to
+    contain none). Running the whole registry on this fixture makes the
+    class structurally impossible to reintroduce: any future array-index /
+    division / aggregation edge crashes the smoke gate first."""
+    d = str(tmp_path_factory.mktemp("degenerate_sf"))
+    for t in ("region", "nation", "customer", "supplier", "part",
+              "orders", "lineitem", "events"):
+        load_table(spark, SF_DIR, t).write.parquet(f"{d}/{t}.parquet")
+
+    docs = load_table(spark, SF_DIR, "documents")
+    extra = spark.createDataFrame(DEGENERATE_DOCS, "doc_id long, text string")
+    base_cols = docs.columns
+    for c in base_cols:
+        if c not in ("doc_id", "text"):
+            extra = extra.withColumn(
+                c, F.lit("synthetic") if c == "source" else F.lit(None)
+            )
+    docs.unionByName(extra.select(base_cols)).write.parquet(
+        f"{d}/documents.parquet"
+    )
+    emb = load_table(spark, SF_DIR, "embeddings")
+    dim = len(emb.filter("vec_id = 0").first()["embedding"])
+    eextra = spark.createDataFrame(
+        [(900001, None), (900002, [0.0] * dim)],
+        "vec_id long, embedding array<float>",
+    )
+    for f in emb.schema.fields:
+        if f.name not in ("vec_id", "embedding"):
+            eextra = eextra.withColumn(
+                f.name, F.lit(None).cast(f.dataType)
+            )
+    emb.unionByName(eextra.select(emb.columns)).write.parquet(
+        f"{d}/embeddings.parquet"
+    )
+    return d
+
+
+def _held(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
 
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - SKIP_IN_SMOKE))
-def test_query_runs_at_smoke_scale(spark, name):
+def test_query_runs_at_smoke_scale(spark, degenerate_dir, name):
     # each evaluation runs inside its own scope: every frame a query holds
     # goes through release(), and a query that reads a checkpoint after
-    # releasing it fails (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)
+    # releasing it fails (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND). Leaks are
+    # checked by the SET of persistent RDD ids: the ContextCleaner may drop
+    # unrelated RDDs at any time, but never adds one.
+    before = _held(spark)
     with scope():
-        df = QUERIES[name](spark, SF_DIR)
+        df = QUERIES[name](spark, degenerate_dir)
         assert df.schema.fields, f"{name}: empty schema"
         n = df.count()
+    assert not _held(spark) - before, f"{name}: scope left RDDs persisted"
     assert n >= 0
     # deterministic: same count on re-execution (fresh plan)
     if name not in SLOW_STREAMING:
         with scope():
-            n2 = QUERIES[name](spark, SF_DIR).count()
+            n2 = QUERIES[name](spark, degenerate_dir).count()
         assert n2 == n, f"{name}: nondeterministic row count"
 
 
@@ -76,8 +144,6 @@ def test_bigram_logprob_short_docs_do_not_crash(spark, tmp_path):
     """ADVICE r4 (high): docs with 0/1 tokens must not trip Spark 4 ANSI
     INVALID_ARRAY_INDEX in the bigram expansion — they simply contribute no
     bigrams (matching the oracle's empty generate_series)."""
-    import pyspark.sql.functions as F
-
     d = tmp_path / "sfmini"
     d.mkdir()
     docs = spark.createDataFrame(
@@ -94,8 +160,6 @@ def test_cogroup_lag_user_without_clicks_emits_nothing(spark, tmp_path):
     """cogroup alignment edge: a user with purchases but no clicks must
     contribute zero rows (no null lag), and a click tied on ts with the
     purchase counts only if strictly earlier in (ts, event_id) order."""
-    import pyspark.sql.functions as F
-
     d = tmp_path / "sfmini"
     d.mkdir()
     rows = [

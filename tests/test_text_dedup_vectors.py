@@ -1227,9 +1227,9 @@ def test_kmeans_table_path_matches_literal(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     for exact in (True, False):
         lit = {r.vec_id: r.cluster for r in vectors.kmeans_lloyd(
-            df, k=5, iters=3, exact=exact, assign="literal").collect()}
-        tbl = {r.vec_id: r.cluster for r in vectors.kmeans_lloyd(
-            df, k=5, iters=3, exact=exact, assign="table").collect()}
+            df, k=5, iters=3, exact=exact).collect()}
+        tbl = {r.vec_id: r.cluster for r in vectors._kmeans_lloyd_table(
+            df, 5, 3, "embedding", "vec_id", exact).collect()}
         assert lit == tbl
 
 
@@ -1250,8 +1250,8 @@ def test_kmeans_table_path_argmin_tie_breaks_low_cluster(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     for exact in (True, False):
-        got = {r.vec_id: r.cluster for r in vectors.kmeans_lloyd(
-            df, k=2, iters=1, exact=exact, assign="table").collect()}
+        got = {r.vec_id: r.cluster for r in vectors._kmeans_lloyd_table(
+            df, 2, 1, "embedding", "vec_id", exact).collect()}
         assert got == {0: 0, 1: 1, 2: 0, 3: 0, 4: 0}
 
 
@@ -1265,8 +1265,8 @@ def test_kmeans_two_level_exhaustive_equals_flat(spark):
     with materialize.scope():
         cents = materialize.materialize(
             vectors.kmeans_centroid_table(df, k=9, iters=2, exact=False))
-        flat = {r.vec_id: r.cluster for r in vectors.kmeans_lloyd(
-            df, k=9, iters=2, exact=False, assign="table").collect()}
+        flat = {r.vec_id: r.cluster for r in vectors._kmeans_lloyd_table(
+            df, 9, 2, "embedding", "vec_id", False).collect()}
         exh = {r.vec_id: r.cluster for r in vectors.kmeans_assign_two_level(
             df, cents, probe_cells=10**6).collect()}
         assert flat == exh
@@ -1287,8 +1287,8 @@ def test_kmeans_two_level_separated_clusters_pruned_probe(spark):
     with materialize.scope():
         cents = materialize.materialize(
             vectors.kmeans_centroid_table(df, k=4, iters=2, exact=False))
-        flat = {r.vec_id: r.cluster for r in vectors.kmeans_lloyd(
-            df, k=4, iters=2, exact=False, assign="table").collect()}
+        flat = {r.vec_id: r.cluster for r in vectors._kmeans_lloyd_table(
+            df, 4, 2, "embedding", "vec_id", False).collect()}
         two = {r.vec_id: r.cluster for r in vectors.kmeans_assign_two_level(
             df, cents, probe_cells=1).collect()}
         assert two == flat
@@ -1342,11 +1342,11 @@ def test_kmeans_table_path_planted_duplicates_k1000(spark):
         rows.append((10_000 + j, noisy))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     got = {r.vec_id: r.cluster for r in vectors.kmeans_lloyd(
-        df, k=1000, iters=2, exact=False, assign="auto").collect()}
+        df, k=1000, iters=2, exact=False).collect()}
     assert len(got) == 1100
     for j in range(100):
         assert got[10_000 + j] == got[j], f"twin {j} split from its base"
-    # auto at k=1000 must have taken the table path: the assignment for a
+    # k=1000 must have taken the table path: the assignment for a
     # fresh seed equals its own id's seed-order cluster (seeds are the 1000
     # lowest ids, re-keyed 0..999 in id order)
     assert got[0] == 0 and got[999] == 999
