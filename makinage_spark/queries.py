@@ -10089,8 +10089,8 @@ def q_semantic_dedup_pipeline(spark, sf_dir):
 
     Scale shape: assignment is broadcast-literal map-only below
     vectors.KMEANS_TABLE_K (32) and switches automatically to the centroid-
-    TABLE path from it on — crossJoin + min_by argmin with the centroid
-    update staying distributed — so the adaptive-k policy below survives
+    TABLE path from it on — one broadcast centroid row + in-row argmin,
+    with the centroid update staying distributed — so the adaptive-k policy below survives
     its own growth (k = n/250 reaches millions of cells at 1B vectors;
     a literal plan dies at thousands of centroid structs and a per-round
     k·d driver collect dies long before that). The update shuffles k·d

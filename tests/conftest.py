@@ -23,6 +23,12 @@ def broadcast_disabled(spark):
     return conf_override(spark, "spark.sql.autoBroadcastJoinThreshold", "-1")
 
 
+def held_rdds(spark) -> set:
+    """Ids of the RDDs the session holds persisted (compare sets, never
+    counts: the ContextCleaner drops unrelated RDDs at any time)."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(

@@ -11,25 +11,22 @@ import threading
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import held_rdds
 from makinage_spark.materialize import materialize, release, scope
 from makinage_spark.queries import QUERIES
 
 SF_DIR = os.environ.get("SMOKE_SF_DIR", "/root/testdata/sf0.001")
 
 
-def _held(spark) -> set:
-    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
-
-
 def test_release_frees_a_local_checkpoint(spark):
-    before = _held(spark)
+    before = held_rdds(spark)
     df = materialize(spark.range(100), mode="local")
-    assert _held(spark) - before
+    assert held_rdds(spark) - before
     derived = df.select((F.col("id") * 2).alias("x"))
     df.unpersist()  # the DataFrame API alone cannot reach checkpoint blocks
-    assert _held(spark) - before
+    assert held_rdds(spark) - before
     release(df)
-    assert not _held(spark) - before
+    assert not held_rdds(spark) - before
     release(df)  # idempotent
     with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
         derived.count()
@@ -45,7 +42,7 @@ def test_release_deletes_reliable_checkpoint_files(spark, tmp_path):
 
 
 def test_scope_releases_on_exit_and_nests(spark):
-    before = _held(spark)
+    before = held_rdds(spark)
     with scope():
         outer = materialize(spark.range(50), mode="local")
         with scope():
@@ -55,13 +52,13 @@ def test_scope_releases_on_exit_and_nests(spark):
         assert outer.count() == 50
         with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
             inner.count()
-    assert not _held(spark) - before
+    assert not held_rdds(spark) - before
 
 
 def test_scope_is_not_shared_across_threads(spark):
     """A frame materialized on another thread (a foreachBatch callback)
     never joins the calling thread's scope."""
-    before = _held(spark)
+    before = held_rdds(spark)
     box = {}
     with scope():
         t = threading.Thread(
@@ -71,7 +68,7 @@ def test_scope_is_not_shared_across_threads(spark):
         t.join()
     assert box["df"].count() == 70
     release(box["df"])
-    assert not _held(spark) - before
+    assert not held_rdds(spark) - before
 
 
 def test_bad_arguments_are_rejected(spark):
@@ -91,11 +88,11 @@ def test_connected_components_releases_superseded_rounds(spark):
     pairs = spark.range(63).select(
         F.col("id").alias("a"), (F.col("id") + 1).alias("b")
     )
-    before = _held(spark)
+    before = held_rdds(spark)
     stats: dict = {}
     out = connected_components(pairs, stats=stats)
     assert stats["rounds"] >= 5 and stats["converged"]
-    assert len(_held(spark) - before) <= 2
+    assert len(held_rdds(spark) - before) <= 2
     assert out.select("cluster_id").distinct().collect()[0][0] == 0
 
 
@@ -108,9 +105,9 @@ def test_repeated_queries_in_a_scope_hold_nothing(spark, name):
     persisted or checkpointed is gone, and the result is unchanged."""
     rows = None
     for _ in range(3):
-        before = _held(spark)
+        before = held_rdds(spark)
         with scope():
             got = sorted(QUERIES[name](spark, SF_DIR).collect())
-        assert not _held(spark) - before, name
+        assert not held_rdds(spark) - before, name
         assert rows is None or got == rows
         rows = got

@@ -15,6 +15,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import held_rdds
 from makinage_spark.materialize import scope
 from makinage_spark.queries import ORACLES, QUERIES
 from makinage_spark.sources import load_table
@@ -90,23 +91,18 @@ def degenerate_dir(spark, tmp_path_factory):
     return d
 
 
-def _held(spark) -> set:
-    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
-
-
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - SKIP_IN_SMOKE))
 def test_query_runs_at_smoke_scale(spark, degenerate_dir, name):
     # each evaluation runs inside its own scope: every frame a query holds
     # goes through release(), and a query that reads a checkpoint after
-    # releasing it fails (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND). Leaks are
-    # checked by the SET of persistent RDD ids: the ContextCleaner may drop
-    # unrelated RDDs at any time, but never adds one.
-    before = _held(spark)
+    # releasing it fails (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND); after the
+    # scope exits, no persistent RDD id the query added may remain
+    before = held_rdds(spark)
     with scope():
         df = QUERIES[name](spark, degenerate_dir)
         assert df.schema.fields, f"{name}: empty schema"
         n = df.count()
-    assert not _held(spark) - before, f"{name}: scope left RDDs persisted"
+    assert not held_rdds(spark) - before, f"{name}: scope left RDDs persisted"
     assert n >= 0
     # deterministic: same count on re-execution (fresh plan)
     if name not in SLOW_STREAMING:
